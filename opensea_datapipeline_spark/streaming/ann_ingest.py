@@ -27,11 +27,12 @@ All four persisted kinds run the same loop (r14, VERDICT r13 #5):
 
 Store layout under ``state_dir``::
 
-    index_v{K}/   the persisted index (ann_index layout per kind) —
-                  appends mutate the CURRENT version in place
-                  (idempotent: the append anti-joins existing ids);
-                  REBUILDS publish a new version atomically
-    meta.json     {last_batch_id, version, rebuilds}
+    index_v{K}/      the persisted index (ann_index layout per kind) —
+                     appends mutate the CURRENT version in place
+                     (idempotent: the append anti-joins existing ids);
+                     REBUILDS publish a new version atomically
+    _gold_meta.json  {last_batch_id, version, rebuilds}, written
+                     through ``lifecycle.VersionedState``
 
 Crash-window discipline (the corpus_dedup argument, re-applied):
 
@@ -79,13 +80,12 @@ from ..operators.ann_index import (
     write_lsh_index,
     write_pq_index,
 )
-from ..sources.readers import ensure_reader_confs
-from .gold import _read_meta, _write_meta
 from .lifecycle import (
+    VersionedState,
     publish_versioned_dir,
     require_non_null_ids,
+    run_available_now,
     sweep_orphan_versions,
-    writer_lock,
 )
 
 _APPENDERS = {
@@ -153,13 +153,7 @@ def run_streaming_ann_ingest(
         raise ValueError(
             f"kind must be one of {sorted(_APPENDERS)}, got {kind!r}"
         )
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(embeddings_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(embeddings_dir)
-    )
+    state = VersionedState(state_dir)
 
     def build(df: DataFrame):
         if kind == "lsh":
@@ -182,8 +176,7 @@ def run_streaming_ann_ingest(
         import time
 
         t0 = time.time()
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(state_dir)
+        meta = state.read_meta()
         if batch_id <= meta.get("last_batch_id", -1):
             return  # replayed batch — already ingested
         ss = batch_df.sparkSession
@@ -205,7 +198,7 @@ def run_streaming_ann_ingest(
                 # the bootstrap to the first batch with usable vectors
                 # instead of killing the stream on MLlib's opaque
                 # empty-summarizer error
-                _write_meta(state_dir, {**meta, "last_batch_id": batch_id})
+                state.write_meta({**meta, "last_batch_id": batch_id})
                 if on_batch is not None:
                     on_batch(batch_id, time.time() - t0, False)
                 return
@@ -244,7 +237,7 @@ def run_streaming_ann_ingest(
                     "rebuilds": meta.get("rebuilds", 0) + 1,
                 }
                 rebuilt = True
-        _write_meta(state_dir, {**meta, "last_batch_id": batch_id})
+        state.write_meta({**meta, "last_batch_id": batch_id})
         if old_version_dir is not None:
             # superseded version removed only AFTER the meta commit: a
             # crash before this line leaves the old dir orphaned (safe),
@@ -261,17 +254,11 @@ def run_streaming_ann_ingest(
         if on_batch is not None:
             on_batch(batch_id, time.time() - t0, rebuilt)
 
-    # single-writer latch (r16 — see lifecycle.writer_lock)
-    lock = writer_lock(state_dir, "ANN ingest stream")
-    with lock:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    meta = _read_meta(state_dir)
+    run_available_now(
+        spark, embeddings_dir, checkpoint_dir, state_dir, "ANN ingest stream",
+        merge_batch, max_files_per_trigger,
+    )
+    meta = state.read_meta()
     if "version" in meta:
         meta["index_dir"] = _version_dir(state_dir, meta["version"])
     return meta

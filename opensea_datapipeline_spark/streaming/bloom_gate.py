@@ -24,14 +24,14 @@ for candidates the mask could not reject.
 
 from __future__ import annotations
 
-import json
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketches as sk
-from ..sources.readers import ensure_reader_confs, normalize_event_time
+from .lifecycle import VersionedState, run_available_now
 
 # defaults only — run_bloom_gated_dedup takes m_bits/k_hashes so callers
 # can size to THEIR key cardinality (~16 bits/key; an undersized mask
@@ -48,26 +48,10 @@ K_HASHES = 4
 _META = "_bloom_gate_meta.json"
 
 
-def _read_last_batch_id(checkpoint_dir: str) -> int:
-    try:
-        with open(os.path.join(checkpoint_dir, _META)) as f:
-            return int(json.load(f).get("last_batch_id", -1))
-    except (OSError, ValueError):
-        return -1
-
-
-def _write_last_batch_id(checkpoint_dir: str, batch_id: int) -> None:
-    # atomic (the gold-table discipline): a truncated meta must read as
-    # "no meta" and fall back to the replay path, which is exact anyway
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = os.path.join(checkpoint_dir, _META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"last_batch_id": batch_id}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(checkpoint_dir, _META))
-
-
+def _has_rows(seen_dir: str) -> bool:
+    # not os.path.exists: the writer latch creates seen_dir (and its
+    # lock file) before the first key is appended
+    return bool(glob.glob(os.path.join(seen_dir, "*.parquet")))
 
 
 def run_bloom_gated_dedup(
@@ -88,25 +72,13 @@ def run_bloom_gated_dedup(
     table and their bits join the driver mask. Returns the seen table
     plus per-batch prune telemetry (how many keys skipped the exact
     store — the measured value of the gate)."""
-    ensure_reader_confs(spark)
-    batch_src = spark.read.parquet(src_dir)
-    stream = (
-        spark.readStream.schema(batch_src.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    # same ns/NTZ normalization as run_streaming_dedup — a ns-encoded
-    # ts surfaces as bigint and a CAST(ts AS DATE) key would throw
-    stream = normalize_event_time(stream)
-    if filter_expr is not None:
-        stream = stream.filter(F.expr(filter_expr))
     # key_cols are SQL EXPRESSIONS (column names work too) so derived
     # keys like CAST(ts AS DATE) need no pre-projection
     key_expr = F.md5(
         F.concat_ws("\x1f", *[F.expr(c).cast("string") for c in key_cols])
     )
     bits: set[int] = set()
-    if os.path.exists(seen_dir):
+    if _has_rows(seen_dir):
         # RESTART path: re-seed the mask from the persisted store, or
         # the zero-false-negative invariant (mask-reject => not seen)
         # breaks and previously-seen keys double-append. Bounded: the
@@ -117,6 +89,7 @@ def run_bloom_gated_dedup(
         ).collect():
             bits.add(int(r["bit"]))
     stats = {"batches": 0, "definitely_new": 0, "maybe_seen": 0}
+    gate_meta = VersionedState(checkpoint_dir, meta_name=_META)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         # replay skip (the topk/gold batch-id discipline): dedup
@@ -126,8 +99,10 @@ def run_bloom_gated_dedup(
         # double-count the batch and overstate the prune share
         # (r10 ADVICE). Meta is written only after the append, so a
         # crash between append and meta replays into the exact path.
-        if batch_id <= _read_last_batch_id(checkpoint_dir):
+        if batch_id <= gate_meta.read_meta().get("last_batch_id", -1):
             return
+        if filter_expr is not None:
+            batch_df = batch_df.filter(F.expr(filter_expr))
         keys = batch_df.select(key_expr.alias("dedup_key")).distinct()
         mask = sk.pack_bits_literal(bits, m_bits)
         might = sk.bloom_might_contain(
@@ -140,7 +115,7 @@ def run_bloom_gated_dedup(
         maybe = keys.filter(F.col("_maybe")).drop("_maybe")
         n_new = definitely_new.count()
         n_maybe = maybe.count()
-        if os.path.exists(seen_dir) and n_maybe:
+        if n_maybe and _has_rows(seen_dir):
             seen = spark.read.parquet(seen_dir)
             # no forced broadcast: the seen table grows with the
             # corpus — AQE broadcasts while it fits, shuffles after
@@ -164,16 +139,13 @@ def run_bloom_gated_dedup(
         import gc
 
         gc.collect()
-        _write_last_batch_id(checkpoint_dir, batch_id)
+        gate_meta.write_meta({"last_batch_id": batch_id})
         stats["batches"] += 1
         stats["definitely_new"] += n_new
         stats["maybe_seen"] += n_maybe
 
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        spark, src_dir, checkpoint_dir, seen_dir, "bloom-gate stream", gate,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
     return {"seen": spark.read.parquet(seen_dir), "stats": stats}

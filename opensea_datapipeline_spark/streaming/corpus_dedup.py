@@ -33,12 +33,12 @@ The very first batch runs through the same code against empty stores
 is empty, and the empty-base compaction threshold fires immediately to
 seed ``groups_base_v0``), so there is no bootstrap branch.
 
-State discipline is the gold-table pattern (``streaming/gold.py``):
-batch-id replay skip, tmp-dir + atomic-rename versioning via
-``lifecycle.publish_versioned_dir``, per-batch
-``lifecycle.sweep_orphan_versions``, meta recovery from the committed
-artifacts. Appends run bands → corpus → delta → meta, so every crash
-window replays clean: the anti-join doc/band appends replay as no-ops
+State discipline follows the shared protocol (``streaming/lifecycle.py``):
+meta read and written through ``VersionedState``, batch-id replay skip,
+tmp-dir + atomic-rename versioning via ``publish_versioned_dir``,
+per-batch ``sweep_orphan_versions``, and this loop's own meta recovery
+from its committed artifacts. Appends run bands → corpus → delta →
+meta, so every crash window replays clean: the anti-join doc/band appends replay as no-ops
 and a re-appended delta is absorbed by the min fold.
 
 The graded invariant is the strongest one the family offers: the FINAL
@@ -58,13 +58,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
-from ..sources.readers import ensure_reader_confs
-from .gold import _read_meta, _write_meta
 from .lifecycle import (
+    VersionedState,
     publish_versioned_dir,
     require_non_null_ids,
+    run_available_now,
     sweep_orphan_versions,
-    writer_lock,
 )
 
 _BASE_PREFIX = "groups_base"
@@ -117,30 +116,15 @@ def _write_lsh_sidecar(state_dir: str, lsh: dict) -> None:
     """Persist the LSH pin REDUNDANTLY (ADVICE r15): the loop meta and
     the compacted ``_base_meta.json`` both carry it, but meta loss plus
     a corrupt base meta used to silently disarm the config-drift guard.
-    Written once (atomic tmp + replace), BEFORE the first band append,
-    so no pinned artifact can exist without a recoverable pin; no-ops
-    on every later batch (also adopts the pin for pre-r16 states)."""
-    import json
-
-    path = os.path.join(state_dir, _LSH_SIDECAR)
-    if os.path.exists(path):
-        return
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(lsh, f)
-    os.replace(tmp, path)
+    Written once (atomic), BEFORE the first band append, so no pinned
+    artifact can exist without a recoverable pin; no-ops on every later
+    batch (also adopts the pin for pre-r16 states)."""
+    if not os.path.exists(os.path.join(state_dir, _LSH_SIDECAR)):
+        VersionedState(state_dir, meta_name=_LSH_SIDECAR).write_meta(lsh)
 
 
 def _read_lsh_sidecar(state_dir: str) -> "dict | None":
-    import json
-
-    try:
-        with open(os.path.join(state_dir, _LSH_SIDECAR)) as f:
-            out = json.load(f)
-        return out if isinstance(out, dict) else None
-    except (OSError, ValueError):
-        return None
+    return VersionedState(state_dir, meta_name=_LSH_SIDECAR).read_meta() or None
 
 
 def _recover_meta(spark: SparkSession, state_dir: str) -> dict:
@@ -260,7 +244,10 @@ def current_assignment(
     compaction the delta store is empty and the base is already
     id-unique, so the fold (and its shuffle) is skipped entirely."""
     if meta is None:
-        meta = _read_meta(state_dir) or _recover_meta(spark, state_dir)
+        meta = (
+            VersionedState(state_dir).read_meta()
+            or _recover_meta(spark, state_dir)
+        )
     has_delta = bool(_delta_batch_dirs(state_dir))
     if not has_delta and meta.get("base_version") is not None:
         return spark.read.parquet(
@@ -299,13 +286,7 @@ def run_streaming_corpus_dedup(
     ``on_batch(batch_id, wall_s)`` after each non-replayed batch
     commits — the per-batch latency monitor the SCALING multi-batch leg
     reads (VERDICT r12 #1)."""
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
+    state = VersionedState(state_dir)
     corpus_dir = os.path.join(state_dir, "corpus")
     bands_dir = os.path.join(state_dir, "bands")
     delta_dir = os.path.join(state_dir, _DELTA_DIR)
@@ -319,13 +300,12 @@ def run_streaming_corpus_dedup(
         import time
 
         t0 = time.time()
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(state_dir)
+        meta = state.read_meta()
         ss = batch_df.sparkSession
         if not meta:
             meta = _recover_meta(ss, state_dir)
             if meta:
-                _write_meta(state_dir, meta)
+                state.write_meta(meta)
         # config-drift guard (r15): the persisted band table is only
         # probeable under the EXACT LSH parameters that built it — a
         # restart with different num_hashes/band_size silently changes
@@ -483,10 +463,10 @@ def run_streaming_corpus_dedup(
                 base_rows=n_base[0],
                 delta_rows=0,
             )
-            _write_meta(state_dir, meta)
+            state.write_meta(meta)
             shutil.rmtree(delta_dir, ignore_errors=True)
         else:
-            _write_meta(state_dir, meta)
+            state.write_meta(meta)
         sweep_orphan_versions(
             state_dir, (_BASE_PREFIX,),
             # no committed base yet → any version dir is crash debris
@@ -500,20 +480,14 @@ def run_streaming_corpus_dedup(
         if on_batch is not None:
             on_batch(batch_id, time.time() - t0)
 
-    # single-writer latch (r16 probe: a second loop on this state dir
-    # interleaves anti-join reads with our appends — double-appended
-    # corpus rows, clobbered meta); held across the whole run,
-    # heartbeat refreshed per batch, released on exit
-    lock = writer_lock(state_dir, "corpus-dedup stream")
-    with lock:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    meta = _read_meta(state_dir) or _recover_meta(spark, state_dir)
+    # the shared runner holds the single-writer latch (r16 probe: a
+    # second loop on this state dir interleaves anti-join reads with our
+    # appends — double-appended corpus rows, clobbered meta)
+    schema = run_available_now(
+        spark, docs_dir, checkpoint_dir, state_dir, "corpus-dedup stream",
+        merge_batch, max_files_per_trigger,
+    )
+    meta = state.read_meta() or _recover_meta(spark, state_dir)
     out = current_assignment(spark, state_dir, meta)
     if out is None:  # no batches: empty assignment
         from pyspark.sql import types as T

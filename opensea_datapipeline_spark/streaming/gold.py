@@ -10,13 +10,10 @@ plus a shuffle sized by distinct days, which is what keeps a daily gold
 table maintainable when the event log is 100 TB and a batch is a sliver
 of it.
 
-Exactly-once discipline: ``foreachBatch`` side effects are at-least-once
-(a batch can replay after a crash between sink write and checkpoint
-commit). Replays are made harmless the standard way — the gold store
-records the last merged ``batch_id`` and the merge skips any batch id it
-has already applied; versioned directory-swap writes keep readers off
-half-written output (`plans/incremental.py` upsert notes; the reference's
-versioned store convention is `io_utils.py:192-235`).
+State discipline is the shared versioned store
+(``streaming/lifecycle.py``): replayed batch ids are skipped, each merge
+publishes a new ``batch_*`` version by tmp dir + atomic rename, and the
+merge base is always the version the meta names.
 
 The distinct-users column uses HLL sketches (``hll_sketch_agg`` /
 ``hll_union_agg``): unlike the additive count columns, sketch union is
@@ -27,19 +24,10 @@ al., "Mergeable summaries", PODS 2012).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import ensure_reader_confs, normalize_event_time
-
-from ..sources.writers import VersionedOutputStore
-from .lifecycle import writer_lock
-
-_META = "_gold_meta.json"
+from .lifecycle import VersionedState, run_available_now
 
 GOLD_COLS = [
     "event_date",
@@ -89,64 +77,6 @@ def merge_gold_daily(existing: DataFrame, batch_summary: DataFrame) -> DataFrame
     )
 
 
-def _read_meta(base_dir: str) -> dict:
-    try:
-        with open(os.path.join(base_dir, _META)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {}
-
-
-def _write_meta(base_dir: str, meta: dict) -> None:
-    # atomic: a crash mid-write must not leave a truncated meta file —
-    # _read_meta would return {} and the next replayed batch would rebase
-    # on an empty gold table, silently discarding accumulated history
-    os.makedirs(base_dir, exist_ok=True)
-    tmp = os.path.join(base_dir, _META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(base_dir, _META))
-
-
-def latest_committed_batch(base_dir: str) -> tuple[str, int] | None:
-    """Newest committed ``batch_<id>`` version dir under ``base_dir`` and
-    its batch id, or None. Shared by every foreachBatch state store that
-    follows the tmp-dir + atomic-rename protocol (gold table, streaming
-    top-k): underscore-prefixed tmp dirs are never listed, the rename
-    that published a ``batch_*`` dir was atomic, so whatever this
-    returns is a complete, consistent state."""
-    try:
-        names = sorted(
-            d
-            for d in os.listdir(base_dir)
-            if d.startswith("batch_")
-            and os.path.isdir(os.path.join(base_dir, d))
-        )
-    except OSError:
-        return None
-    if not names:
-        return None
-    try:
-        last_id = int(names[-1].split("_")[-1])
-    except ValueError:
-        last_id = -1
-    return os.path.join(base_dir, names[-1]), last_id
-
-
-def _recover_meta(base_dir: str) -> dict:
-    """Meta lost/corrupt but committed ``batch_*`` versions exist: rebuild
-    the merge base from the newest committed version dir rather than
-    rebasing on empty. The batch id is recovered from the dir name so
-    replay-skipping keeps working."""
-    found = latest_committed_batch(base_dir)
-    if found is None:
-        return {}
-    latest, last_id = found
-    return {"last_batch_id": last_id, "version_dir": latest}
-
-
 def run_incremental_gold_daily(
     spark: SparkSession,
     events_dir: str,
@@ -162,75 +92,22 @@ def run_incremental_gold_daily(
     Restartable: the checkpoint resumes source offsets; the meta file
     makes replayed batch ids no-ops, so crash-replay cannot double-count.
     """
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
-    stream = normalize_event_time(stream)
+    state = VersionedState(gold_dir)
 
-    store = VersionedOutputStore(gold_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(gold_dir)
-        if not meta:
-            # guard: meta missing but committed versions on disk means the
-            # meta was lost, not that the store is fresh — recover the base
-            # from the newest committed dir instead of rebasing on empty
-            meta = _recover_meta(gold_dir)
-            if meta:
-                # re-persist immediately: if this batch turns out to be a
-                # replay (skipped below), no later write would restore the
-                # meta and every future run would re-run recovery
-                _write_meta(gold_dir, meta)
-        if batch_id <= meta.get("last_batch_id", -1):
-            return  # replayed batch — already merged, skip (idempotence)
+    def merge(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         summary = batch_gold_summary(batch_df)
-        # Merge base comes from the meta file, NOT latest_version_dir():
-        # the meta is committed only after a version is fully written, so
-        # a replay after a crash mid-write re-merges against the same base
-        # it saw the first time. Directory-listing "latest" would pick the
-        # crashed batch's own half-written dir as the base — double-merge.
-        base = meta.get("version_dir")
-        if base is not None:
-            merged = merge_gold_daily(
-                batch_df.sparkSession.read.parquet(base), summary
-            )
-        else:
-            merged = summary.select(GOLD_COLS)
-        # version dirs named by batch id: unique under sub-second batches
-        # (timestamp stamps can collide → self-overwrite of the version
-        # being read), lexicographically ordered for latest_version_dir
-        out = os.path.join(gold_dir, f"batch_{batch_id:012d}")
-        # write to a tmp dir + atomic rename: a crash mid-write leaves only
-        # the underscore-prefixed tmp (ignored by latest_version_dir), so a
-        # half-written version can never be selected by any reader
-        tmp = os.path.join(gold_dir, f"_tmp_batch_{batch_id:012d}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.rename(tmp, out)
-        _write_meta(gold_dir, {"last_batch_id": batch_id, "version_dir": out})
+        if existing is None:
+            return summary.select(GOLD_COLS)
+        return merge_gold_daily(existing, summary)
 
-    # single-writer latch (r16 — see lifecycle.writer_lock)
-    lock = writer_lock(gold_dir, "gold-table stream")
-    with lock:
-        query = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    # the committed version per meta is authoritative; directory listing is
-    # only the bootstrap fallback for stores predating the meta convention
-    latest = _read_meta(gold_dir).get("version_dir") or store.latest_version_dir()
-    if latest is None:
+    run_available_now(
+        spark, events_dir, checkpoint_dir, gold_dir, "gold-table stream",
+        state.merge_batches(merge), max_files_per_trigger,
+    )
+    gold = state.read(spark)
+    if gold is None:
         raise ValueError(f"no gold versions produced under {gold_dir}")
-    return spark.read.parquet(latest).select(
+    return gold.select(
         "event_date",
         "total_transactions",
         F.col("volume_total").cast("double").alias("volume_total"),

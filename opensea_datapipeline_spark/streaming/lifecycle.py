@@ -1,8 +1,65 @@
-"""Shared crash-window discipline for the streaming ingest loops
-(ann_ingest, tokenizer_ingest): versioned-directory publish via
-tmp + atomic rename, and the per-batch orphan sweep.
+"""The one state protocol of the ``foreachBatch`` streaming loops, and
+the one AvailableNow runner they all start through.
 
-The contract both loops rely on:
+``foreachBatch`` side effects are at-least-once: a batch whose sink
+write landed can replay after a crash before Spark commits it to the
+checkpoint. Every loop makes that harmless the same way, through
+``VersionedState`` (the reference's versioned-store convention,
+``io_utils.py:192-235``).
+
+Store layout under ``state_dir``::
+
+    batch_{id:012d}/        committed versions, one per merged batch
+    _tmp_batch_{id:012d}/   a version being written (never read)
+    _gold_meta.json         {last_batch_id, version_dir, **extra}
+
+Commit order, per batch (``VersionedState.commit``):
+
+1. skip the batch when its id is ≤ the meta's ``last_batch_id``
+   (``is_replay``) — the batch was already merged;
+2. read the merge base from the meta's ``version_dir``, never from a
+   directory listing: a listing would pick a crashed batch's own
+   orphaned version as its base and merge it twice;
+3. write the new state into ``_tmp_batch_*`` (plus the optional
+   sidecar, e.g. topk's ``_eps.json``, inside the same dir so it is
+   atomic with the rows and survives an empty state table);
+4. ``os.replace`` the tmp dir to ``batch_*``;
+5. write the meta: tmp file, ``fsync``, ``os.replace``.
+
+Crash windows:
+
+- during 3: only an underscore dir exists; the replay clears it and
+  rewrites it against the same base;
+- between 4 and 5: a complete ``batch_*`` exists that the meta does not
+  name; the replay overwrites it, again against the same base;
+- during 5: the old meta survives intact (a truncated meta would read
+  as empty and rebase the store on nothing);
+- after 5, before Spark's checkpoint commit: the batch replays and
+  step 1 skips it.
+
+Meta loss (deleted or unreadable file) is recovered, not rebased on
+empty: ``committed`` rebuilds the meta from the newest committed
+``batch_*`` dir and its sidecar and re-persists it at once, so a run
+whose batches are all replays (or that has no new input) still reads
+the full history. A committed version whose declared sidecar is gone is
+store corruption and raises.
+
+The meta file keeps the name ``_gold_meta.json`` for every loop because
+the gold table was the first store to use the protocol: states written
+by earlier versions and the crash tests read that name.
+The ingest loops (``ann_ingest``, ``tokenizer_ingest``,
+``corpus_dedup``) keep their own version layouts and recovery but read
+and write their meta through the same store; ``bloom_gate`` keeps its
+batch-id meta in the checkpoint dir under its own name.
+
+``run_available_now`` is the shared stream skeleton: reader confs,
+source schema, ``readStream`` at ``maxFilesPerTrigger``, event-time
+normalization, the single-writer latch (``writer_lock``, heartbeat
+refreshed before each batch), ``foreachBatch`` and an AvailableNow
+trigger run to completion.
+
+The ingest loops also publish non-batch versions (``publish_versioned_dir``)
+and sweep crashed ones (``sweep_orphan_versions``):
 
 - ``publish_versioned_dir`` writes into ``_tmp_<name>`` then
   ``os.replace``s it to ``<name>`` — the final directory either does
@@ -27,6 +84,12 @@ import shutil
 import socket
 import threading
 import time
+
+from ..sources.readers import (
+    ensure_reader_confs,
+    load_parquet_footer_schema,
+    normalize_event_time,
+)
 
 
 def require_non_null_ids(batch, id_col: str, loop_name: str) -> None:
@@ -236,3 +299,165 @@ def sweep_orphan_versions(
         m = pat.match(name)
         if m and (m.group(1) or int(m.group(2)) != keep_version):
             shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
+
+
+_META = "_gold_meta.json"
+_BATCH_DIR = re.compile(r"^batch_(\d+)$")
+
+
+class VersionedState:
+    """A loop's versioned state store: meta, recovery, replay skip,
+    committed-state read and the tmp → replace → meta commit (module
+    docstring). ``meta_name`` lets a loop with its own layout keep its
+    meta file name; ``sidecar`` names the JSON file each committed
+    version carries for the extra values (returned by ``commit``'s
+    ``write``) that its rows cannot rebuild."""
+
+    def __init__(self, state_dir: str, meta_name: str = _META,
+                 sidecar: "str | None" = None):
+        self.state_dir = state_dir
+        self._meta_path = os.path.join(state_dir, meta_name)
+        self._sidecar = sidecar
+
+    def read_meta(self) -> dict:
+        """The meta as written; ``{}`` when missing or unreadable."""
+        try:
+            with open(self._meta_path) as f:
+                meta = json.load(f)
+        except (OSError, ValueError):
+            return {}
+        return meta if isinstance(meta, dict) else {}
+
+    def write_meta(self, meta: dict) -> None:
+        # atomic and durable: a crash mid-write leaves the old meta, not
+        # a truncated file that reads as {} and rebases on empty state
+        os.makedirs(self.state_dir, exist_ok=True)
+        tmp = self._meta_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._meta_path)
+
+    def committed(self) -> dict:
+        """The committed meta, recovered from the newest ``batch_*`` dir
+        (and re-persisted) when the meta file is lost."""
+        meta = self.read_meta()
+        if not meta:
+            meta = self._recover()
+            if meta:
+                # persist now: if every batch of this run is a replay, no
+                # commit would restore the meta
+                self.write_meta(meta)
+        return meta
+
+    def _recover(self) -> dict:
+        try:
+            found = sorted(
+                (int(m.group(1)), name)
+                for name in os.listdir(self.state_dir)
+                if (m := _BATCH_DIR.match(name))
+                and os.path.isdir(os.path.join(self.state_dir, name))
+            )
+        except OSError:
+            return {}
+        if not found:
+            return {}
+        last_id, name = found[-1]
+        latest = os.path.join(self.state_dir, name)
+        extra: dict = {}
+        if self._sidecar is not None:
+            try:
+                with open(os.path.join(latest, self._sidecar)) as f:
+                    extra = json.load(f)
+                del extra["batch_id"]
+            except (OSError, ValueError, KeyError, TypeError) as e:
+                raise ValueError(
+                    f"corrupt state: committed version {latest} has no "
+                    f"readable {self._sidecar}; the error bound or other "
+                    "extra state it carries is unrecoverable"
+                ) from e
+        return {**extra, "last_batch_id": last_id, "version_dir": latest}
+
+    def is_replay(self, batch_id: int) -> bool:
+        return batch_id <= self.committed().get("last_batch_id", -1)
+
+    def read(self, spark) -> "DataFrame | None":
+        """The committed state table, or None before the first commit.
+        Footer-schema'd: the state is this loop's own write, so the
+        per-read schema-inference job is skipped."""
+        base = self.committed().get("version_dir")
+        return None if base is None else load_parquet_footer_schema(spark, base)
+
+    def commit(self, batch_id: int, write) -> None:
+        """``write(tmp)``, the sidecar (when declared) inside tmp, the
+        atomic rename to ``batch_{id}``, then the meta. ``write`` returns
+        the extra values (e.g. topk's ``eps``) the sidecar and the meta
+        carry, or None; they are known only once the state is written."""
+        extra: dict = {}
+
+        def write_version(tmp: str) -> None:
+            extra.update(write(tmp) or {})
+            if self._sidecar is not None:
+                with open(os.path.join(tmp, self._sidecar), "w") as f:
+                    json.dump({**extra, "batch_id": batch_id}, f)
+                    f.flush()
+                    os.fsync(f.fileno())
+
+        out = publish_versioned_dir(
+            self.state_dir, f"batch_{batch_id:012d}", write_version
+        )
+        self.write_meta(
+            {**extra, "last_batch_id": batch_id, "version_dir": out}
+        )
+
+    def merge_batches(self, merge):
+        """``foreachBatch`` body for a state that is one parquet table:
+        skip replays, ``merge(committed_or_None, batch_df)``, commit."""
+
+        def process(batch_df, batch_id: int) -> None:
+            if self.is_replay(batch_id):
+                return
+            state = merge(self.read(batch_df.sparkSession), batch_df)
+            self.commit(
+                batch_id, lambda tmp: state.write.mode("overwrite").parquet(tmp)
+            )
+
+        return process
+
+
+def run_available_now(
+    spark,
+    src_dir: str,
+    checkpoint_dir: str,
+    state_dir: str,
+    loop_name: str,
+    process,
+    max_files_per_trigger: int = 1,
+):
+    """Stream the parquet files under ``src_dir`` through
+    ``process(batch_df, batch_id)`` with an AvailableNow trigger, holding
+    the writer latch on ``state_dir``; returns the source schema once
+    every available file is processed."""
+    ensure_reader_confs(spark)
+    schema = spark.read.parquet(src_dir).schema
+    stream = normalize_event_time(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+    )
+    lock = writer_lock(state_dir, loop_name)
+
+    def batch(batch_df, batch_id: int) -> None:
+        lock.refresh()  # heartbeat at batch granularity
+        process(batch_df, batch_id)
+
+    with lock:
+        (
+            stream.writeStream.foreachBatch(batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return schema

@@ -10,13 +10,11 @@ is IDENTICAL to the one-shot batch sketch over the concatenated stream
 — which is what the graded query pins with a full DuckDB oracle: batch
 slicing must not move the estimate by one ulp.
 
-State discipline is the gold-table pattern (``streaming/gold.py``):
-at-least-once foreachBatch with replay skips via the recorded
-``last_batch_id``, versioned directory-swap writes (tmp + atomic
-rename), recovery from the newest committed version when meta is lost.
-Unlike the Misra-Gries table (``streaming/topk.py``) there is no error
-accumulator to carry — the bottom-k set is self-contained, so a
-committed version IS the whole state.
+State discipline is the shared versioned store
+(``streaming/lifecycle.py``). Unlike the Misra-Gries table
+(``streaming/topk.py``) there is no error accumulator to carry — the
+bottom-k set is self-contained, so a committed version IS the whole
+state.
 
 At 100 TB the point: distinct-count monitoring over an unbounded
 key space in O(k) state per monitored column, where a streaming
@@ -26,21 +24,12 @@ group and a naive distinct-count state grows with cardinality.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.sketches import _HEX15_SPAN, _h15
-from ..sources.readers import (
-    ensure_reader_confs,
-    load_parquet_footer_schema,
-    normalize_event_time,
-)
-from .gold import _read_meta, _recover_meta, _write_meta
-from .lifecycle import writer_lock
+from .lifecycle import VersionedState, run_available_now
 
 
 def batch_bottom_k(df: DataFrame, key_col: str, k: int, salt: str) -> DataFrame:
@@ -91,67 +80,22 @@ def run_streaming_kmv(
     state under ``state_dir`` via idempotent foreachBatch merges, and
     return ONE row (k, m_k, estimate) computed from the final state —
     bit-identical to the batch :func:`kmv_distinct` over the same rows.
-    Restartable and replay-safe like the gold table."""
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
+    Restartable and replay-safe (``lifecycle.VersionedState``)."""
+    state = VersionedState(state_dir)
+    run_available_now(
+        spark, events_dir, checkpoint_dir, state_dir, "kmv stream",
+        state.merge_batches(
+            lambda existing, batch_df: merge_bottom_k(
+                existing, batch_bottom_k(batch_df, key_col, k, salt), k
+            )
+        ),
+        max_files_per_trigger,
     )
-    stream = normalize_event_time(stream)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(state_dir)
-        if not meta:
-            # meta lost but committed versions exist: gold-table recovery
-            # (the bottom-k state is self-contained, so — unlike topk's
-            # eps sidecar — the version dir alone is the whole state)
-            meta = _recover_meta(state_dir)
-            if meta:
-                _write_meta(state_dir, meta)
-        if batch_id <= meta.get("last_batch_id", -1):
-            return  # replayed batch — already merged (idempotence)
-        base_dir = meta.get("version_dir")
-        # footer-schema'd state read (§10): the bottom-k state is this
-        # loop's own last write — skip the per-trigger inference job
-        existing = (
-            load_parquet_footer_schema(batch_df.sparkSession, base_dir)
-            if base_dir is not None
-            else None
-        )
-        state = merge_bottom_k(
-            existing, batch_bottom_k(batch_df, key_col, k, salt), k
-        )
-        out = os.path.join(state_dir, f"batch_{batch_id:012d}")
-        tmp = os.path.join(state_dir, f"_tmp_batch_{batch_id:012d}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        state.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        _write_meta(
-            state_dir, {"last_batch_id": batch_id, "version_dir": out}
-        )
-
-    # single-writer latch (r16 — see lifecycle.writer_lock)
-    lock = writer_lock(state_dir, "kmv stream")
-    with lock:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    meta = _read_meta(state_dir) or {}
-    base = meta.get("version_dir")
-    if base is None:  # no batches ever merged
+    final = state.read(spark)
+    if final is None:  # no batches ever merged
         final = spark.createDataFrame(
             [], T.StructType([T.StructField("h", T.LongType())])
         )
-    else:
-        final = load_parquet_footer_schema(spark, base)
     kth = final.agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
         F.max("h").alias("m_k"),
@@ -191,10 +135,9 @@ def run_streaming_ddsketch(
     State is ≈ log_gamma(max/min) rows (a few hundred at gamma=1.02)
     regardless of stream length — quantile monitoring over an
     unbounded stream in O(value-range) state, where a naive percentile
-    needs every value. Same gold-pattern discipline as the KMV monitor:
-    replay skip via last_batch_id, versioned dir-swap writes, recovery
-    from the newest committed version (the bucket table is
-    self-contained state). Returns (q, bucket, estimate, n).
+    needs every value. State discipline is the shared versioned store
+    (``streaming/lifecycle.py``); the bucket table is self-contained
+    state. Returns (q, bucket, estimate, n).
     """
     from ..operators.sketches import (
         dd_bucket_counts,
@@ -202,58 +145,24 @@ def run_streaming_ddsketch(
     )
 
     qs = list(qs or (0.5, 0.9, 0.99))
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
-    stream = normalize_event_time(stream)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(state_dir)
-        if not meta:
-            meta = _recover_meta(state_dir)
-            if meta:
-                _write_meta(state_dir, meta)
-        if batch_id <= meta.get("last_batch_id", -1):
-            return  # replayed batch — already merged
-        base_dir = meta.get("version_dir")
+    def merge(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_buckets = dd_bucket_counts(batch_df, value_col, gamma=gamma)
-        if base_dir is not None:
-            state = (
-                load_parquet_footer_schema(batch_df.sparkSession, base_dir)
-                .unionByName(batch_buckets)
-                .groupBy("bucket")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-        else:
-            state = batch_buckets
-        out = os.path.join(state_dir, f"batch_{batch_id:012d}")
-        tmp = os.path.join(state_dir, f"_tmp_batch_{batch_id:012d}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        state.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        _write_meta(
-            state_dir, {"last_batch_id": batch_id, "version_dir": out}
+        if existing is None:
+            return batch_buckets
+        return (
+            existing.unionByName(batch_buckets)
+            .groupBy("bucket")
+            .agg(F.sum("c").cast("long").alias("c"))
         )
 
-    # single-writer latch (r16 — see lifecycle.writer_lock)
-    lock = writer_lock(state_dir, "ddsketch stream")
-    with lock:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    meta = _read_meta(state_dir) or {}
-    base = meta.get("version_dir")
-    if base is None:  # no batches ever merged
+    state = VersionedState(state_dir)
+    run_available_now(
+        spark, events_dir, checkpoint_dir, state_dir, "ddsketch stream",
+        state.merge_batches(merge), max_files_per_trigger,
+    )
+    final = state.read(spark)
+    if final is None:  # no batches ever merged
         final = spark.createDataFrame(
             [],
             T.StructType(
@@ -263,6 +172,4 @@ def run_streaming_ddsketch(
                 ]
             ),
         )
-    else:
-        final = load_parquet_footer_schema(spark, base)
     return dd_quantiles_from_buckets(final, qs, gamma=gamma)

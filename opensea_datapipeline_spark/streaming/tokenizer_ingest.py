@@ -19,9 +19,10 @@ Store layout under ``state_dir``::
                      appends mutate the CURRENT version in place
                      (idempotent: the append anti-joins doc ids);
                      a RETRAIN publishes BOTH dirs at K+1 atomically
-    meta.json        {last_batch_id, last_counted_batch_id, version,
+    _gold_meta.json  {last_batch_id, last_counted_batch_id, version,
                      retrains, n_syms, n_oov} (counters are
-                     since-last-retrain)
+                     since-last-retrain), written through
+                     ``lifecycle.VersionedState``
 
 Why the retrain re-encodes: token ids are a function of the artifact
 (alphabet order + merge ranks), so rows encoded under v{K} and v{K+1}
@@ -80,13 +81,12 @@ from ..operators.text import (
     bpe_write_tokenizer,
     tokenizer_staleness,
 )
-from ..sources.readers import ensure_reader_confs
-from .gold import _read_meta, _write_meta
 from .lifecycle import (
+    VersionedState,
     publish_versioned_dir,
     require_non_null_ids,
+    run_available_now,
     sweep_orphan_versions,
-    writer_lock,
 )
 
 
@@ -127,13 +127,7 @@ def run_streaming_tokenizer_ingest(
     in the loop meta): genuine alphabet drift hits every occurrence of
     an unseen character and clears it quickly; a stray corrupt byte
     does not."""
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
+    state = VersionedState(state_dir)
     # the artifact is immutable between retrains — read + verify once
     # per version per process, not per micro-batch
     artifact_cache: dict[int, tuple] = {}
@@ -165,8 +159,7 @@ def run_streaming_tokenizer_ingest(
         import time
 
         t0 = time.time()
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(state_dir)
+        meta = state.read_meta()
         if batch_id <= meta.get("last_batch_id", -1):
             return  # replayed batch — already ingested
         ss = batch_df.sparkSession
@@ -223,7 +216,7 @@ def run_streaming_tokenizer_ingest(
             meta["n_syms"] = meta.get("n_syms", 0) + stale["n_syms"]
             meta["n_oov"] = meta.get("n_oov", 0) + stale["n_oov"]
             meta["last_counted_batch_id"] = batch_id
-            _write_meta(state_dir, meta)  # last_batch_id still old
+            state.write_meta(meta)  # last_batch_id still old
         # append AFTER the counter commit, BEFORE the batch-id bump: a
         # crash on either side of this write replays into a no-op
         # (pre-append: same delta recomputed, counters skipped by the
@@ -254,7 +247,7 @@ def run_streaming_tokenizer_ingest(
                 "oov_id": oov_id,  # config-drift pin survives retrain
             }
             retrained = True
-        _write_meta(state_dir, {**meta, "last_batch_id": batch_id})
+        state.write_meta({**meta, "last_batch_id": batch_id})
         if old_version is not None:
             # superseded versions removed only AFTER the meta commit;
             # evict the cache entry with the dir or a long-lived stream
@@ -277,17 +270,11 @@ def run_streaming_tokenizer_ingest(
         if on_batch is not None:
             on_batch(batch_id, time.time() - t0, retrained)
 
-    # single-writer latch (r16 — see lifecycle.writer_lock)
-    lock = writer_lock(state_dir, "tokenizer ingest stream")
-    with lock:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    meta = _read_meta(state_dir)
+    run_available_now(
+        spark, docs_dir, checkpoint_dir, state_dir, "tokenizer ingest stream",
+        merge_batch, max_files_per_trigger,
+    )
+    meta = state.read_meta()
     if "version" in meta:
         meta["tokenizer_dir"] = _tok_dir(state_dir, meta["version"])
         meta["encoded_dir"] = _enc_dir(state_dir, meta["version"])

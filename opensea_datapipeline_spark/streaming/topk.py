@@ -18,11 +18,10 @@ the regime the graded query runs in, giving a full DuckDB oracle — and
 with ``eps > 0`` the bounds above are the contract (pinned by a
 planted-skew unit test with cap ≪ distinct keys).
 
-State discipline is the gold-table pattern (``streaming/gold.py``):
-foreachBatch is at-least-once, so the state store records the last
-merged ``batch_id`` and replays are skipped; versioned directory-swap
-writes (tmp + atomic rename) keep readers off half-written state; the
-merge base always comes from the meta file, never a directory listing.
+State discipline is the shared versioned store
+(``streaming/lifecycle.py``); ``eps`` rides each committed version in an
+``_eps.json`` sidecar, so it is atomic with the state and recoverable
+after meta loss even when an all-ties trim leaves the table empty.
 
 At 100 TB the point is the same as the batch operator's: per trigger
 the work is (batch rows → batch-distinct keys) plus a merge shuffle
@@ -33,20 +32,15 @@ in update mode would (its state store holds EVERY key ever seen).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..sources.readers import (
-    ensure_reader_confs,
-    load_parquet_footer_schema,
-    normalize_event_time,
-)
-from .gold import _read_meta, _write_meta, latest_committed_batch
-from .lifecycle import writer_lock
+from ..sources.readers import load_parquet_footer_schema
+from .lifecycle import VersionedState, run_available_now
 
 STATE_COLS = ["key", "cnt"]
 _EPS_SIDECAR = "_eps.json"
@@ -119,31 +113,6 @@ def merge_mg_state(
     return _mg_trim(combined, cap)
 
 
-def _recover_meta(state_dir: str) -> dict:
-    """Meta lost/corrupt but committed ``batch_*`` versions exist:
-    rebuild from the newest committed dir (shared gold-table scan) —
-    its rename was atomic, so it is a complete state. eps comes from
-    the ``_eps.json`` sidecar written INSIDE the version dir before the
-    rename, so it is atomic with the state and — unlike an eps column
-    in the rows — survives an all-ties trim that leaves the state table
-    EMPTY (an empty version with a lost bound must not silently become
-    a claimed-exact eps=0 state). A committed version missing its
-    sidecar is store corruption: refuse loudly rather than guess."""
-    found = latest_committed_batch(state_dir)
-    if found is None:
-        return {}
-    latest, last_id = found
-    try:
-        with open(os.path.join(latest, _EPS_SIDECAR)) as f:
-            eps = int(json.load(f)["eps"])
-    except (OSError, ValueError, KeyError) as e:
-        raise ValueError(
-            f"corrupt topk state: committed version {latest} has no "
-            f"readable {_EPS_SIDECAR}; the error bound is unrecoverable"
-        ) from e
-    return {"last_batch_id": last_id, "version_dir": latest, "eps": eps}
-
-
 def run_streaming_topk(
     spark: SparkSession,
     events_dir: str,
@@ -157,42 +126,15 @@ def run_streaming_topk(
     Misra-Gries count table under ``state_dir`` via idempotent
     foreachBatch merges. Returns the final state with the error bound:
     (key, cnt, eps) — cnt is exact when eps == 0, else true counts are
-    in [cnt, cnt + eps]. Restartable and replay-safe like the gold
-    table."""
-    ensure_reader_confs(spark)
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
-    stream = normalize_event_time(stream)
+    in [cnt, cnt + eps]. Restartable and replay-safe
+    (``lifecycle.VersionedState``)."""
+    state = VersionedState(state_dir, sidecar=_EPS_SIDECAR)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        lock.refresh()  # heartbeat at batch granularity
-        meta = _read_meta(state_dir)
-        if not meta:
-            # meta lost but committed versions exist: recover the base
-            # instead of rebasing on empty (the gold-table r4 hole).
-            # eps is recoverable from the _eps.json sidecar each
-            # version carries — a meta file alone would make the error
-            # bound unrecoverable, silently turning a sketch state into
-            # a claimed-exact one.
-            meta = _recover_meta(state_dir)
-            if meta:
-                _write_meta(state_dir, meta)
-        if batch_id <= meta.get("last_batch_id", -1):
-            return  # replayed batch — already merged (idempotence)
-        base_dir = meta.get("version_dir")
+        if state.is_replay(batch_id):
+            return
         ss = batch_df.sparkSession
-        # footer-schema'd state read: the (key, cnt) state is this
-        # loop's own last write — skipping the per-trigger schema-
-        # inference job trims one fixed job from every batch (§9/§10)
-        existing = (
-            load_parquet_footer_schema(ss, base_dir)
-            if base_dir is not None
-            else None
-        )
+        eps = int(state.committed().get("eps", 0))
         # ONE job per trigger in the exact regime (r16 job-floor trim —
         # was 3: checkpoint-pin, count, write): the merged-state write
         # itself materializes the union+groupBy, and the key count
@@ -200,67 +142,38 @@ def run_streaming_topk(
         # the pin for the rare over-cap path, which re-reads it from
         # disk (state-sized) to trim — no lineage replay, and no
         # per-batch localCheckpoint blocks to GC.
-        from pyspark.sql import Observation
-
         obs = Observation()
         merged = _merged_counts(
-            existing, batch_key_counts(batch_df, key_col)
+            state.read(ss), batch_key_counts(batch_df, key_col)
         ).observe(obs, F.count(F.lit(1)).alias("n_keys"))
-        out = os.path.join(state_dir, f"batch_{batch_id:012d}")
-        tmp = os.path.join(state_dir, f"_tmp_batch_{batch_id:012d}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(tmp)
-        d = 0
-        if int(obs.get["n_keys"]) > cap:
-            trimmed, d = _mg_trim(load_parquet_footer_schema(ss, tmp), cap)
-            trim_tmp = tmp + "_trim"
-            shutil.rmtree(trim_tmp, ignore_errors=True)
-            trimmed.write.mode("overwrite").parquet(trim_tmp)
-            shutil.rmtree(tmp)
-            os.replace(trim_tmp, tmp)
-        eps = int(meta.get("eps", 0)) + d
-        # eps sidecar INSIDE the version dir, before the rename: atomic
-        # with the state, ignored by the parquet reader (underscore
-        # prefix), and row-independent — recoverable even when an
-        # all-ties trim leaves the state table empty
-        with open(os.path.join(tmp, _EPS_SIDECAR), "w") as f:
-            json.dump({"eps": eps, "batch_id": batch_id}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        _write_meta(
-            state_dir,
-            {"last_batch_id": batch_id, "version_dir": out, "eps": eps},
-        )
 
-    # single-writer latch (r16 — see lifecycle.writer_lock): a second
-    # loop on this state dir would interleave version swaps and meta
-    # writes
-    lock = writer_lock(state_dir, "topk stream")
-    with lock:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    meta = _read_meta(state_dir) or _recover_meta(state_dir)
-    base = meta.get("version_dir")
-    eps = int(meta.get("eps", 0))
-    if base is None:  # no batches ever merged: empty, source-typed key
-        from pyspark.sql import types as T
+        def write(tmp: str) -> dict:
+            merged.write.mode("overwrite").parquet(tmp)
+            d = 0
+            if int(obs.get["n_keys"]) > cap:
+                trimmed, d = _mg_trim(load_parquet_footer_schema(ss, tmp), cap)
+                trim_tmp = tmp + "_trim"
+                shutil.rmtree(trim_tmp, ignore_errors=True)
+                trimmed.write.mode("overwrite").parquet(trim_tmp)
+                shutil.rmtree(tmp)
+                os.replace(trim_tmp, tmp)
+            return {"eps": eps + d}
 
-        kf = schema[key_col]
+        state.commit(batch_id, write)
+
+    schema = run_available_now(
+        spark, events_dir, checkpoint_dir, state_dir, "topk stream",
+        merge_batch, max_files_per_trigger,
+    )
+    final = state.read(spark)
+    if final is None:  # no batches ever merged: empty, source-typed key
         out_schema = T.StructType(
             [
-                T.StructField("key", kf.dataType, True),
+                T.StructField("key", schema[key_col].dataType, True),
                 T.StructField("cnt", T.LongType(), False),
                 T.StructField("eps", T.LongType(), False),
             ]
         )
         return spark.createDataFrame([], out_schema)
-    return load_parquet_footer_schema(spark, base).withColumn(
-        "eps", F.lit(eps).cast("long")
-    )
+    eps = int(state.committed().get("eps", 0))
+    return final.withColumn("eps", F.lit(eps).cast("long"))

@@ -212,7 +212,7 @@ def corpus_dedup_store_growth_leg(spark, mults=(1, 10),
     from opensea_datapipeline_spark.streaming.corpus_dedup import (
         run_streaming_corpus_dedup,
     )
-    from opensea_datapipeline_spark.streaming.gold import _write_meta
+    from opensea_datapipeline_spark.streaming.lifecycle import VersionedState
 
     out = {}
     for mult in mults:
@@ -240,7 +240,7 @@ def corpus_dedup_store_growth_leg(spark, mults=(1, 10),
         )
         with open(os.path.join(base_dir, "_base_meta.json"), "w") as f:
             _json.dump({"last_batch_id": -1, "base_rows": seed_n}, f)
-        _write_meta(state, {
+        VersionedState(state).write_meta({
             "last_batch_id": -1, "base_version": 0,
             "base_rows": seed_n, "delta_rows": 0,
         })
@@ -291,7 +291,7 @@ def corpus_dedup_compaction_100x_leg(spark, seed_base: int = 30_000,
     from opensea_datapipeline_spark.streaming.corpus_dedup import (
         run_streaming_corpus_dedup,
     )
-    from opensea_datapipeline_spark.streaming.gold import _write_meta
+    from opensea_datapipeline_spark.streaming.lifecycle import VersionedState
 
     base = tempfile.mkdtemp(prefix=f"scaling_dedupstore_{mult}x_")
     src = os.path.join(base, "src")
@@ -314,7 +314,7 @@ def corpus_dedup_compaction_100x_leg(spark, seed_base: int = 30_000,
     assign.write.mode("overwrite").parquet(os.path.join(base_dir, "groups"))
     with open(os.path.join(base_dir, "_base_meta.json"), "w") as f:
         _json.dump({"last_batch_id": -1, "base_rows": seed_n}, f)
-    _write_meta(state, {
+    VersionedState(state).write_meta({
         "last_batch_id": -1, "base_version": 0,
         "base_rows": seed_n, "delta_rows": 0,
     })

@@ -29,7 +29,13 @@ from opensea_datapipeline_spark.session import get_spark  # noqa: E402
 
 
 def _n_jobs(sc) -> int:
-    return sc._jsc.sc().statusStore().jobsList(None).size()
+    """Jobs submitted so far: the newest job id + 1 (the status store
+    keeps only the last ``spark.ui.retainedJobs`` jobs, so its size is
+    not a counter)."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
 
 
 def main() -> None:
@@ -69,6 +75,30 @@ def main() -> None:
             key_col="user_id", k=64,
         ).collect()
 
+    def ddsketch_loop(nb: int) -> None:
+        from opensea_datapipeline_spark.streaming.sketch import (
+            run_streaming_ddsketch,
+        )
+
+        src = tempfile.mkdtemp() + "/src"
+        for _ in range(nb):
+            events.coalesce(1).write.mode("append").parquet(src)
+        run_streaming_ddsketch(
+            spark, src, tempfile.mkdtemp(), tempfile.mkdtemp(),
+        ).collect()
+
+    def gold_loop(nb: int) -> None:
+        from opensea_datapipeline_spark.streaming.gold import (
+            run_incremental_gold_daily,
+        )
+
+        src = tempfile.mkdtemp() + "/src"
+        for _ in range(nb):
+            events.coalesce(1).write.mode("append").parquet(src)
+        run_incremental_gold_daily(
+            spark, src, tempfile.mkdtemp(), tempfile.mkdtemp(),
+        ).collect()
+
     def dedup_loop(nb: int) -> None:
         from opensea_datapipeline_spark.streaming.corpus_dedup import (
             run_streaming_corpus_dedup,
@@ -92,6 +122,8 @@ def main() -> None:
     for name, loop in [
         ("streaming_topk", topk_loop),
         ("streaming_kmv", kmv_loop),
+        ("streaming_ddsketch", ddsketch_loop),
+        ("gold_daily", gold_loop),
         ("corpus_dedup", dedup_loop),
     ]:
         j0 = _n_jobs(sc)

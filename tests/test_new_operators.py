@@ -1280,6 +1280,35 @@ def test_streaming_topk_lost_meta_recovers_history(spark, tmp_path):
     assert {r.cnt for r in first} == {100}  # 40 keys x 100, not doubled
 
 
+def test_streaming_topk_lost_meta_and_eps_sidecar_refuses(spark, tmp_path):
+    # Meta lost AND the newest version's _eps.json gone: the error bound
+    # cannot be rebuilt from the rows, so recovery must refuse loudly
+    # rather than report the state as exact (eps=0).
+    import os
+
+    from pyspark.sql import functions as F
+
+    from opensea_datapipeline_spark.streaming.topk import run_streaming_topk
+
+    src = str(tmp_path / "src")
+    (
+        spark.createDataFrame(
+            [(i % 40, 1.0) for i in range(400)], "user_id long, value double"
+        )
+        .withColumn("ts", F.timestamp_seconds(F.lit(1700000000)))
+        .repartition(2)
+        .write.mode("overwrite")
+        .parquet(src)
+    )
+    state_dir, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    run_streaming_topk(spark, src, state_dir, ckpt, cap=1000).collect()
+    newest = max(d for d in os.listdir(state_dir) if d.startswith("batch_"))
+    os.remove(os.path.join(state_dir, "_gold_meta.json"))
+    os.remove(os.path.join(state_dir, newest, "_eps.json"))
+    with pytest.raises(ValueError, match="error bound.*unrecoverable"):
+        run_streaming_topk(spark, src, state_dir, ckpt, cap=1000)
+
+
 def test_nb_model_serving_with_oov(spark, tmp_path):
     # Persisted-model serving path: train on a labeled corpus, write the
     # model to parquet, score a HELD-OUT corpus containing tokens the
@@ -1603,14 +1632,17 @@ def test_streaming_kmv_lost_meta_recovers_history(spark, tmp_path):
         spark, src, state_dir, str(tmp_path / "ckpt1"),
         key_col="user_id", k=64,
     ).collect()[0]
-    os.remove(os.path.join(state_dir, "_gold_meta.json"))
-    again = run_streaming_kmv(
-        spark, src, state_dir, str(tmp_path / "ckpt2"),
-        key_col="user_id", k=64,
-    ).collect()[0]
-    assert (again["m_k"], again["estimate"]) == (
-        first["m_k"], first["estimate"],
-    )
+    # ckpt1: the same checkpoint with no new input runs no batch, so
+    # only the final read can recover; ckpt2: every batch replays
+    for ckpt in ("ckpt1", "ckpt2"):
+        os.remove(os.path.join(state_dir, "_gold_meta.json"))
+        again = run_streaming_kmv(
+            spark, src, state_dir, str(tmp_path / ckpt),
+            key_col="user_id", k=64,
+        ).collect()[0]
+        assert (again["m_k"], again["estimate"]) == (
+            first["m_k"], first["estimate"],
+        ), ckpt
 
 
 def test_dup_hits_strategies_match(spark, sf_dir):
@@ -2327,10 +2359,10 @@ def test_bloom_gate_skips_replayed_batches(spark, sf_dir, tmp_path):
 
     from opensea_datapipeline_spark.sources.readers import load_table
     from opensea_datapipeline_spark.streaming.bloom_gate import (
-        _read_last_batch_id,
-        _write_last_batch_id,
+        _META,
         run_bloom_gated_dedup,
     )
+    from opensea_datapipeline_spark.streaming.lifecycle import VersionedState
 
     e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
@@ -2345,10 +2377,12 @@ def test_bloom_gate_skips_replayed_batches(spark, sf_dir, tmp_path):
     n_seen = first["seen"].count()
     assert first["stats"]["batches"] > 0
     # meta recorded the last processed batch of lineage c1
-    assert _read_last_batch_id(str(tmp_path / "c1")) >= 0
+    assert VersionedState(str(tmp_path / "c1"), _META).read_meta()[
+        "last_batch_id"
+    ] >= 0
     # fresh lineage, planted "already processed" meta -> all skipped
     c2 = str(tmp_path / "c2")
-    _write_last_batch_id(c2, 10**9)
+    VersionedState(c2, _META).write_meta({"last_batch_id": 10**9})
     replay = run_bloom_gated_dedup(
         spark, src, ["user_id"], seen_dir=seen, checkpoint_dir=c2,
     )
@@ -2356,6 +2390,26 @@ def test_bloom_gate_skips_replayed_batches(spark, sf_dir, tmp_path):
         "batches": 0, "definitely_new": 0, "maybe_seen": 0,
     }
     assert replay["seen"].count() == n_seen
+
+
+def test_bloom_gate_refuses_second_writer_on_seen_dir(spark, tmp_path):
+    # Two loops on one seen_dir interleave anti-joins and appends and
+    # double-append keys: a live writer latch on seen_dir must make the
+    # gate refuse to start.
+    from opensea_datapipeline_spark.streaming.bloom_gate import (
+        run_bloom_gated_dedup,
+    )
+    from opensea_datapipeline_spark.streaming.lifecycle import writer_lock
+
+    src = str(tmp_path / "src")
+    spark.range(100).selectExpr("id AS user_id").write.parquet(src)
+    seen = str(tmp_path / "seen")
+    with writer_lock(seen, "other gate"):
+        with pytest.raises(RuntimeError, match="live writer"):
+            run_bloom_gated_dedup(
+                spark, src, ["user_id"], seen_dir=seen,
+                checkpoint_dir=str(tmp_path / "ckpt"),
+            )
 
 
 def _py_bpe_train(word_freq, n_merges, min_count=2):
@@ -2739,6 +2793,19 @@ def test_streaming_ddsketch_merge_equals_batch_and_replay_noop(
         ).collect()
     }
     assert replay == stream_rows
+    # meta lost, then a rerun on the same checkpoint with no new input:
+    # no batch runs, so the final read must recover the committed state
+    import os
+
+    os.remove(os.path.join(state_dir, "_gold_meta.json"))
+    rerun = {
+        r.q: (r.bucket, r.estimate, r.n)
+        for r in run_streaming_ddsketch(
+            spark, src, state_dir, str(tmp_path / "c1"), value_col="value",
+            qs=qs,
+        ).collect()
+    }
+    assert rerun == stream_rows
 
 
 def test_minhash_lsh_incremental_equals_full_minus_old_block(

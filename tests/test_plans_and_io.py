@@ -89,6 +89,50 @@ def test_dedup_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "LessThan(doc_id,200)" in _plan(df).replace(" ", "")
 
 
+def test_streaming_state_loops_job_ceiling(spark, tmp_path):
+    # Spark jobs per call of the versioned-state loops once they restart
+    # from a checkpoint with one new file: the source schema, the merge
+    # write (topk folds its key count into it) and what the returned
+    # frame needs to plan. The committed state is read by its parquet
+    # footer, never by a schema-inference job.
+    from opensea_datapipeline_spark.streaming.gold import (
+        run_incremental_gold_daily,
+    )
+    from opensea_datapipeline_spark.streaming.sketch import run_streaming_kmv
+    from opensea_datapipeline_spark.streaming.topk import run_streaming_topk
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest_job() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+    loops = {
+        "topk": run_streaming_topk,
+        "kmv": run_streaming_kmv,
+        "gold": run_incremental_gold_daily,
+    }
+    events = spark.range(600).select(
+        (F.col("id") % 37).alias("user_id"),
+        F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 3600).alias("ts"),
+        (F.col("id") % 100).cast("double").alias("value"),
+    )
+    src = str(tmp_path / "src")
+    jobs = {}
+    for rnd in range(3):
+        events.filter(F.col("id") % 3 == rnd).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        for name, run in loops.items():
+            before = newest_job()
+            run(spark, src, str(tmp_path / f"{name}_state"),
+                str(tmp_path / f"{name}_ckpt"))
+            if rnd:  # the first round starts each query fresh
+                jobs[name, rnd] = newest_job() - before
+    assert all(0 < n <= 4 for n in jobs.values()), jobs
+
+
 def test_partitioned_write_and_partition_pruning(spark, sf_dir, tmp_path):
     out = str(tmp_path / "events_by_type")
     events = load_table(spark, sf_dir, "events").withColumn(

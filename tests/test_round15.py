@@ -282,10 +282,7 @@ def test_corpus_dedup_loop_restart_after_meta_loss(spark, tmp_path):
             jaccard_threshold=0.5,
         ).collect()
     }
-    os.remove(os.path.join(state, "_meta.json")) if os.path.exists(
-        os.path.join(state, "_meta.json")
-    ) else None
-    # remove whatever meta file name the gold helpers use
+    # remove every JSON meta file the loop keeps at the state root
     for name in os.listdir(state):
         if name.endswith(".json") and os.path.isfile(
             os.path.join(state, name)

@@ -121,22 +121,22 @@ def test_gold_lost_meta_replay_still_idempotent(spark, sf_dir, tmp_path):
 def test_gold_meta_write_is_atomic(tmp_path, monkeypatch):
     # The meta write must be tmp-file + rename: a crash mid-write leaves
     # the OLD meta intact, never a truncated file that parses as {}.
-    from opensea_datapipeline_spark.streaming import gold
+    from opensea_datapipeline_spark.streaming import lifecycle
 
-    base = str(tmp_path)
-    gold._write_meta(base, {"last_batch_id": 7, "version_dir": "/v7"})
+    store = lifecycle.VersionedState(str(tmp_path))
+    store.write_meta({"last_batch_id": 7, "version_dir": "/v7"})
 
     # simulate a crash during the NEXT write: json.dump raises mid-way
     def boom(*a, **k):
         raise OSError("disk full")
 
-    monkeypatch.setattr(gold.json, "dump", boom)
+    monkeypatch.setattr(lifecycle.json, "dump", boom)
     try:
-        gold._write_meta(base, {"last_batch_id": 8, "version_dir": "/v8"})
+        store.write_meta({"last_batch_id": 8, "version_dir": "/v8"})
     except OSError:
         pass
     monkeypatch.undo()
-    assert gold._read_meta(base) == {"last_batch_id": 7, "version_dir": "/v7"}
+    assert store.read_meta() == {"last_batch_id": 7, "version_dir": "/v7"}
 
 
 def test_custom_state_mid_stream_crash_then_continue(spark, sf_dir, tmp_path):
