@@ -12,7 +12,8 @@ via __spark_entry__.queries().
 Stability protocol (round-5): the suite runs as TWO passes over the query
 list (3 runs then 2 runs per query); the recorded per-query time is the
 min of all 5. The record carries an ``env`` block (spark/python version,
-cpu count, load averages at start/end) and, when a prior round's record
+the effective master and core count, ``$SPARK_GRAFT_CPUS``, the SF dir,
+load averages at start/end) and, when a prior round's record
 exists, both the raw ``vs_prev`` delta and an environment-normalized
 ``vs_prev_norm``: raw deltas divide by ``env_ratio`` — the median of
 cur/prev over all shared queries — so a uniform machine/Spark-version
@@ -195,6 +196,26 @@ NOISE_CANARIES = ("tfidf_top_terms", "pricing_summary", "rolling_daily_mean")
 # box-noise signal in the other direction (r5 ran at env 0.584).
 NOISY_RATIO_CEIL = 1.15
 
+# The round records (BENCH_LOCAL_rNN.json) form one vs_prev chain taken at
+# this effective core count. A run at any other count is kept beside the
+# chain in a ``_cN`` file that ``_local_queries`` never reads: at sf0.1 an
+# 8-core suite ran 53.06 s against 49.74 s at 32 cores, and a chain
+# record from it would shift every later delta.
+RECORD_CPUS = 32
+
+
+def _local_record_name(round_n: int, cpus: int, noisy_box: bool,
+                       have_record: bool) -> str:
+    """File name of this run's full record: the round's chain record, its
+    ``_noisy`` sibling when a noisy re-run must not clobber a quiet
+    record, or a ``_cN`` file for a run at another core count."""
+    name = f"BENCH_LOCAL_r{round_n:02d}"
+    if cpus != RECORD_CPUS:
+        return f"{name}_c{cpus}.json"
+    if noisy_box and have_record:
+        return f"{name}_noisy.json"
+    return f"{name}.json"
+
 
 def _is_noisy_box(*ratios: "float | None") -> bool:
     """True when any normalization ratio strays outside the symmetric
@@ -369,6 +390,7 @@ def main() -> None:
     load_start = os.getloadavg()
     spark = get_spark("bench", freeze_gc=True)
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     # Warm the JVM/parquet-datasource path outside measurement.
     try:
@@ -420,7 +442,12 @@ def main() -> None:
         "env": {
             "spark_version": spark.version,
             "python": sys.version.split()[0],
-            "cpus": os.cpu_count(),
+            # the effective core count, not os.cpu_count(): an 8-core
+            # run on a 32-core box once labelled itself cpus: 32
+            "cpus": cpus,
+            "master": spark.sparkContext.master,
+            "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+            "sf_dir": SF_DIR,
             "load_1m_start": round(load_start[0], 2),
             "load_1m_end": round(os.getloadavg()[0], 2),
             "passes": list(PASS_RUNS),
@@ -537,18 +564,24 @@ def main() -> None:
     # driver's end-of-round re-run has overwritten the committed record
     # with a noisy one (VERDICT r12 #4, r13 #2). Noisy re-runs go to a
     # suffixed ``_noisy`` file so the evidence is kept without breaking
-    # the delta chain.
+    # the delta chain. A run at a core count other than RECORD_CPUS goes
+    # to a ``_cN`` file and never enters the chain.
     try:
         this_round = (_round_num(prior[-1]) if prior else 0) + 1
         here = os.path.dirname(os.path.abspath(__file__))
-        local = os.path.join(here, f"BENCH_LOCAL_r{this_round:02d}.json")
         noisy_box = _is_noisy_box(
             record.get("env_ratio"), record.get("canary_ratio")
         )
-        if noisy_box and os.path.exists(local):
-            local = os.path.join(
-                here, f"BENCH_LOCAL_r{this_round:02d}_noisy.json"
-            )
+        have_record = os.path.exists(
+            os.path.join(here, f"BENCH_LOCAL_r{this_round:02d}.json")
+        )
+        local = os.path.join(
+            here, _local_record_name(this_round, cpus, noisy_box, have_record)
+        )
+        if cpus != RECORD_CPUS:
+            print(f"bench: {cpus}-core run kept out of the round chain",
+                  file=sys.stderr)
+        elif noisy_box and have_record:
             print(
                 "bench: noisy box (ratio > "
                 f"{NOISY_RATIO_CEIL}); keeping existing round record, "
@@ -593,6 +626,8 @@ def _compact_marker(record: dict, max_len: int = 1800) -> str:
         "value": round(record.get("value", 0.0), 2),
         "unit": record.get("unit"),
         "sf": record.get("sf"),
+        "cpus": (record.get("env") or {}).get("cpus"),
+        "master": (record.get("env") or {}).get("master"),
     }
     if record.get("noisy_first_write"):
         base["noisy_first_write"] = True

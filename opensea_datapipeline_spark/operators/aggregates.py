@@ -848,9 +848,13 @@ def heavy_hitters(
     )
     _report(certified)
     if certified:
+        # imported here: the functions package imports pandas, which the
+        # batch pipeline (this module's main importer) does not need
+        from ..functions.literals import local_frame
+
         out_schema = T.StructType(
             [T.StructField(field.name, field.dataType, True),
              T.StructField("n_rows", T.LongType(), False)]
         )
-        return spark.createDataFrame(verified, schema=out_schema)
+        return local_frame(spark, verified, out_schema)
     return exact_all

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.literals import local_frame
 from ..functions.vector import cosine_similarity_arrow
 
 
@@ -267,7 +268,8 @@ def build_ivf_index(
         assignments = model.transform(ml_df).select(
             "id", "vec", F.col("prediction").alias("list_id")
         )
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [
                 (i, [float(x) for x in c])
                 for i, c in enumerate(model.clusterCenters())
@@ -284,7 +286,8 @@ def build_ivf_index(
             .repartition(spark.sparkContext.defaultParallelism)
         )
         model = KMeans(k=n_lists, seed=seed).fit(train)
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [
                 (i, [float(x) for x in c])
                 for i, c in enumerate(model.clusterCenters())
@@ -621,7 +624,7 @@ def _write_meta(spark: SparkSession, path: str, row: dict) -> None:
         "n_appended": None,
     }
     full.update(row)
-    spark.createDataFrame([tuple(full.values())], _META_SCHEMA).toDF(
+    local_frame(spark, [tuple(full.values())], _META_SCHEMA).toDF(
         *full.keys()
     ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
 
@@ -992,7 +995,8 @@ def build_pq_index(
     codes = _pq_encode(clean, books)
     if materialize:
         codes = codes.localCheckpoint(eager=True)
-    codebooks = spark.createDataFrame(
+    codebooks = local_frame(
+        spark,
         [
             (s, c, [float(x) for x in books[s, c]])
             for s in range(m)
@@ -1055,7 +1059,8 @@ def pq_probe(
             "split the batch or raise the cap deliberately"
         )
     if not q_rows:  # empty batch → empty result, not a numpy stack error
-        return index.codes.sparkSession.createDataFrame(
+        return local_frame(
+            index.codes.sparkSession,
             [],
             f"query_id {_sql_type(queries, id_col)}, "
             f"neighbor_id {_sql_type(index.codes, 'id')}, sim DOUBLE, "
@@ -1334,7 +1339,8 @@ def build_ivfpq_index(
     codes = _pq_encode_residual(ivf.assignments, books, C, cids)
     if materialize:
         codes = codes.localCheckpoint(eager=True)
-    codebooks = spark.createDataFrame(
+    codebooks = local_frame(
+        spark,
         [
             (s, c, [float(x) for x in books[s, c]])
             for s in range(m)
@@ -1407,7 +1413,8 @@ def ivfpq_probe(
             "split the batch or raise the cap deliberately"
         )
     if not q_rows:  # empty batch → empty result, not a numpy stack error
-        return index.codes.sparkSession.createDataFrame(
+        return local_frame(
+            index.codes.sparkSession,
             [],
             f"query_id {_sql_type(queries, id_col)}, "
             f"neighbor_id {_sql_type(index.codes, 'id')}, sim DOUBLE, "

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.literals import local_frame
+
 
 def pagerank(
     edges: DataFrame,
@@ -383,8 +385,10 @@ def label_propagation(
                     )
                     for n in node_set
                 }
-            return e.sparkSession.createDataFrame(
-                list(labels.items()), e.select("src", "dst").schema
+            return local_frame(
+                e.sparkSession,
+                list(labels.items()),
+                e.select("src", "dst").schema,
             ).toDF("node", "community")
     if undirected:
         # after symmetrization every node appears as a src — skip the

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.literals import local_frame
+
 # Per-language stopword profiles (~100 function words each, snowball-style
 # lists — public knowledge) for the stopword-hit language heuristic. Only
 # whitespace-tokenized languages are profiled here: a whitespace split
@@ -1396,38 +1398,23 @@ def bpe_train(
     state = _bpe_word_freq(docs, text_col, marker).select(
         _bpe_render_word(F.col("w"), marker).alias("s"), "cnt"
     )
-    # lazy pin (r17, the r16 CC-gate job-floor trim): the gate probe
-    # below is the first job to touch state and, on the gated path, the
-    # only one — a LIMIT that comes back short exhausted its input, so
-    # the probe DECIDES and DELIVERS in one job where the old flow paid
-    # three (eager-pin + count + collect). Computed partitions cache as
-    # they materialize, so the distributed loop's iterations re-read
-    # them instead of replaying the corpus pass.
-    state = state.localCheckpoint(eager=False)
-    mschema = (
-        "merge_rank long, left_sym string, right_sym string,"
-        " merged string, n long"
-    )
+    # the gate probe runs on the UNPINNED state (the r16 CC-gate
+    # job-floor trim): a LIMIT that comes back short exhausted its
+    # input, so on the gated path the probe DECIDES and DELIVERS in one
+    # job. Any pin before it costs the gated path a job that
+    # materialises state it never reads again (a lazy pin's completion
+    # job). Only the distributed path pins, eagerly, before its
+    # per-merge loop; that pin re-runs the word-count pass the probe
+    # ran, once per training.
     probe = (
         state.limit(driver_gate + 1).collect() if driver_gate > 0 else None
     )
     if probe is not None and len(probe) <= driver_gate:
         rows = [(r["s"], r["cnt"]) for r in probe]
-        mrows = _bpe_train_driver_loop(rows, n_merges, min_count)
-        mdf = spark.createDataFrame(mrows, mschema)
-        # rows already live on the driver — let bpe_encode skip the
-        # py4j collect round-trip (see the _bpe_local_rows note there)
-        mdf._bpe_local_rows = [
-            {
-                "merge_rank": m[0],
-                "left_sym": m[1],
-                "right_sym": m[2],
-                "merged": m[3],
-                "n": m[4],
-            }
-            for m in mrows
-        ]
-        return mdf
+        return _bpe_merge_frame(
+            spark, _bpe_train_driver_loop(rows, n_merges, min_count)
+        )
+    state = state.localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, str, int]] = []
     for k in range(1, n_merges + 1):
         pairs = (
@@ -1463,18 +1450,7 @@ def bpe_train(
             # release the superseded checkpoint's blocks now (pagerank
             # discipline: late iterations otherwise pay 2x)
             gc.collect()
-    mdf = spark.createDataFrame(merges, mschema)
-    mdf._bpe_local_rows = [
-        {
-            "merge_rank": m[0],
-            "left_sym": m[1],
-            "right_sym": m[2],
-            "merged": m[3],
-            "n": m[4],
-        }
-        for m in merges
-    ]
-    return mdf
+    return _bpe_merge_frame(spark, merges)
 
 
 def bpe_apply_merges(
@@ -1662,8 +1638,10 @@ def bpe_apply_merges_fold(
         )
         for m in merge_rows
     ]
-    marr = words.sparkSession.createDataFrame(
-        [(pairs,)], "_marr array<struct<f:string,r:string>>"
+    marr = local_frame(
+        words.sparkSession,
+        [(pairs,)],
+        "_marr array<struct<f:string,r:string>>",
     )
     rendered = words.select(
         word_col, _bpe_render_word(F.col(word_col), marker).alias("_s")
@@ -1935,8 +1913,8 @@ def bpe_encode(
     n_alpha = len(vocab_ids)
     for m in merge_rows:
         vocab_ids.setdefault(m["merged"], n_alpha + int(m["merge_rank"]) - 1)
-    vocab = docs.sparkSession.createDataFrame(
-        list(vocab_ids.items()), "sym string, id long"
+    vocab = local_frame(
+        docs.sparkSession, list(vocab_ids.items()), "sym string, id long"
     )
     wid = (
         seg.select("w", F.posexplode("syms").alias("spos", "sym"))
@@ -2064,19 +2042,12 @@ def bpe_grid_merge_table(
     (merge_rank, left_sym, right_sym, merged, n) with n = 0 (no
     training count exists for a constructed merge).
     """
-    spark = docs.sparkSession
-    schema = (
-        "merge_rank long, left_sym string, right_sym string,"
-        " merged string, n long"
-    )
     alpha = sorted(
         r["sym"]
         for r in bpe_alphabet(
             docs, text_col=text_col, marker=marker
         ).collect()
     )
-    if not alpha:
-        return spark.createDataFrame([], schema)
     rows: list[tuple[int, str, str, str, int]] = []
     rank = 0
     for s1 in alpha:
@@ -2099,20 +2070,7 @@ def bpe_grid_merge_table(
                     break
             if rank >= max_merges:
                 break
-    mt = spark.createDataFrame(rows, schema)
-    # the rows already live on the driver — let bpe_encode skip the
-    # py4j collect round-trip (see the _bpe_local_rows note there)
-    mt._bpe_local_rows = [
-        {
-            "merge_rank": r[0],
-            "left_sym": r[1],
-            "right_sym": r[2],
-            "merged": r[3],
-            "n": r[4],
-        }
-        for r in rows
-    ]
-    return mt
+    return _bpe_merge_frame(docs.sparkSession, rows)
 
 
 # Fingerprint format version written to artifact meta. v1 (pre-r13,
@@ -2197,7 +2155,8 @@ def bpe_write_tokenizer(
     alphabet.select("sym").coalesce(1).write.mode("overwrite").parquet(
         path + "/alphabet"
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(marker, n_merges, alphabet_size, content_hash, _BPE_FP_VERSION)],
         "marker string, n_merges long, alphabet_size long,"
         " content_hash string, fp_version long",
@@ -2213,6 +2172,17 @@ _BPE_MERGES_SCHEMA = (
 _BPE_MERGES_COLS = [f.split()[0] for f in _BPE_MERGES_SCHEMA.split(", ")]
 
 
+def _bpe_merge_frame(
+    spark, rows: "list[tuple[int, str, str, str, int]]"
+) -> DataFrame:
+    """A merge table over driver-side rows, tagged with those rows as
+    ``_bpe_local_rows`` so ``bpe_encode`` skips its py4j collect (see
+    the note there)."""
+    mdf = local_frame(spark, rows, _BPE_MERGES_SCHEMA)
+    mdf._bpe_local_rows = [dict(zip(_BPE_MERGES_COLS, r)) for r in rows]
+    return mdf
+
+
 def _bpe_read_tokenizer_local(path: str) -> "tuple[list, list, dict] | None":
     """Driver-side read of the tokenizer artifact's ROWS (the ann_index
     ``_bounded_rows`` economics, guide §5): all three tables are
@@ -2225,11 +2195,9 @@ def _bpe_read_tokenizer_local(path: str) -> "tuple[list, list, dict] | None":
     back to the Spark reads — for non-local URIs, unreadable/garbled
     files, or a non-canonical column layout.
 
-    Deliberately NOT used to build the returned DataFrames:
-    ``spark.createDataFrame(rows)`` plans an RDD-backed relation whose
-    every job pays a Python-worker round trip — measured 0.75 s for
-    the two fingerprint aggregates vs 0.22 s over the parquet scans.
-    The parquet-backed frames stay; only the driver-side row copies
+    Not used to build the returned DataFrames: they stay parquet-backed,
+    so the integrity check fingerprints the tables Spark reads rather
+    than a driver copy of them, and only the driver-side row copies
     ride along as ``_bpe_local_rows`` / ``_bpe_local_syms`` tags (same
     files, same rows — the artifact is immutable once fingerprinted)."""
     import os

@@ -8,7 +8,18 @@ stay correct.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def jobs_submitted(spark: SparkSession) -> int:
+    """Spark jobs submitted so far in this context: the newest job id +
+    1, read after the listener bus drains. The status store is fed
+    asynchronously and keeps only the last ``spark.ui.retainedJobs``
+    jobs, so neither an undrained read nor its size is a counter."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
 
 
 def executed_plan(df: DataFrame) -> str:

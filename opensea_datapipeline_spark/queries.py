@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.literals import local_frame
 from .operators import aggregates as agg
 from .operators import dedup as dd
 from .operators import graph as gr
@@ -679,7 +680,8 @@ GROUP BY 1
 def q_events_regime_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     # J6 interval join — regime labeling (prepare_visual_market_data.py:197-246)
     events = _t(spark, sf_dir, "events").withColumn("d", F.to_date("ts"))
-    regimes = spark.createDataFrame(
+    regimes = local_frame(
+        spark,
         [("2024-01-01", "2024-01-10", "early"),
          ("2024-01-11", "2024-01-20", "mid"),
          ("2024-01-21", "2025-12-31", "late")],
@@ -8638,8 +8640,10 @@ def q_kl_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     n = sum(r["n_s"] for r in src_rows)
-    src_tot = spark.createDataFrame(
-        [(r["source"], r["n_s"]) for r in src_rows], "source string, n_s long"
+    src_tot = local_frame(
+        spark,
+        [(r["source"], r["n_s"]) for r in src_rows],
+        "source string, n_s long",
     )
     cc = F.sum("c").over(Window.partitionBy("tok"))
     p_s = F.col("c").cast("double") / F.col("n_s")

@@ -58,6 +58,20 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # SPARK_GRAFT_OBJ_AGG_FALLBACK on memory-tight clusters.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold":
         os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"),
+    # No per-call origin capture. With this on (PySpark's default), every
+    # wrapped API call (F.*, Column, DataFrame methods) also pays a
+    # getActiveSession and a conf.get round trip, the PySparkCurrentOrigin
+    # lookup/set/clear round trips, a Python stack walk and a failing
+    # `import IPython` that rescans sys.path. py4j round trips per
+    # perfbench op (all threads, seed 1), on → off: curation_small
+    # ~3050 → ~1190, etl_batch ~2880 → ~1440, stream_rounds ~1600 →
+    # ~1000. What is lost: the "== DataFrame == "x" was called from"
+    # block of an error names a JVM frame instead of the Python
+    # file:line. What stays: job names keep the Python call site
+    # (`collect at file.py:NN`), and errors keep their error class,
+    # SQLSTATE and plan fragment. A static conf: it takes effect only
+    # in a session this builder creates.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local-mode shuffle sizing; AQE coalesces down when partitions are tiny.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     # Quieter local runs.

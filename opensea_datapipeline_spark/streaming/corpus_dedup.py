@@ -57,6 +57,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.literals import local_frame
 from ..operators import dedup as dd
 from .lifecycle import (
     VersionedState,
@@ -493,7 +494,8 @@ def run_streaming_corpus_dedup(
         from pyspark.sql import types as T
 
         idf = schema[id_col]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             T.StructType([
                 T.StructField("id", idf.dataType, True),

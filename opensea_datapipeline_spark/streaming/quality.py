@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.literals import local_frame
 from ..operators.aggregates import population_stability
 from ..sources.readers import ensure_reader_confs
 
@@ -75,7 +76,8 @@ def run_streaming_psi_monitor(
         row = psi_against_reference(
             batch_df, reference, value_col, bucket_width, max_bucket
         ).first()
-        batch_df.sparkSession.createDataFrame(
+        local_frame(
+            batch_df.sparkSession,
             [(int(batch_id), row.n_rows, float(row.psi_total))],
             "batch_id LONG, n_rows LONG, psi_total DOUBLE",
         ).write.mode("append").parquet(monitor_path)

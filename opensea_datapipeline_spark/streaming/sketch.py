@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import local_frame
 from ..operators.sketches import _HEX15_SPAN, _h15
 from .lifecycle import VersionedState, run_available_now
 
@@ -93,8 +94,8 @@ def run_streaming_kmv(
     )
     final = state.read(spark)
     if final is None:  # no batches ever merged
-        final = spark.createDataFrame(
-            [], T.StructType([T.StructField("h", T.LongType())])
+        final = local_frame(
+            spark, [], T.StructType([T.StructField("h", T.LongType())])
         )
     kth = final.agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
@@ -163,7 +164,8 @@ def run_streaming_ddsketch(
     )
     final = state.read(spark)
     if final is None:  # no batches ever merged
-        final = spark.createDataFrame(
+        final = local_frame(
+            spark,
             [],
             T.StructType(
                 [

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import local_frame
 from ..sources.readers import load_parquet_footer_schema
 from .lifecycle import VersionedState, run_available_now
 
@@ -174,6 +175,6 @@ def run_streaming_topk(
                 T.StructField("eps", T.LongType(), False),
             ]
         )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     eps = int(state.committed().get("eps", 0))
     return final.withColumn("eps", F.lit(eps).cast("long"))

@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from opensea_datapipeline_spark.plans.inspect import jobs_submitted
 from opensea_datapipeline_spark.queries import QUERIES
 from opensea_datapipeline_spark.session import get_spark
 
@@ -34,18 +35,15 @@ def main() -> None:
     sc.setLogLevel("ERROR")
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()  # warm
 
-    def n_jobs() -> int:
-        return sc._jsc.sc().statusStore().jobsList(None).size()
-
     out = []
     for name in names:
         fn = QUERIES[name]
         fn(spark, SF_DIR).collect()  # warm (artifact fixtures, JIT)
-        j0 = n_jobs()
+        j0 = jobs_submitted(spark)
         t0 = time.perf_counter()
         fn(spark, SF_DIR).collect()
         wall = time.perf_counter() - t0
-        out.append((name, round(wall, 3), n_jobs() - j0))
+        out.append((name, round(wall, 3), jobs_submitted(spark) - j0))
         print(f"{out[-1][0]}: wall={out[-1][1]} jobs={out[-1][2]}", flush=True)
     print("--- sorted by jobs ---")
     for name, wall, jobs in sorted(out, key=lambda x: -x[2]):

@@ -25,17 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from opensea_datapipeline_spark.plans.inspect import jobs_submitted  # noqa: E402
 from opensea_datapipeline_spark.session import get_spark  # noqa: E402
-
-
-def _n_jobs(sc) -> int:
-    """Jobs submitted so far: the newest job id + 1 (the status store
-    keeps only the last ``spark.ui.retainedJobs`` jobs, so its size is
-    not a counter)."""
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)  # newest first
-    return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
 
 
 def main() -> None:
@@ -126,12 +117,12 @@ def main() -> None:
         ("gold_daily", gold_loop),
         ("corpus_dedup", dedup_loop),
     ]:
-        j0 = _n_jobs(sc)
+        j0 = jobs_submitted(spark)
         loop(2)
-        j2 = _n_jobs(sc) - j0
-        j0 = _n_jobs(sc)
+        j2 = jobs_submitted(spark) - j0
+        j0 = jobs_submitted(spark)
         loop(4)
-        j4 = _n_jobs(sc) - j0
+        j4 = jobs_submitted(spark) - j0
         out[name] = {
             "jobs_2b": j2,
             "jobs_4b": j4,

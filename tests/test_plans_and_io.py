@@ -11,8 +11,13 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from opensea_datapipeline_spark.functions.literals import local_frame
+from opensea_datapipeline_spark.plans.inspect import jobs_submitted
 from opensea_datapipeline_spark.queries import QUERIES
 from opensea_datapipeline_spark.sources.readers import (
     load_parquet_partitioned,
@@ -89,6 +94,57 @@ def test_dedup_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "LessThan(doc_id,200)" in _plan(df).replace(" ", "")
 
 
+def test_dedup_groups_plans_no_python_rdd(spark, sf_dir):
+    # The union-find map re-enters the plan as a LocalRelation. A frame
+    # over a pickled Python RDD (LogicalRDD) makes every job that scans
+    # it run Python-worker tasks.
+    plan = _optimized(QUERIES["dedup_groups"](spark, sf_dir))
+    assert "LogicalRDD" not in plan, plan
+    assert "LocalRelation" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1, 2), (3, 1), (2, 2)], "src long, dst long"),
+        ([("2024-01-01", "2024-01-10", "early")],
+         "start_s STRING, end_s STRING, regime STRING"),
+        ([([(" a_ b_", " ab_"), ("x", None)],)],
+         "_marr array<struct<f:string,r:string>>"),
+        ([(0, [1.0, -2.5]), (1, [])], "list_id INT, centroid ARRAY<DOUBLE>"),
+        ([("ivf", None, 3, 8, 7, 4, "id", "vec", True, 0, 100, None)],
+         "kind STRING, n_planes INT, n_tables INT, dim INT, seed INT, "
+         "n_lists INT, id_col STRING, vec_col STRING, residual BOOLEAN, "
+         "n_appends INT, n_base BIGINT, n_appended BIGINT"),
+        ([], "merge_rank long, left_sym string, right_sym string,"
+             " merged string, n long"),
+        ([Row(k="a", n_rows=3), Row(k=None, n_rows=1)],
+         T.StructType([T.StructField("k", T.StringType(), True),
+                       T.StructField("n_rows", T.LongType(), False)])),
+    ],
+)
+def test_local_frame_is_a_local_relation(spark, rows, schema):
+    df = local_frame(spark, rows, schema)
+    assert _optimized(df).startswith("LocalRelation"), _optimized(df)
+    want = schema if isinstance(schema, T.StructType) else (
+        T._parse_datatype_string(schema)
+    )
+    assert df.schema.simpleString() == want.simpleString()
+    assert [tuple(r) for r in df.collect()] == [tuple(r) for r in rows]
+
+
+def test_get_spark_session_skips_origin_capture(spark):
+    # Per-call origin capture costs each wrapped API call several py4j
+    # round trips; the engine session turns it off.
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
+    assert is_debugging_enabled() is False
+
+
 def test_streaming_state_loops_job_ceiling(spark, tmp_path):
     # Spark jobs per call of the versioned-state loops once they restart
     # from a checkpoint with one new file: the source schema, the merge
@@ -100,13 +156,6 @@ def test_streaming_state_loops_job_ceiling(spark, tmp_path):
     )
     from opensea_datapipeline_spark.streaming.sketch import run_streaming_kmv
     from opensea_datapipeline_spark.streaming.topk import run_streaming_topk
-
-    sc = spark.sparkContext._jsc.sc()
-
-    def newest_job() -> int:
-        sc.listenerBus().waitUntilEmpty()
-        jobs = sc.statusStore().jobsList(None)  # newest first
-        return jobs.head().jobId() if jobs.nonEmpty() else -1
 
     loops = {
         "topk": run_streaming_topk,
@@ -125,11 +174,11 @@ def test_streaming_state_loops_job_ceiling(spark, tmp_path):
             "append"
         ).parquet(src)
         for name, run in loops.items():
-            before = newest_job()
+            before = jobs_submitted(spark)
             run(spark, src, str(tmp_path / f"{name}_state"),
                 str(tmp_path / f"{name}_ckpt"))
             if rnd:  # the first round starts each query fresh
-                jobs[name, rnd] = newest_job() - before
+                jobs[name, rnd] = jobs_submitted(spark) - before
     assert all(0 < n <= 4 for n in jobs.values()), jobs
 
 

@@ -38,6 +38,20 @@ def test_bench_band_absolute_floor():
     assert bench._band_floor(3.2) == 0.05
 
 
+def test_bench_other_core_counts_stay_out_of_the_round_chain():
+    # A run at another effective core count lands in a _cN file, noisy or
+    # not; only RECORD_CPUS runs write (or, when noisy, sit beside) the
+    # chain record that _local_queries reads back.
+    import bench
+
+    n = bench.RECORD_CPUS
+    assert bench._local_record_name(18, n, False, True) == "BENCH_LOCAL_r18.json"
+    assert bench._local_record_name(18, n, True, False) == "BENCH_LOCAL_r18.json"
+    assert bench._local_record_name(18, n, True, True) == "BENCH_LOCAL_r18_noisy.json"
+    assert bench._local_record_name(18, 8, False, False) == "BENCH_LOCAL_r18_c8.json"
+    assert bench._local_record_name(18, 8, True, True) == "BENCH_LOCAL_r18_c8.json"
+
+
 # ---------------------------------------------------------------------------
 # tokenizer meta re-stamp on first verified read (ADVICE r14 #4)
 # ---------------------------------------------------------------------------
