@@ -101,9 +101,6 @@ def main(argv: list[str] | None = None) -> int:
                      help="boundary marker char (SentencePiece-style; "
                           "required at train time for decode to invert "
                           "encode)")
-    p_t.add_argument("--stage-size", type=int, default=256,
-                     help="encode: merges per checkpointed segmentation "
-                          "stage (auto applier)")
     p_t.add_argument("--out", help="output parquet (default: show)")
 
     p_m = sub.add_parser(
@@ -342,7 +339,6 @@ def main(argv: list[str] | None = None) -> int:
                     spark.read.parquet(args.docs), merges,
                     id_col=args.id_col, text_col=args.text_col,
                     alphabet=alpha, marker=marker,
-                    stage_size=args.stage_size,
                 )
             else:  # decode
                 if not args.encoded:

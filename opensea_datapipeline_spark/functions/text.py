@@ -25,8 +25,23 @@ def shorten_address(col: Column | str, head: int = 6, tail: int = 4) -> Column:
     )
 
 
-def normalize_whitespace(col: Column | str) -> Column:
-    """Lowercase + collapse whitespace + trim — the shared normalization
-    of every text-dedup path (`operators.dedup._norm_text`)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+def normalize_whitespace(col: str) -> Column:
+    """Lowercase + collapse whitespace + trim: the text normalization
+    every dedup, tokenizer and text-scoring path shares (the DuckDB
+    oracles spell it ``trim(regexp_replace(lower(text), '\\s+', ' ',
+    'g'))``). Built as one ``F.expr`` string over the column name: one
+    py4j call where the Column-call chain paid one per function, with
+    the same analyzed plan."""
+    return F.expr(_normalized_sql(col))
+
+
+def split_words(col: str) -> Column:
+    """Whitespace words of the normalized text (``normalize_whitespace``
+    then split on ' '); one ``F.expr`` string, same plan as the
+    Column-call chain."""
+    return F.expr(f"split({_normalized_sql(col)}, ' ')")
+
+
+def _normalized_sql(col: str) -> str:
+    name = col.replace("`", "``")
+    return f"trim(regexp_replace(lower(`{name}`), '\\\\s+', ' '))"

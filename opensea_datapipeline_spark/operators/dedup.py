@@ -35,16 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.literals import local_frame
+from ..functions.text import normalize_whitespace, split_words
 from ..functions.vector import cosine_similarity
-
-# Normalization shared by all text-dedup paths: lowercase, collapse
-# whitespace, trim. Mirrors standard LLM-corpus dedup preprocessing.
-def _norm_text(col: str) -> F.Column:
-    return F.trim(F.regexp_replace(F.lower(F.col(col)), r"\s+", " "))
-
-
-def _words(col: str) -> F.Column:
-    return F.split(_norm_text(col), " ")
 
 
 def dedup_by_key(
@@ -67,7 +59,7 @@ def exact_dedup(
 ) -> DataFrame:
     """Exact content dedup: md5 digest of normalized text, keep the lowest
     id per digest. One hash-shuffle; survivors carry group size."""
-    digest = F.md5(_norm_text(text_col)).alias("content_hash")
+    digest = F.md5(normalize_whitespace(text_col)).alias("content_hash")
     w = Window.partitionBy("content_hash").orderBy(id_col)
     return (
         df.select(F.col(id_col), F.col(text_col), digest)
@@ -123,7 +115,7 @@ def minhash_signatures(
     ) + ")"
     return (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.array_distinct(_words(text_col)).alias("_wa"))
+        .select(F.col(id_col), F.array_distinct(split_words(text_col)).alias("_wa"))
         .select(
             F.col(id_col),
             F.expr(f"aggregate(_wa, {init}, (acc, s) -> {merge})").alias("_sigs"),
@@ -213,7 +205,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     docs = df.select(
-        F.col(id_col), F.array_distinct(_words(text_col)).alias("wordset")
+        F.col(id_col), F.array_distinct(split_words(text_col)).alias("wordset")
     )
     verified = (
         cand.join(docs.select(F.col(id_col).alias("id_a"), F.col("wordset").alias("wa")), "id_a")
@@ -306,7 +298,7 @@ def minhash_lsh_pairs_incremental(
     # candidate touches them (semi-join first => candidate-pruned scan)
     new_ws = new_docs.select(
         F.col(id_col).alias("_id"),
-        F.array_distinct(_words(text_col)).alias("wordset"),
+        F.array_distinct(split_words(text_col)).alias("wordset"),
     )
     # no distinct on the id stream: left_semi dedups its build side by
     # construction, so the distinct bought nothing but a full exchange +
@@ -322,7 +314,7 @@ def minhash_lsh_pairs_incremental(
         )
         .select(
             F.col(id_col).alias("_id"),
-            F.array_distinct(_words(text_col)).alias("wordset"),
+            F.array_distinct(split_words(text_col)).alias("wordset"),
         )
     )
     # same duplication argument for the wordsets: ws is joined on both
@@ -867,7 +859,7 @@ def simhash_signatures(
     sums = (
         df.filter(F.col(text_col).isNotNull())
         .select(
-            F.col(id_col), F.array_distinct(_words(text_col)).alias("_wa")
+            F.col(id_col), F.array_distinct(split_words(text_col)).alias("_wa")
         )
         .select(
             F.col(id_col),

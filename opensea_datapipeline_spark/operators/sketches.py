@@ -518,8 +518,7 @@ def dd_collapse_buckets(
     if max_buckets < 1:
         # a cut below 1 keeps NO ranked bucket: every row would map to
         # the null _cut and the whole state would silently collapse
-        # into one null-keyed bucket (garbage quantiles downstream) —
-        # same guard discipline as bpe_apply_merges_staged's stage_size
+        # into one null-keyed bucket (garbage quantiles downstream)
         raise ValueError(f"max_buckets must be >= 1, got {max_buckets}")
     gcols = list(group_cols or [])
     w = (

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.literals import local_frame
+from ..functions.text import normalize_whitespace, split_words
 
 # Per-language stopword profiles (~100 function words each, snowball-style
 # lists — public knowledge) for the stopword-hit language heuristic. Only
@@ -119,10 +120,6 @@ LANG_PROFILES: dict[str, list[str]] = {
 }
 
 
-def _words(text_col: str) -> F.Column:
-    return F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
-
-
 def _lit_str_array(words) -> F.Column:
     """Literal string array as ONE py4j literal + split (constant-folded
     to the array by Catalyst). Per-element `F.lit` — or `F.lit(list)`,
@@ -156,7 +153,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     """Token counting: whitespace tokens, distinct tokens, a BPE-ish
     subword estimate (word-chunks of ≤4 chars — ceil(len/4) per word), and
     char length."""
-    words = _words(text_col)
+    words = split_words(text_col)
     return df.select(
         F.col(id_col),
         F.length(F.col(text_col)).alias("n_chars_measured"),
@@ -174,7 +171,7 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     """Quality scoring: length, mean word length, punctuation density,
     stopword ratio, uppercase ratio — the standard cheap quality gates in
     LLM-corpus pipelines."""
-    words = _words(text_col)
+    words = split_words(text_col)
     n_words = F.size(words)
     en_stop = _lit_str_array(LANG_PROFILES["en"])
     return df.select(
@@ -224,7 +221,7 @@ def language_id(
     # coalesce: NULL text must yield zero scores, not NULL ones (the old
     # explode_outer path kept such docs as all-zero rows)
     candidates = F.coalesce(
-        F.array_distinct(_words(text_col)), F.array()
+        F.array_distinct(split_words(text_col)), F.array()
     )
     scored = df.select(
         F.col(id_col),
@@ -353,7 +350,7 @@ def language_id_cjk(
         F.col(id_col), F.col(text_col),
         cjk_char_array(text_col).alias("_cjk_chars"),
     )
-    words = F.coalesce(F.array_distinct(_words(text_col)), F.array())
+    words = F.coalesce(F.array_distinct(split_words(text_col)), F.array())
     bigrams = F.coalesce(cjk_char_bigrams("_cjk_chars"), F.array())
     scores = []
     for lang in langs:
@@ -393,7 +390,7 @@ def document_fingerprints(
     ``sum_i (i+1) * (7*len(w_i) + ascii(w_i)) mod 2^31-1``. Order-aware
     (unlike a bag-of-words hash) yet commutative in aggregation, so it
     computes as an embarrassingly parallel sum in any engine."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = normalize_whitespace(text_col)
     words = F.split(norm, " ")
     mod = 2147483647
     weighted = F.transform(
@@ -534,7 +531,7 @@ def chunk_documents(
     fan out on executors, one row per (doc, chunk), no Python.
     """
     stride = chunk_size - overlap
-    words = _words(text_col)
+    words = split_words(text_col)
     n = F.size(words)
     n_chunks = F.greatest(
         F.lit(1), F.ceil((n - F.lit(overlap)) / F.lit(float(stride))).cast("int")
@@ -645,7 +642,7 @@ def repetition_scores(
     # explode-index+slice, not the _word_ngrams transform lambda:
     # higher-order functions are interpreted, not codegen (measured
     # 3.7x on the contamination gram pass, r10)
-    words = _words(text_col)
+    words = split_words(text_col)
     idx = F.sequence(F.lit(1), F.size("_ws") - (n - 1))
     exploded = (
         df.withColumn("_ws", words)
@@ -675,7 +672,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    words = df.select(F.col(id_col), F.explode(_words(text_col)).alias("term"))
+    words = df.select(F.col(id_col), F.explode(split_words(text_col)).alias("term"))
     tf = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -731,7 +728,7 @@ def contamination_flags(
     """
 
     def grams(df: DataFrame, out_id: str) -> DataFrame:
-        ws = _words(text_col)
+        ws = split_words(text_col)
         idx = F.sequence(F.lit(1), F.size(ws) - (n - 1))
         return (
             df.withColumn("_ws", ws)
@@ -774,11 +771,11 @@ def gopher_quality_flags(
     stop-word rule — plus the combined keep decision. One projection +
     map-side expressions, no shuffle; every rule is portable ANSI SQL for
     the oracle."""
-    words = _words(text_col)
+    words = split_words(text_col)
     n_words = F.size(words)
     norm_len = F.length(
         F.regexp_replace(
-            F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
+            normalize_whitespace(text_col),
             " ", "",
         )
     )
@@ -1248,7 +1245,7 @@ def bpe_pair_counts(
 
 
 # BPE symbol-string encoding: each symbol rendered as ' ' + sym + US.
-# Space marks the symbol START (symbols are space-free by the _words
+# Space marks the symbol START (symbols are space-free by the split_words
 # contract), US marks its END — so the literal pattern ' l<US> r<US>'
 # can only match a genuine adjacent symbol pair (never the tail of a
 # longer symbol, never a prefix: the US terminator pins r's end), and
@@ -1300,7 +1297,7 @@ def _bpe_word_freq(
         keep = keep & (~F.col("w").contains(marker))
     return (
         docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(_words(text_col)).alias("w"))
+        .select(F.explode(split_words(text_col)).alias("w"))
         .filter(keep)
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1361,7 +1358,7 @@ def bpe_train(
     ``bpe_pair_counts`` mines ONE round of candidates; this applies the
     top merge and re-counts N times — the loop a real tokenizer
     pipeline runs. Default has no boundary symbol (GPT-style word
-    pretokenization via _words; words never merge across boundaries);
+    pretokenization via split_words; words never merge across boundaries);
     pass ``marker`` (a reserved char) for the SentencePiece-style
     word-start symbol that makes ``bpe_decode`` a lossless inverse.
 
@@ -1471,12 +1468,12 @@ def bpe_apply_merges(
     The whole chain is ONE projection of nested codegen replace()
     calls — no shuffle, no UDF — exact and cheapest at the merge-table
     sizes an in-plan trainer produces, but bounded by what Catalyst
-    can compile (~one stage's worth of replaces). The production-vocab
-    forms are ``bpe_apply_merges_staged`` (checkpointed stages, linear
-    in merges) and ``bpe_apply_merges_arrow`` (the serving seam);
-    ``bpe_encode``'s default "auto" applier routes between this and
-    staged on merge count, so no caller needs to know the ceiling.
-    Returns (word_col, syms array<string>).
+    can compile. The production-vocab forms are
+    ``bpe_apply_merges_fold`` (one constant-size runtime expression)
+    and ``bpe_apply_merges_arrow`` (the serving seam); ``bpe_encode``
+    routes between the three on merge count (``_bpe_segment``), so no
+    caller needs to know the ceiling. Returns (word_col, syms
+    array<string>).
     """
     col = _bpe_render_word(F.col(word_col), marker)
     for m in merge_rows:
@@ -1487,116 +1484,6 @@ def bpe_apply_merges(
             F.lit(" " + lft + rgt + _BPE_US),
         )
     return words.select(word_col, _bpe_parse_syms(col).alias("syms"))
-
-
-def bpe_apply_merges_staged(
-    words: DataFrame,
-    merge_rows: list,
-    *,
-    word_col: str = "w",
-    marker: str | None = None,
-    stage_size: int = 256,
-) -> DataFrame:
-    """``bpe_apply_merges`` for PRODUCTION-size merge tables (VERDICT
-    r11 #1): the single-projection form chains one codegen replace()
-    per merge, and a real pretraining vocabulary (32k merges — the
-    parameter regime of reference-class BPE tokenizers, cf.
-    `/root/reference/scripts/embeddings/generate_clip_embeddings.py`'s
-    CLIP tokenizer) would build an expression tree Catalyst cannot
-    compile. This applies the SAME ordered replaces in stages of
-    ``stage_size``, with an eager localCheckpoint between stages.
-
-    SUPERSEDED as the routed mid-band path (r16) by
-    ``bpe_apply_merges_fold``: the per-stage plan/optimize/codegen
-    cost is fixed driver overhead (~245 ms/stage measured at a 31-row
-    word table) and each inter-stage checkpoint is a full
-    materialization of the word table, while the fold applies the
-    same chain as one constant-size runtime expression. Kept as an
-    explicit ``merge_applier="staged"`` option and as the reference
-    implementation the fold is equality-tested against.
-
-    The checkpoint is load-bearing, not an optimization: Catalyst's
-    CollapseProject folds consecutive projections back into one, so a
-    lazy chain of staged selects would reconstruct exactly the
-    expression tree being avoided — only a lineage barrier keeps the
-    stages separate plans. Each stage is one pass over the DISTINCT-
-    words table (vocabulary-bounded, never the corpus), so total cost
-    is (n_merges / stage_size) passes over a bounded table — linear in
-    merges (SCALING §bpe-staged). Superseded checkpoints are released
-    per the dead-checkpoint discipline. Output is identical to
-    ``bpe_apply_merges`` by construction (same replaces, same order;
-    pinned by test + the shared graded oracle).
-
-    ``stage_size`` default is the measured optimum: a 2048-merge sweep
-    at sf0.1 read 1.34 s at 128, **1.21 s at 256**, 1.76 s at 512 and
-    2.99 s at 1024 — per-stage job latency falls with fewer stages
-    until whole-stage-codegen compilation of the deeper expression
-    grows superlinearly and dominates (SCALING §bpe-staged).
-    """
-    import gc
-
-    if stage_size < 1:
-        raise ValueError("stage_size must be >= 1")
-    cur = words.select(
-        word_col, _bpe_render_word(F.col(word_col), marker).alias("_s")
-    )
-    n = len(merge_rows)
-    for start in range(0, n, stage_size):
-        # F.expr in SHALLOW chunks, chained as consecutive selects that
-        # CollapseProject fuses back into one projection per stage: a
-        # deep nested-replace SQL string overflows the JVM thread stack
-        # in ANTLR (parserStackOverflow → FAILED_TO_PARSE_TOO_COMPLEX)
-        # NONDETERMINISTICALLY — depth 256 parsed on one thread and
-        # blew on another — so parser recursion is capped at
-        # _PARSE_CHUNK while the optimizer, whose trees are data not
-        # recursion-parsed, builds the same per-stage expression. Still
-        # one F.expr per chunk, never one F.replace per merge (the
-        # _lit_str_array py4j lesson: ~2 s of driver chatter at 2048).
-        stage = merge_rows[start : start + stage_size]
-        for cstart in range(0, len(stage), _PARSE_CHUNK):
-            cur = cur.select(
-                word_col,
-                F.expr(
-                    _bpe_replace_chain_sql(
-                        "_s", stage[cstart : cstart + _PARSE_CHUNK]
-                    )
-                ).alias("_s"),
-            )
-        if start + stage_size < n:
-            cur = cur.localCheckpoint(eager=True)
-            gc.collect()
-    return cur.select(
-        word_col, _bpe_parse_syms(F.col("_s")).alias("syms")
-    )
-
-
-# max nested replace() calls per F.expr parse: ANTLR consumes many JVM
-# stack frames per nesting level, and the available stack depends on
-# which thread parses — 256 deep worked on one call path and overflowed
-# on another. 32 keeps parser recursion ~6x below the observed flaky
-# zone while costing only ~0.1 s more than deeper chunks at depth 2048
-# (measured 16/32/64 → 1.6/1.4/1.2 s warm); CollapseProject fuses the
-# chunks so the EXECUTED plan is identical to a single deep projection.
-_PARSE_CHUNK = 32
-
-
-def _bpe_sql_str(s: str) -> str:
-    """SQL string literal (Spark default-mode backslash escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _bpe_replace_chain_sql(col_name: str, merge_rows: list) -> str:
-    """Nested replace(...) SQL expression applying ``merge_rows`` in
-    order to ``col_name`` — built as ONE expression string so plan
-    construction costs one F.expr parse instead of per-merge py4j
-    round-trips."""
-    e = col_name
-    for m in merge_rows:
-        lft, rgt = m["left_sym"], m["right_sym"]
-        find = _bpe_sql_str(" " + lft + _BPE_US + " " + rgt + _BPE_US)
-        repl = _bpe_sql_str(" " + lft + rgt + _BPE_US)
-        e = f"replace({e}, {find}, {repl})"
-    return e
 
 
 def bpe_apply_merges_fold(
@@ -1611,26 +1498,23 @@ def bpe_apply_merges_fold(
     pairs — ``aggregate(_marr, _s, (acc, m) -> replace(acc, m.f,
     m.r))`` — one constant-size projection at ANY merge depth.
 
-    This replaces ``bpe_apply_merges_staged`` as the mid-band default:
-    the staged form exists only because a 2048-deep nested replace()
-    tree cannot compile, and its per-stage plan/optimize/codegen cost
-    is FIXED driver overhead — measured 3.93 s for 16 stages over a
-    31-row word table (~245 ms/stage of pure compilation; the data
-    work is microseconds). The fold moves the merge chain from
+    It owns the JVM-only mid band. It replaced the checkpointed staged
+    applier (since deleted; SCALING §bpe-staged), whose per-stage
+    plan/optimize/codegen cost was FIXED driver overhead (~245 ms per
+    stage over a 31-row word table) plus one word-table
+    materialization per stage. The fold moves the merge chain from
     COMPILE-TIME unrolling to a RUNTIME loop over an array column:
-    plan size is constant in merge count, there are no checkpoints (the
-    staged form materializes the word table once per stage — at 32k
-    merges that is 125 extra writes of the vocabulary), and no ANTLR /
-    JVM-stack depth ceiling exists because the merge table is DATA
-    (one broadcast row), not code. Measured (noop sink, quiet box):
-    31 words x 2048 merges 0.46 s vs staged-128 3.93 s; 20k words
-    2.95 s vs staged-256 5.05 s; 100k words 4.37 s vs 6.36 s. The
-    Arrow applier stays ~25-40% faster at depth >= 2048 on real vocab
-    tables (vectorized pandas replace vs per-element interpreted HOF),
-    so "auto" still hands production depth to arrow; the fold owns the
-    JVM-only mid band. Output identical by construction (same ordered
-    replaces; pinned by the applier-equality tests and the shared
-    recursive-CTE oracle)."""
+    plan size is constant in merge count, there are no checkpoints,
+    and no ANTLR / JVM-stack depth ceiling exists because the merge
+    table is DATA (one broadcast row), not code. Measured (noop sink,
+    quiet box) against the staged form: 31 words x 2048 merges 0.46 s
+    vs 3.93 s; 20k words 2.95 s vs 5.05 s; 100k words 4.37 s vs
+    6.36 s. The Arrow applier stays ~25-40% faster at depth >= 2048
+    on real vocab tables (vectorized pandas replace vs per-element
+    interpreted HOF), so the router hands production depth to arrow.
+    Output identical by construction (same ordered replaces; pinned
+    by the applier-equality test and the shared recursive-CTE
+    oracle)."""
     pairs = [
         (
             " " + m["left_sym"] + _BPE_US + " " + m["right_sym"] + _BPE_US,
@@ -1666,9 +1550,9 @@ def bpe_apply_merges_arrow(
     vectorized literal replaces on the rendered symbol string — the
     same algorithm as the declarative appliers, executed in pandas, so
     output is identical by construction for ANY merge table (pinned by
-    test + the shared graded oracle). Use when the merge table is far
-    past staged-projection territory or when embedding a real
-    tokenizer library at this seam; the merge list rides the task
+    test + the shared graded oracle). Use when the merge table is past
+    the fold's band or when embedding a real tokenizer library at this
+    seam; the merge list rides the task
     closure (it IS the vocabulary — bounded), each executor segments
     its partition of the DISTINCT-words table independently, no
     shuffle."""
@@ -1707,58 +1591,101 @@ def bpe_apply_merges_arrow(
     )
 
 
-# Measured JVM→arrow crossover in MERGE COUNT. r12 measured staged vs
-# arrow (arrow ~2× ahead from 2048 up; 32k regime: 28.1 s vs 62.8 s —
-# staged's per-stage plan/codegen cost is fixed per stage). r16
-# replaced the mid-band JVM path with the broadcast-array fold and
-# re-measured (noop sink, quiet box): at 2048 merges arrow still wins
-# but by ~25-40%, not 2× (20k words: 1.68 s vs fold 2.95 s; 100k:
-# 3.89 s vs 4.37 s), and the gap grows with depth (8192 at 100k
-# words: 10.2 s vs 14.4 s) — the fold's per-element interpreted HOF
-# step loses to pandas' vectorized replace once the word table is
-# real. The JVM-only fold keeps the mid band (no Python workers at
-# modest vocabulary sizes) and "auto" switches to arrow past this
-# depth.
+# Merge-count bands of the three appliers (SCALING §crossover and
+# §project-fold). The project/fold crossover moves with the word
+# table: on a 20k-word vocabulary the single nested-replace projection
+# beats the fold by 25-40% at every depth through 384 merges, while on
+# a 31-word one the fold wins from ~96 (plan/codegen cost dominates, at
+# most ~0.45 s a call at 256). 256 keeps real vocabularies on the
+# projection. Past _BPE_ARROW_CROSSOVER the Arrow applier wins by
+# ~25-40% at real vocab sizes (20k words x 2048 merges: 1.68 s vs
+# 2.95 s; 100k: 3.89 s vs 4.37 s), and the gap grows with depth (8192
+# merges at 100k words: 10.2 s vs 14.4 s): pandas' vectorized replace
+# beats the fold's per-element interpreted HOF step once the word
+# table is real.
+_BPE_PROJECT_MAX = 256
 _BPE_ARROW_CROSSOVER = 2048
 
 
-def _bpe_auto_applier(w, m, marker, stage_size):
-    if len(m) <= stage_size:
-        # cheapest while one stage's worth of replaces stays inside
-        # what Catalyst/codegen compile
-        return bpe_apply_merges(w, m, marker=marker)
-    if len(m) <= _BPE_ARROW_CROSSOVER:
-        # mid band: JVM-only exact path — the broadcast-array fold
-        # (r16; replaces staged, whose per-stage plan/codegen cost it
-        # eliminates: see bpe_apply_merges_fold for the measurements)
-        return bpe_apply_merges_fold(w, m, marker=marker)
-    # production depth: the Arrow serving applier wins ~25-40% vs the
-    # fold at real vocab sizes (measured, see _BPE_ARROW_CROSSOVER)
-    # and the win grows with merge count
-    return bpe_apply_merges_arrow(w, m, marker=marker)
+def _bpe_segment(
+    words: DataFrame, merge_rows: list, marker: str | None
+) -> DataFrame:
+    """Segment ``words`` with the applier that wins at this merge
+    count. All three are output-identical by construction (the same
+    ordered replaces), so the choice is cost only."""
+    if len(merge_rows) <= _BPE_PROJECT_MAX:
+        return bpe_apply_merges(words, merge_rows, marker=marker)
+    if len(merge_rows) <= _BPE_ARROW_CROSSOVER:
+        return bpe_apply_merges_fold(words, merge_rows, marker=marker)
+    return bpe_apply_merges_arrow(words, merge_rows, marker=marker)
 
 
-_BPE_APPLIERS = {
-    "project": lambda w, m, marker, stage_size: bpe_apply_merges(
-        w, m, marker=marker
-    ),
-    "staged": lambda w, m, marker, stage_size: bpe_apply_merges_staged(
-        w, m, marker=marker, stage_size=stage_size
-    ),
-    "fold": lambda w, m, marker, stage_size: bpe_apply_merges_fold(
-        w, m, marker=marker
-    ),
-    "arrow": lambda w, m, marker, stage_size: bpe_apply_merges_arrow(
-        w, m, marker=marker
-    ),
-    # the default: project while the single projection compiles (one
-    # stage's worth of replaces), the broadcast-array fold through the
-    # JVM-only mid band (r16 — constant plan size, no per-stage
-    # codegen), arrow past the measured crossover — so the DEFAULT
-    # path extends to a production 32k-merge vocabulary at the
-    # measured-best cost
-    "auto": _bpe_auto_applier,
-}
+def _bpe_merge_rows(merges: DataFrame) -> "list[dict]":
+    """The merge table's rows as dicts in rank order. Merge tables are
+    bounded (they ARE the vocabulary). Producers that already hold the
+    rows on the driver (bpe_grid_merge_table, bpe_train's gated loop,
+    local artifact reads) attach them as ``_bpe_local_rows`` — reading
+    that skips a py4j round-trip that measured ~0.3 s at 2048 rows.
+    Otherwise collect UNORDERED and sort on the driver: .orderBy
+    before .collect plans a range-partitioned sort — a sampling job
+    plus a sort job (measured 0.57 s on a 2048-row LOCAL relation) to
+    order rows the driver sorts in microseconds."""
+    local_rows = getattr(merges, "_bpe_local_rows", None)
+    rows = (
+        [dict(m) for m in local_rows]
+        if local_rows is not None
+        else [r.asDict() for r in merges.collect()]
+    )
+    return sorted(rows, key=lambda m: m["merge_rank"])
+
+
+def _bpe_vocab_frame(
+    spark,
+    merge_rows: "list[dict]",
+    alphabet: DataFrame | None,
+    *,
+    words: DataFrame | None = None,
+    marker: str | None = None,
+) -> DataFrame:
+    """The (sym, id) vocabulary, built ON THE DRIVER and re-entered as
+    a local relation — the one id policy encode and decode share.
+    Both inputs are bounded: the alphabet by charset size, the merge
+    table by construction. Base symbols sorted asc get 0..A-1 (Python
+    ``sorted`` == UTF8String binary order, the _bpe_train_driver_loop
+    parity argument); merge k's output gets A+k-1; a duplicate sym
+    keeps the LOWEST id (ADVICE r11: 'a'+'bc' and 'ab'+'c' both emit
+    'abc', and a second row would fan out the sym-keyed encode join;
+    alpha beats merges, earlier rank beats later).
+
+    Base symbols come from, in order: ``alphabet``'s driver-side
+    ``_bpe_local_syms`` (a local artifact read — no job), a collect of
+    ``alphabet``, or — with no alphabet, the self-encode shape — the
+    rendered symbols of ``words`` (w). The local relation keeps the
+    consumer's plan free of the alphabet's lineage (the r11
+    .explain-audit lesson: 6 parquet scans -> 1)."""
+    local_syms = getattr(alphabet, "_bpe_local_syms", None)
+    if local_syms is not None:
+        base_syms = set(local_syms)
+    elif alphabet is not None:
+        base_syms = {
+            r["sym"] for r in alphabet.select("sym").distinct().collect()
+        }
+    else:
+        base_syms = {
+            r["sym"]
+            for r in words.select(
+                F.explode(
+                    _bpe_parse_syms(_bpe_render_word(F.col("w"), marker))
+                ).alias("sym")
+            )
+            .distinct()
+            .collect()
+        }
+    ids = {s: i for i, s in enumerate(sorted(base_syms))}
+    n_alpha = len(ids)
+    for m in merge_rows:
+        ids.setdefault(m["merged"], n_alpha + int(m["merge_rank"]) - 1)
+    return local_frame(spark, list(ids.items()), "sym string, id long")
 
 
 def bpe_alphabet(
@@ -1792,129 +1719,53 @@ def bpe_encode(
     oov_id: int = -1,
     alphabet: DataFrame | None = None,
     marker: str | None = None,
-    merge_applier: str = "auto",
-    stage_size: int = 256,
 ) -> DataFrame:
     """Tokenizer-apply with LEARNED MERGES (subword segmentation) — the
     step between ``bpe_train`` and ``sequence_packing`` a pretraining
     pipeline runs on every document, where ``encode_token_ids`` only
     looked whole words up in a fixed vocab.
 
-    ``merge_applier`` picks the segmentation strategy — all are
-    output-identical by construction (same ordered replaces): "project"
-    (one nested-replace codegen projection; exact and cheapest at
-    in-plan trainer sizes, but a 32k-merge vocabulary would exceed what
-    Catalyst can compile), "staged" (checkpointed stages of
-    ``stage_size`` replaces — the production-vocab scale path, linear
-    in merges), "arrow" (Arrow-batched mapInPandas — the serving path),
-    "auto" (the default: project up to one stage's worth of merges,
-    staged beyond — the default path therefore extends to production
-    vocabulary sizes instead of hitting the depth ceiling).
+    Segmentation picks its applier from the merge count alone
+    (``_bpe_segment``): the single nested-replace projection up to
+    ``_BPE_PROJECT_MAX`` merges, the broadcast-array fold up to
+    ``_BPE_ARROW_CROSSOVER``, the Arrow applier beyond — all
+    output-identical, so the path extends to production vocabulary
+    sizes at the measured-best cost.
 
     Ids: base alphabet (``alphabet`` = the TRAINING corpus's
     ``bpe_alphabet``; ids must be stable across encoded corpora, so
     pass it whenever encoding anything but the training corpus itself —
     None derives it from ``docs``, the self-encode shape) sorted asc
     gets 0..A-1; merge k's output symbol gets A+k-1 — deterministic and
-    replayable from the merge table + alphabet alone. Symbols outside
-    the vocab (characters unseen at train time) map to ``oov_id``.
+    replayable from the merge table + alphabet alone (``bpe_vocab``).
+    Symbols outside the vocab (characters unseen at train time) map to
+    ``oov_id``.
 
     Scale shape: merges are collected ONCE (a merge table is bounded by
     construction — it IS the vocabulary); each DISTINCT word is
-    segmented once via the chained-replace projection and joined back
-    to the corpus token stream keyed by word (hot common words skew the
-    join — AQE skew-split territory; the join output is per-token
-    either way). The per-doc rebuild is the span_cut_corpus ordered
-    array pattern: one doc-keyed shuffle. Returns (id_col, n_tokens,
-    n_syms, ids_str) — ids_str space-joined per the FIXTURES array
-    rule, ordered by (word position, symbol position).
+    segmented once and joined back to the corpus token stream keyed by
+    word (hot common words skew the join — AQE skew-split territory;
+    the join output is per-token either way). The per-doc rebuild is
+    the span_cut_corpus ordered array pattern: one doc-keyed shuffle.
+    Returns (id_col, n_tokens, n_syms, ids_str) — ids_str space-joined
+    per the FIXTURES array rule, ordered by (word position, symbol
+    position).
     """
-    # Bounded-table collect discipline (r16): merge tables are bounded
-    # (they ARE the vocabulary). Producers that already hold the rows
-    # on the driver (bpe_grid_merge_table, bpe_train's gated loop)
-    # attach them as ``_bpe_local_rows`` — reading that skips a py4j
-    # round-trip that measured ~0.3 s at 2048 rows. Otherwise collect
-    # UNORDERED and sort on the driver: .orderBy before .collect plans
-    # a range-partitioned sort — a sampling job plus a sort job
-    # (measured 0.57 s on a 2048-row LOCAL relation) to order rows the
-    # driver sorts in microseconds.
-    local_rows = getattr(merges, "_bpe_local_rows", None)
-    if local_rows is not None:
-        merge_rows = sorted(
-            (dict(m) for m in local_rows),
-            key=lambda m: m["merge_rank"],
-        )
-    else:
-        merge_rows = sorted(
-            (r.asDict() for r in merges.collect()),
-            key=lambda m: m["merge_rank"],
-        )
+    merge_rows = _bpe_merge_rows(merges)
     keep = (F.length("w") >= 1) & (~F.col("w").contains(_BPE_US))
     if marker is not None:
         keep = keep & (~F.col("w").contains(marker))
     tok = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.posexplode(_words(text_col)).alias("pos", "w")
+        id_col, F.posexplode(split_words(text_col)).alias("pos", "w")
     ).filter(keep)
     # checkpointed ONCE (bounded by vocabulary size): the word table
     # feeds both the segmentation and the derived alphabet — without
     # the pin each consumer re-derives it from the corpus (an .explain
     # audit showed TWO extra full scans + distinct shuffles)
     words = tok.select("w").distinct().localCheckpoint(eager=True)
-    if merge_applier not in _BPE_APPLIERS:
-        raise ValueError(
-            f"unknown merge_applier {merge_applier!r}; "
-            f"one of {sorted(_BPE_APPLIERS)}"
-        )
-    seg = _BPE_APPLIERS[merge_applier](words, merge_rows, marker, stage_size)
-    # The vocabulary is built ON THE DRIVER (r16): both inputs are
-    # bounded — the alphabet by charset size (collected here; one tiny
-    # job over the checkpointed word table, or over the caller's
-    # alphabet DF), the merge table already collected above — so the
-    # former bpe_vocab(...).localCheckpoint(eager) path paid two extra
-    # driver-synchronous jobs (the alpha count inside bpe_vocab and
-    # the checkpoint materialization) plus a rank window to compute a
-    # dict the driver builds in microseconds. Same ids by
-    # construction: base symbols sorted asc get 0..A-1 (Python sorted
-    # == UTF8String binary order, the _bpe_train_driver_loop parity
-    # argument), merge k's output gets A+k-1, duplicate syms keep the
-    # LOWEST id (alpha beats merges; earlier rank beats later — the
-    # ADVICE r11 min-id dedupe). The local relation also keeps the
-    # final plan free of the vocab's lineage (the r11 .explain-audit
-    # lesson: 6 parquet scans -> 1), which the checkpoint previously
-    # guaranteed.
-    local_syms = (
-        getattr(alphabet, "_bpe_local_syms", None)
-        if alphabet is not None
-        else None
-    )
-    if local_syms is not None:
-        # alphabet came off a driver-side artifact read
-        # (_bpe_read_tokenizer_local) — the rows are already local,
-        # skip the distinct job + py4j round-trip
-        base_syms = list(set(local_syms))
-    elif alphabet is not None:
-        base_syms = [
-            r["sym"] for r in alphabet.select("sym").distinct().collect()
-        ]
-    else:
-        base_syms = [
-            r["sym"]
-            for r in words.select(
-                F.explode(
-                    _bpe_parse_syms(_bpe_render_word(F.col("w"), marker))
-                ).alias("sym")
-            )
-            .distinct()
-            .collect()
-        ]
-    vocab_ids: dict[str, int] = {
-        s: i for i, s in enumerate(sorted(base_syms))
-    }
-    n_alpha = len(vocab_ids)
-    for m in merge_rows:
-        vocab_ids.setdefault(m["merged"], n_alpha + int(m["merge_rank"]) - 1)
-    vocab = local_frame(
-        docs.sparkSession, list(vocab_ids.items()), "sym string, id long"
+    seg = _bpe_segment(words, merge_rows, marker)
+    vocab = _bpe_vocab_frame(
+        docs.sparkSession, merge_rows, alphabet, words=words, marker=marker
     )
     wid = (
         seg.select("w", F.posexplode("syms").alias("spos", "sym"))
@@ -1968,36 +1819,12 @@ def bpe_encode(
 
 def bpe_vocab(alphabet: DataFrame, merges: DataFrame) -> DataFrame:
     """(sym, id) vocabulary shared by encode and decode: base alphabet
-    symbols id'd 0..A-1 by sort order (the ranking window runs over the
-    bounded distinct-chars table), merge k's output symbol id'd A+k-1.
-    Deterministic and replayable from (alphabet, merges) alone.
-
-    Deduplicated on sym keeping the LOWEST id (ADVICE r11): two
-    distinct merges can emit the same merged string ('a'+'bc' and
-    'ab'+'c' both yield 'abc'), and a duplicate sym row would fan out
-    the sym-keyed encode join, inflating n_syms/ids on both engines at
-    once — green but semantically wrong. Keeping min(id) makes each
-    symbol encode as its FIRST (highest-priority) vocabulary entry; the
-    dropped duplicate ids are simply never emitted, so decode's
-    id-keyed join stays total over real encoder output. The dedupe agg
-    runs over the bounded vocab table, never the corpus."""
-    from pyspark.sql import Window
-
-    alpha = alphabet.select("sym").distinct().withColumn(
-        "id",
-        (
-            F.row_number().over(Window.orderBy(F.col("sym").asc())) - 1
-        ).cast("long"),
-    )
-    n_alpha = alpha.count()  # bounded: alphabet size
-    merged_vocab = merges.select(
-        F.col("merged").alias("sym"),
-        (F.lit(n_alpha) + F.col("merge_rank") - 1).cast("long").alias("id"),
-    )
-    return (
-        alpha.unionByName(merged_vocab)
-        .groupBy("sym")
-        .agg(F.min("id").alias("id"))
+    symbols id'd 0..A-1 by sort order, merge k's output symbol id'd
+    A+k-1, each sym once at its LOWEST id. Deterministic and
+    replayable from (alphabet, merges) alone; built on the driver as a
+    local relation (see ``_bpe_vocab_frame``)."""
+    return _bpe_vocab_frame(
+        merges.sparkSession, _bpe_merge_rows(merges), alphabet
     )
 
 
@@ -2009,7 +1836,7 @@ def bpe_grid_merge_table(
     marker: str | None = None,
 ) -> DataFrame:
     """Deterministic PRODUCTION-SIZE merge table without iterative
-    training — the fixture that lets the staged/arrow appliers be
+    training — the fixture that lets the fold/arrow appliers be
     graded at a real vocabulary depth (VERDICT r11 #1: in-plan
     ``bpe_train`` is bounded by its per-round driver argmax, and the
     graded corpus's 31-word vocabulary exhausts after ~100 learnable
@@ -2176,8 +2003,7 @@ def _bpe_merge_frame(
     spark, rows: "list[tuple[int, str, str, str, int]]"
 ) -> DataFrame:
     """A merge table over driver-side rows, tagged with those rows as
-    ``_bpe_local_rows`` so ``bpe_encode`` skips its py4j collect (see
-    the note there)."""
+    ``_bpe_local_rows`` so ``_bpe_merge_rows`` skips its py4j collect."""
     mdf = local_frame(spark, rows, _BPE_MERGES_SCHEMA)
     mdf._bpe_local_rows = [dict(zip(_BPE_MERGES_COLS, r)) for r in rows]
     return mdf
@@ -2189,7 +2015,7 @@ def _bpe_read_tokenizer_local(path: str) -> "tuple[list, list, dict] | None":
     bounded by construction — merges by the vocabulary, alphabet by
     the charset, meta is one row — so when the artifact lives on the
     local filesystem, pyarrow reads them in milliseconds where the
-    downstream py4j collects (``bpe_encode``'s merge-table and alphabet
+    downstream py4j collects (the merge-table and alphabet
     collects, the meta read) each pay a Spark job. Returns
     (merge_row_dicts, alphabet_syms, meta_dict) or None — callers fall
     back to the Spark reads — for non-local URIs, unreadable/garbled
@@ -2436,9 +2262,7 @@ def bpe_decode(
     one doc-keyed shuffle for the ordered rebuild — the exact mirror of
     the encode plan. Returns (id_col, text, n_unknown).
     """
-    # pinned for the same reason as encode's vocab: a corpus-derived
-    # alphabet would re-run its scan inside the decode plan
-    vocab = bpe_vocab(alphabet, merges).localCheckpoint(eager=True)
+    vocab = bpe_vocab(alphabet, merges)
     ids = encoded.select(
         id_col,
         F.posexplode(F.split(F.col(ids_col), " ")).alias("pos", "_id_s"),
@@ -2538,7 +2362,7 @@ def build_vocab(
     df: DataFrame, text_col: str, *, top_v: int = 32
 ) -> DataFrame:
     """Frequency-ranked token vocabulary: the ``top_v`` most frequent
-    whitespace tokens (the _words normalization: lowercase, collapsed
+    whitespace tokens (the split_words normalization: lowercase, collapsed
     whitespace), id = 0-based rank, ties broken by token ASC so the
     mapping is deterministic across partitionings and engines.
 
@@ -2552,7 +2376,7 @@ def build_vocab(
 
     counts = (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.explode(_words(text_col)).alias("tok"))
+        .select(F.explode(split_words(text_col)).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -2588,7 +2412,7 @@ def encode_token_ids(
     """
     toks = df.filter(F.col(text_col).isNotNull()).select(
         id_col,
-        F.posexplode(_words(text_col)).alias("pos", "tok"),
+        F.posexplode(split_words(text_col)).alias("pos", "tok"),
     )
     enc = toks.join(F.broadcast(vocab), "tok", "left").select(
         id_col,

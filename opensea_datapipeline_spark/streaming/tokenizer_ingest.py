@@ -111,7 +111,6 @@ def run_streaming_tokenizer_ingest(
     marker: str | None = None,
     oov_id: int = -1,
     retrain_threshold: float = 0.001,
-    merge_applier: str = "auto",
     max_files_per_trigger: int = 1,
     on_batch=None,
 ) -> dict:
@@ -152,7 +151,7 @@ def run_streaming_tokenizer_ingest(
         merges, alpha, mk = artifact_cache[version]
         return bpe_encode(
             docs, merges, id_col=id_col, text_col=text_col, oov_id=oov_id,
-            alphabet=alpha, marker=mk, merge_applier=merge_applier,
+            alphabet=alpha, marker=mk,
         )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -22,9 +22,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from opensea_datapipeline_spark.functions.text import split_words
 from opensea_datapipeline_spark.session import get_spark
 from opensea_datapipeline_spark.sources.readers import load_table
-from opensea_datapipeline_spark.operators import text as tx
 from opensea_datapipeline_spark import queries as Q
 
 
@@ -47,7 +47,7 @@ def main():
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
 
-    candidates = F.coalesce(F.array_distinct(tx._words("text")), F.array())
+    candidates = F.coalesce(F.array_distinct(split_words("text")), F.array())
     stages = {}
     stages["scan"] = timed(lambda: docs.select("doc_id", "text").collect())
     stages["normalize"] = timed(

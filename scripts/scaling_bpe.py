@@ -16,7 +16,15 @@ parts of the plan:
 bpe_encode is timed at both corpus scales: its distinct-word
 segmentation is vocab-bound, its token join + doc rebuild corpus-bound.
 
-Run:  python scripts/scaling_bpe.py [--scales=1,10]
+Applier legs (each off unless its flag is given):
+- --project-fold=64,128,...: project vs fold, min-of-5 per depth, on a
+  grid merge table over the SF corpus (sets _BPE_PROJECT_MAX);
+- --crossover=512,1024,... [--crossover-words=N]: fold vs arrow on a
+  synthetic vocabulary (sets _BPE_ARROW_CROSSOVER);
+- --production-depth=N: fold vs arrow at one production depth.
+
+Run:  python scripts/scaling_bpe.py [--scales=1,10] [--vocab=10000,100000]
+          [--project-fold=...] [--crossover=...] [--production-depth=N]
 """
 import json
 import os
@@ -153,13 +161,12 @@ def synth_merge_rows(n):
 
 def run_production_depth_leg(spark, docs, depth):
     """The 32k claim, measured (r12): apply a production-vocabulary-size
-    merge table through the staged and Arrow appliers over the bounded
+    merge table through the fold and Arrow appliers over the bounded
     word table. The single-projection form is not even attempted — it
-    is the documented non-option this leg exists to replace."""
+    does not compile at this depth."""
     from opensea_datapipeline_spark.operators.text import (
         bpe_apply_merges_arrow,
         bpe_apply_merges_fold,
-        bpe_apply_merges_staged,
     )
 
     words = (
@@ -169,7 +176,6 @@ def run_production_depth_leg(spark, docs, depth):
     leg = {"leg": f"production_depth_{depth}",
            "n_words": words.count(), "ops": []}
     for tag, fn in (
-        ("staged", lambda: bpe_apply_merges_staged(words, rows)),
         ("fold", lambda: bpe_apply_merges_fold(words, rows)),
         ("arrow", lambda: bpe_apply_merges_arrow(words, rows)),
     ):
@@ -182,65 +188,56 @@ def run_production_depth_leg(spark, docs, depth):
     return leg
 
 
-def run_staged_leg(spark, docs, depths):
-    """r12 (VERDICT r11 #1): staged-segmentation cost must be LINEAR in
-    merge count — (depth / stage_size) passes over the bounded
-    distinct-words table — where the single-projection form stops
-    compiling long before production depth. The synthetic 100k-word
-    corpus's 16-char hex alphabet yields a 256-pair + 4096-triple grid,
-    so every probed depth applies real merges. The Arrow serving
-    applier is timed at max depth for comparison."""
+def run_project_fold_leg(spark, docs, depths, reps=5):
+    """Where bpe_encode's router should switch from the single
+    nested-replace projection to the broadcast-array fold
+    (_BPE_PROJECT_MAX): both appliers timed at each depth, min of
+    ``reps``, over the same checkpointed word table, with a grid merge
+    table built from ``docs`` (well-formed, so later merges do real
+    work). One unrecorded warm-up pass of each first."""
     from opensea_datapipeline_spark.operators.text import (
-        bpe_apply_merges_arrow,
-        bpe_apply_merges_staged,
+        bpe_apply_merges,
+        bpe_apply_merges_fold,
         bpe_grid_merge_table,
     )
 
     words = (
         _bpe_word_freq(docs, "text").select("w").localCheckpoint(eager=True)
     )
-    leg = {"leg": "staged_depth", "n_words": words.count(), "ops": []}
-    rows = [
-        r.asDict()
-        for r in bpe_grid_merge_table(docs, max_merges=max(depths))
-        .orderBy("merge_rank")
-        .collect()
-    ]
+    rows = bpe_grid_merge_table(docs, max_merges=max(depths))._bpe_local_rows
+    leg = {"leg": "project_fold_crossover", "n_words": words.count(),
+           "n_merges": len(rows), "reps": reps, "ops": []}
+    appliers = (("project", bpe_apply_merges), ("fold", bpe_apply_merges_fold))
+    for _, fn in appliers:
+        fn(words, rows[: min(depths)]).write.mode("overwrite").format(
+            "noop"
+        ).save()
     for depth in depths:
         sub = rows[:depth]
-        _, m = timed(
-            spark,
-            f"staged_{depth}",
-            lambda: bpe_apply_merges_staged(words, sub, stage_size=128)
-            .write.mode("overwrite")
-            .format("noop")
-            .save(),
-        )
-        m["stages"] = -(-depth // 128)
-        leg["ops"].append(m)
-    _, m = timed(
-        spark,
-        f"arrow_{max(depths)}",
-        lambda: bpe_apply_merges_arrow(words, rows)
-        .write.mode("overwrite")
-        .format("noop")
-        .save(),
-    )
-    leg["ops"].append(m)
+        for tag, fn in appliers:
+            best = None
+            for _ in range(reps):
+                _, m = timed(
+                    spark,
+                    f"{tag}_{depth}",
+                    lambda: fn(words, sub).write.mode("overwrite")
+                    .format("noop").save(),
+                )
+                if best is None or m["wall_s"] < best["wall_s"]:
+                    best = m
+            leg["ops"].append(best)
     return leg
 
 
 def run_crossover_leg(spark, docs, depths):
     """r13 (VERDICT r12 #4): find the merge-count crossover where the
-    Arrow serving applier overtakes the staged JVM applier, so the
-    'auto' router can switch instead of riding staged's fixed
-    per-stage plan cost to 32k. Both appliers timed at each depth over
-    the same checkpointed word table, operator-default stage_size
-    (256), one JIT warm-up pass at the smallest depth first."""
+    Arrow serving applier overtakes the JVM fold
+    (_BPE_ARROW_CROSSOVER). Both appliers timed at each depth over the
+    same checkpointed word table, one JIT warm-up pass at the smallest
+    depth first."""
     from opensea_datapipeline_spark.operators.text import (
         bpe_apply_merges_arrow,
         bpe_apply_merges_fold,
-        bpe_apply_merges_staged,
     )
 
     words = (
@@ -251,9 +248,6 @@ def run_crossover_leg(spark, docs, depths):
            "n_words": words.count(), "ops": []}
     # warm-up: JIT all paths once at the smallest depth, unrecorded
     warm = rows[: min(depths)]
-    bpe_apply_merges_staged(words, warm).write.mode(
-        "overwrite"
-    ).format("noop").save()
     bpe_apply_merges_fold(words, warm).write.mode(
         "overwrite"
     ).format("noop").save()
@@ -263,10 +257,6 @@ def run_crossover_leg(spark, docs, depths):
     for depth in depths:
         sub = rows[:depth]
         for tag, fn in (
-            ("staged", lambda: bpe_apply_merges_staged(words, sub)),
-            # r16: the broadcast-array fold that replaced staged as the
-            # routed JVM mid band — the crossover now compared is
-            # fold vs arrow
             ("fold", lambda: bpe_apply_merges_fold(words, sub)),
             ("arrow", lambda: bpe_apply_merges_arrow(words, sub)),
         ):
@@ -283,7 +273,7 @@ def run_crossover_leg(spark, docs, depths):
 def main() -> None:
     scales = [1, 10]
     vocab_sizes = [10_000, 100_000]
-    depths = [512, 1024, 2048, 4096]
+    project_fold = []
     for a in sys.argv[1:]:
         if a.startswith("--scales"):
             v = a.split("=", 1)[1]
@@ -291,9 +281,9 @@ def main() -> None:
         if a.startswith("--vocab"):
             v = a.split("=", 1)[1]
             vocab_sizes = [int(x) for x in v.split(",")] if v else []
-        if a.startswith("--depths"):
+        if a.startswith("--project-fold"):
             v = a.split("=", 1)[1]
-            depths = [int(x) for x in v.split(",")] if v else []
+            project_fold = [int(x) for x in v.split(",")] if v else []
     spark = get_spark(
         "scaling-bpe", extra_configs={"spark.ui.enabled": "true"}
     )
@@ -314,10 +304,8 @@ def main() -> None:
         )
         print(json.dumps(leg))
         legs.append(leg)
-    if depths:
-        leg = run_staged_leg(
-            spark, synth_vocab_docs(spark, 100_000), depths
-        )
+    if project_fold:
+        leg = run_project_fold_leg(spark, base, project_fold)
         print(json.dumps(leg))
         legs.append(leg)
     prod_depth = 0

@@ -34,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from opensea_datapipeline_spark.functions.text import split_words  # noqa: E402
 from opensea_datapipeline_spark.operators.dedup import (  # noqa: E402
     containment_pairs_blocked,
 )
@@ -48,11 +49,7 @@ BASE_DOCS = 1000
 def tokenized(docs):
     return docs.select(
         "doc_id",
-        F.array_distinct(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            )
-        ).alias("ws"),
+        F.array_distinct(split_words("text")).alias("ws"),
     )
 
 
@@ -61,9 +58,7 @@ def zipf_planted(docs):
     replaced by the first half of its neighbor's words (planted
     containment; the tag is NOT appended to planted docs so the
     containment survives)."""
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
-    )
+    words = split_words("text")
     tagged = F.concat(
         F.col("text"), F.lit(" uniqtag"), F.col("doc_id").cast("string")
     )

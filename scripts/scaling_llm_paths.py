@@ -46,6 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from opensea_datapipeline_spark.functions.text import split_words
 from opensea_datapipeline_spark.session import get_spark
 from opensea_datapipeline_spark.sources.readers import load_table
 from opensea_datapipeline_spark.operators import ann_index as ann
@@ -60,9 +61,7 @@ def scaled_docs(base, mult):
     if mult == 1:
         return base.select("doc_id", "text")
     reps = base.sparkSession.range(mult).select(F.col("id").alias("rep"))
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
-    )
+    words = split_words("text")
     tagged = F.array_join(
         F.transform(
             words, lambda w: F.concat(w, F.lit("~"), F.col("rep").cast("string"))

@@ -2935,16 +2935,9 @@ def test_pagerank_dangling_redistribution_conserves_mass(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_appliers_identical_on_grid_table(spark):
-    # The three merge appliers (single projection, checkpointed stages,
-    # Arrow mapInPandas) are the SAME sequential replace chain in three
-    # execution strategies — their segmentations must be identical for
-    # an arbitrary merge table. stage_size=3 forces many stage
-    # boundaries; the grid table exercises pair+triple tiers.
+def _applier_case_grid_table(spark):
+    # the grid table exercises the pair and triple tiers
     from opensea_datapipeline_spark.operators.text import (
-        bpe_apply_merges,
-        bpe_apply_merges_arrow,
-        bpe_apply_merges_staged,
         bpe_grid_merge_table,
     )
 
@@ -2955,29 +2948,79 @@ def test_bpe_appliers_identical_on_grid_table(spark):
     mt = bpe_grid_merge_table(docs, max_merges=40)
     rows = [r.asDict() for r in mt.orderBy("merge_rank").collect()]
     assert 0 < len(rows) <= 40
-    words = spark.createDataFrame(
-        [("abab",), ("banana",), ("cabbage",), ("baa",), ("abba",),
-         ("cab",), ("abc",), ("x",)],
-        "w string",
+    words = ["abab", "banana", "cabbage", "baa", "abba", "cab", "abc", "x"]
+    return words, rows, None
+
+
+def _applier_case_marker(spark):
+    # the SentencePiece-style boundary marker becomes each word's
+    # leading base symbol before the replace chain runs
+    from opensea_datapipeline_spark.operators.text import bpe_train
+
+    marker = "\x11"
+    docs = spark.createDataFrame(
+        [(0, "low low low lower"), (1, "newest newest widest")],
+        "doc_id long, text string",
     )
-    base = {
-        r.w: r.syms for r in bpe_apply_merges(words, rows).collect()
-    }
-    staged = {
-        r.w: r.syms
-        for r in bpe_apply_merges_staged(
-            words, rows, stage_size=3
-        ).collect()
-    }
-    arrow = {
-        r.w: r.syms
-        for r in bpe_apply_merges_arrow(words, rows).collect()
-    }
-    assert staged == base
-    assert arrow == base
-    # every word's symbols reassemble to the word (segmentation is a
-    # partition, never lossy)
-    assert all("".join(s) == w for w, s in base.items())
+    rows = [
+        r.asDict()
+        for r in bpe_train(
+            docs, n_merges=6, min_count=2, marker=marker
+        ).orderBy("merge_rank").collect()
+    ]
+    assert rows
+    return ["low", "lower", "newest", "widest", "unseen"], rows, marker
+
+
+def _applier_case_unicode_line_separators(spark):
+    # ADVICE r12: Java regex '.' skips ALL line terminators (LF CR
+    # U+0085 U+2028 U+2029), Python re's '.' only LF. Words carrying
+    # Unicode line separators -- which the Java \\s+ normalization
+    # does NOT strip -- must render every char on every applier.
+    words = ["a\u2028b", "x\u0085y", "p\u2029q", "a\rb", "ab", "plain",
+             "\u2028"]
+    rows = [
+        {"left_sym": "a", "right_sym": "b", "merged": "ab"},
+        {"left_sym": "p", "right_sym": "q", "merged": "pq"},
+    ]
+    return words, rows, None
+
+
+_APPLIER_CASES = {
+    "grid_table": _applier_case_grid_table,
+    "marker": _applier_case_marker,
+    "unicode_line_separators": _applier_case_unicode_line_separators,
+}
+
+
+@pytest.mark.parametrize("case", list(_APPLIER_CASES))
+def test_bpe_appliers_identical(spark, case):
+    # The three merge appliers bpe_encode routes between (single
+    # projection, broadcast-array fold, Arrow mapInPandas) are the SAME
+    # sequential replace chain in three execution strategies: their
+    # segmentations must be identical for any merge table.
+    from opensea_datapipeline_spark.operators.text import (
+        bpe_apply_merges,
+        bpe_apply_merges_arrow,
+        bpe_apply_merges_fold,
+    )
+
+    words, rows, marker = _APPLIER_CASES[case](spark)
+    wdf = spark.createDataFrame([(w,) for w in words], "w string")
+
+    def segment(applier):
+        return {
+            r.w: r.syms for r in applier(wdf, rows, marker=marker).collect()
+        }
+
+    base = segment(bpe_apply_merges)
+    assert segment(bpe_apply_merges_fold) == base
+    assert segment(bpe_apply_merges_arrow) == base
+    # segmentation is a partition of (marker +) word, never lossy, and
+    # non-vacuous: some word actually merged
+    prefix = marker or ""
+    assert all("".join(s) == prefix + w for w, s in base.items())
+    assert any(len(s) < len(prefix + w) for w, s in base.items())
 
 
 def test_bpe_grid_merge_table_well_formed(spark):
@@ -3176,55 +3219,6 @@ def test_band_table_append_never_rewrites_old_files(spark, tmp_path):
     assert got == want
 
 
-def test_bpe_appliers_identical_with_marker(spark):
-    # The SentencePiece-style boundary marker flows through all three
-    # appliers identically (the marker becomes each word's leading base
-    # symbol before the replace chain runs).
-    from opensea_datapipeline_spark.operators.text import (
-        bpe_apply_merges,
-        bpe_apply_merges_arrow,
-        bpe_apply_merges_staged,
-        bpe_train,
-    )
-
-    marker = "\x11"
-    docs = spark.createDataFrame(
-        [(0, "low low low lower"), (1, "newest newest widest")],
-        "doc_id long, text string",
-    )
-    rows = [
-        r.asDict()
-        for r in bpe_train(
-            docs, n_merges=6, min_count=2, marker=marker
-        ).orderBy("merge_rank").collect()
-    ]
-    assert rows
-    words = spark.createDataFrame(
-        [("low",), ("lower",), ("newest",), ("widest",), ("unseen",)],
-        "w string",
-    )
-    base = {
-        r.w: r.syms
-        for r in bpe_apply_merges(words, rows, marker=marker).collect()
-    }
-    staged = {
-        r.w: r.syms
-        for r in bpe_apply_merges_staged(
-            words, rows, marker=marker, stage_size=2
-        ).collect()
-    }
-    arrow = {
-        r.w: r.syms
-        for r in bpe_apply_merges_arrow(
-            words, rows, marker=marker
-        ).collect()
-    }
-    assert staged == base
-    assert arrow == base
-    # marker-led reassembly: symbols concat back to marker + word
-    assert all("".join(s) == marker + w for w, s in base.items())
-
-
 def test_bpe_train_oracle_early_stop_on_sparse_corpus(spark):
     # ADVICE r11 #1 regression test: on a SPARSE corpus the trainer
     # stops early (best pair count < min_count), and the oracle's m{k}
@@ -3251,35 +3245,6 @@ def test_bpe_train_oracle_early_stop_on_sparse_corpus(spark):
     con.executemany("INSERT INTO documents VALUES (?, ?)", texts)
     want = [tuple(r) for r in con.execute(_bpe_train_oracle(6)).fetchall()]
     assert [tuple(g) for g in got] == want
-
-
-def test_bpe_encode_auto_applier_switches_to_staged(spark):
-    # The default applier must extend past the expression-depth
-    # ceiling: beyond one stage's worth of merges "auto" routes to the
-    # staged form, and the encode output is identical either way.
-    from opensea_datapipeline_spark.operators.text import (
-        bpe_encode,
-        bpe_grid_merge_table,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "abab banana cabbage"), (1, "baa abba cab abc")],
-        "doc_id long, text string",
-    )
-    mt = bpe_grid_merge_table(docs, max_merges=30)
-
-    def rows(**kw):
-        return sorted(
-            (r.doc_id, r.n_tokens, r.n_syms, r.ids_str)
-            for r in bpe_encode(docs, mt, **kw).collect()
-        )
-
-    # stage_size 8 < 30 merges -> auto goes to the fold (r16); every
-    # applier equals the single-projection reference
-    want = rows(merge_applier="project")
-    assert rows(merge_applier="auto", stage_size=8) == want
-    assert rows(merge_applier="staged", stage_size=8) == want
-    assert rows(merge_applier="fold") == want
 
 
 def test_band_table_reappend_idempotent(spark, tmp_path):

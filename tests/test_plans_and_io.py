@@ -182,6 +182,32 @@ def test_streaming_state_loops_job_ceiling(spark, tmp_path):
     assert all(0 < n <= 4 for n in jobs.values()), jobs
 
 
+def test_bpe_2k_queries_grade_distinct_appliers(spark, sf_dir):
+    # bpe_encode_staged_2k grades the fold's band and bpe_encode_arrow_2k
+    # the Arrow applier's. Moving a crossover must not let both queries
+    # land in one band and grade it twice.
+    arrow = _optimized(QUERIES["bpe_encode_arrow_2k"](spark, sf_dir))
+    fold = _optimized(QUERIES["bpe_encode_staged_2k"](spark, sf_dir))
+    assert "MapInPandas" in arrow, arrow
+    assert "MapInPandas" not in fold, fold
+
+
+def test_bpe_decode_build_job_ceiling(spark, sf_dir):
+    # The roundtrip shape (gated trainer, corpus-derived alphabet):
+    # decode builds its vocabulary on the driver, so its build pays
+    # only the alphabet collect.
+    from opensea_datapipeline_spark.operators import text as tx
+
+    d = load_table(spark, sf_dir, "documents")
+    marker = "\x11"
+    merges = tx.bpe_train(d, n_merges=8, min_count=2, marker=marker)
+    alpha = tx.bpe_alphabet(d, marker=marker)
+    enc = tx.bpe_encode(d, merges, marker=marker, alphabet=alpha)
+    before = jobs_submitted(spark)
+    tx.bpe_decode(enc, merges, alpha, marker=marker)
+    assert jobs_submitted(spark) - before <= 3
+
+
 def test_partitioned_write_and_partition_pruning(spark, sf_dir, tmp_path):
     out = str(tmp_path / "events_by_type")
     events = load_table(spark, sf_dir, "events").withColumn(

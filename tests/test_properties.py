@@ -638,16 +638,16 @@ sym_strategy = st.text(
     ),
 )
 @settings(max_examples=8, deadline=None)
-def test_staged_applier_survives_hostile_symbols(spark, merges, words):
-    # The staged applier builds SQL string literals from merge symbols
-    # (_bpe_sql_str): quotes, backslashes and regex/SQL metachars in
-    # symbols must produce the same segmentation as the F.lit-based
-    # single projection for ARBITRARY (even non-well-formed) tables.
+def test_appliers_survive_hostile_symbols(spark, merges, words):
+    # Quotes, backslashes and regex/SQL metachars in merge symbols must
+    # produce the same segmentation on the fold (symbols ride as
+    # broadcast DATA) and the Arrow applier (literal pandas replaces)
+    # as on the F.lit-based single projection, for ARBITRARY (even
+    # non-well-formed) tables.
     from opensea_datapipeline_spark.operators.text import (
         bpe_apply_merges,
         bpe_apply_merges_arrow,
         bpe_apply_merges_fold,
-        bpe_apply_merges_staged,
     )
 
     rows = [
@@ -658,21 +658,14 @@ def test_staged_applier_survives_hostile_symbols(spark, merges, words):
         [(w,) for w in set(words)], "w string"
     )
     base = {r.w: r.syms for r in bpe_apply_merges(wdf, rows).collect()}
-    staged = {
-        r.w: r.syms
-        for r in bpe_apply_merges_staged(wdf, rows, stage_size=3).collect()
-    }
     arrow = {
         r.w: r.syms
         for r in bpe_apply_merges_arrow(wdf, rows).collect()
     }
-    # r16: the fold ships symbols as broadcast DATA (no SQL literals at
-    # all), but must still segment hostile symbols identically
     fold = {
         r.w: r.syms
         for r in bpe_apply_merges_fold(wdf, rows).collect()
     }
-    assert staged == base
     assert arrow == base
     assert fold == base
 

@@ -46,49 +46,6 @@ def test_pack_with_eos_empty_id_stream(spark):
     assert out == {0: (4, 2, "9 4 5 9", "0 1")}
 
 
-def test_bpe_appliers_identical_on_unicode_line_separators(spark):
-    # ADVICE r12: Java regex '.' (the project/staged render) skips ALL
-    # line terminators (LF CR U+0085 U+2028 U+2029); Python re's '.'
-    # skips only LF. Words carrying Unicode line separators -- which
-    # the Java \\s+ normalization does NOT strip -- must segment
-    # identically across all three appliers.
-    from opensea_datapipeline_spark.operators.text import (
-        bpe_apply_merges,
-        bpe_apply_merges_arrow,
-        bpe_apply_merges_staged,
-    )
-
-    words = [
-        "a\u2028b",
-        "x\u0085y",
-        "p\u2029q",
-        "a\rb",
-        "ab",
-        "plain",
-        "\u2028",
-    ]
-    wdf = spark.createDataFrame([(w,) for w in words], "w string")
-    rows = [
-        {"left_sym": "a", "right_sym": "b", "merged": "ab"},
-        {"left_sym": "p", "right_sym": "q", "merged": "pq"},
-    ]
-    base = {r.w: r.syms for r in bpe_apply_merges(wdf, rows).collect()}
-    staged = {
-        r.w: r.syms
-        for r in bpe_apply_merges_staged(
-            wdf, rows, stage_size=1
-        ).collect()
-    }
-    arrow = {
-        r.w: r.syms
-        for r in bpe_apply_merges_arrow(wdf, rows).collect()
-    }
-    assert staged == base
-    assert arrow == base
-    # non-vacuous: the plain word actually merged
-    assert base["ab"] == ["ab"]
-
-
 def test_streaming_corpus_dedup_keeps_null_text_singletons(
     spark, tmp_path
 ):
@@ -217,9 +174,9 @@ def test_tokenizer_staleness_oov_retrain_trigger(spark):
 
 
 def test_bpe_auto_router_picks_measured_applier(monkeypatch):
-    # VERDICT r12 #4: "auto" routes project -> staged -> arrow at the
-    # measured boundaries (one stage's worth; the 2048-merge measured
-    # crossover where arrow wins ~2x at both word scales).
+    # bpe_encode's segmenter is chosen by merge count alone: project up
+    # to _BPE_PROJECT_MAX, the broadcast-array fold up to the measured
+    # arrow crossover, arrow past it (SCALING §crossover).
     from opensea_datapipeline_spark.operators import text as tx
 
     picked = []
@@ -235,14 +192,15 @@ def test_bpe_auto_router_picks_measured_applier(monkeypatch):
         tx, "bpe_apply_merges_arrow",
         lambda w, m, marker=None: picked.append("arrow"),
     )
-    auto = tx._BPE_APPLIERS["auto"]
-    auto(None, [{}] * 256, None, 256)
-    auto(None, [{}] * 257, None, 256)
-    auto(None, [{}] * tx._BPE_ARROW_CROSSOVER, None, 256)
-    auto(None, [{}] * (tx._BPE_ARROW_CROSSOVER + 1), None, 256)
-    # r16: the broadcast-array fold owns the JVM-only mid band the
-    # staged applier used to hold (same replaces, constant plan size)
+    for n in (
+        tx._BPE_PROJECT_MAX,
+        tx._BPE_PROJECT_MAX + 1,
+        tx._BPE_ARROW_CROSSOVER,
+        tx._BPE_ARROW_CROSSOVER + 1,
+    ):
+        tx._bpe_segment(None, [{}] * n, None)
     assert picked == ["project", "fold", "fold", "arrow"]
+    assert 0 < tx._BPE_PROJECT_MAX < tx._BPE_ARROW_CROSSOVER
 
 
 def test_incremental_groups_small_and_distributed_paths_agree(spark):
