@@ -12,7 +12,7 @@ Iterative-Spark discipline, the part that matters at scale:
 - the (src, dst, outdeg) contribution table is built ONCE and pinned
   with an eager localCheckpoint — every iteration re-joins it, and an
   unpinned frame would re-derive the whole edge lineage per iteration;
-- ranks are localCheckpointed every ``checkpoint_every`` iterations —
+- ranks are localCheckpointed every ``_CHECKPOINT_EVERY`` iterations —
   without lineage truncation the logical plan grows linearly in the
   iteration count and the driver's analysis/optimization time (and
   eventually memory) dominates the actual work, the classic iterative-
@@ -35,6 +35,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.literals import local_frame
+from . import dedup
+
+# Iterations between eager localCheckpoints of the iterative loops'
+# state (pagerank ranks, label_propagation labels, fixed-round k_core
+# edges); the last iteration is never pinned.
+_CHECKPOINT_EVERY = 3
 
 
 def pagerank(
@@ -45,7 +51,6 @@ def pagerank(
     iters: int = 10,
     damping: float = 0.85,
     undirected: bool = False,
-    checkpoint_every: int = 3,
     weight_col: str | None = None,
     redistribute_dangling: bool = False,
 ) -> DataFrame:
@@ -167,7 +172,7 @@ def pagerank(
                 "node",
                 (F.lit(base) + F.lit(damping) * incoming).alias("rank"),
             )
-        if i % checkpoint_every == 0 and i < iters:
+        if i % _CHECKPOINT_EVERY == 0 and i < iters:
             ranks = ranks.localCheckpoint(eager=True)
             # release the PREVIOUS checkpoint's blocks now: the old
             # DataFrame just became unreachable, but the ContextCleaner
@@ -277,9 +282,7 @@ def label_propagation(
     *,
     iters: int = 5,
     undirected: bool = True,
-    checkpoint_every: int = 3,
     weight_col: str | None = None,
-    small_graph_edges: int = 100_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation
     (Raghavan-Albert-Kumara 2007) after exactly ``iters`` rounds —
@@ -317,18 +320,18 @@ def label_propagation(
     communities) and pagerank (which ranks WITHIN a cluster).
     Returns (node, community) — both ids, no floats to drift.
 
-    ``small_graph_edges`` (r13 — the job-floor gate family:
-    ``connected_components_auto``, the incremental fold,
-    ``bpe_train``): for the UNWEIGHTED form only, if the materialized
-    edge table fits the gate it is collected and the identical
-    synchronous loop runs as driver dict ops — integer votes and the
-    (count desc, label asc) tie-break translate exactly; duplicate
-    edges keep counting in votes because the collect takes the edge
-    list as-is (path equality pytest-pinned, incl. directed
+    Driver gate (the job-floor gate family: ``connected_components``
+    and the incremental folds share ``dedup.DRIVER_EDGE_GATE``;
+    ``bpe_train`` has its own word-count gate): for the UNWEIGHTED form
+    only, if the materialized (symmetrized) edge table fits the gate it
+    is collected and the identical synchronous loop runs as driver dict
+    ops — integer votes and the (count desc, label asc) tie-break
+    translate exactly; duplicate edges keep counting in votes because
+    the collect takes the edge list as-is (path equality pytest-pinned, incl. directed
     keep-label nodes and string ids). The weighted form always runs
     distributed: its vote is a 6dp-rounded FLOAT SUM whose
     summation-order/rounding seam the driver must not re-implement.
-    0 disables; above the gate the loop below runs unchanged.
+    Above the gate the loop below runs unchanged.
     """
     w_val = (
         F.col(weight_col).cast("double")
@@ -354,14 +357,15 @@ def label_propagation(
     # pinned 32-partition layout stops AQE from sizing every downstream
     # exchange (SCALING.md §label-prop, negative result recorded).
     e = e.localCheckpoint(eager=True)
-    if weight_col is None and small_graph_edges > 0:
+    if weight_col is None:
         # one limit-bounded collect decides AND delivers (r16 job-floor
         # trim): short of the threshold ⟹ the rows ARE the whole
         # pinned edge set, so the probe job and the second collect the
         # r13 gate paid are gone; at the threshold the prefix is
         # discarded and the distributed loop reads the eager pin
-        rows = e.select("src", "dst").limit(small_graph_edges + 1).collect()
-        if len(rows) <= small_graph_edges:
+        gate = dedup.DRIVER_EDGE_GATE
+        rows = e.select("src", "dst").limit(gate + 1).collect()
+        if len(rows) <= gate:
             elist = [(r["src"], r["dst"]) for r in rows]
             if undirected:
                 node_set = {s for s, _ in elist}
@@ -436,7 +440,7 @@ def label_propagation(
                     ),
                 )
             )
-        if i % checkpoint_every == 0 and i < iters:
+        if i % _CHECKPOINT_EVERY == 0 and i < iters:
             labels = labels.localCheckpoint(eager=True)
             import gc
 
@@ -540,7 +544,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     rounds: int | None = None,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """k-core of the undirected graph: the maximal subgraph where every
     node keeps degree ≥ k, by iterative peeling (repeatedly drop nodes
@@ -604,7 +607,7 @@ def k_core(
             n_live = n_nxt
         else:
             live = nxt
-            if r % checkpoint_every == 0 and r < rounds:
+            if r % _CHECKPOINT_EVERY == 0 and r < rounds:
                 live = live.localCheckpoint(eager=True)
                 gc.collect()
     return _deg(live).select(

@@ -1340,15 +1340,20 @@ def _bpe_train_driver_loop(
     return merges
 
 
+# bpe_train's driver gate: distinct-word tables at or under this many
+# rows train on the driver (_bpe_train_driver_loop).
+_BPE_DRIVER_WORDS = 65_536
+# Merges between eager checkpoints of bpe_train's distributed state.
+_BPE_CHECKPOINT_EVERY = 4
+
+
 def bpe_train(
     docs: DataFrame,
     *,
     n_merges: int = 16,
     min_count: int = 2,
     text_col: str = "text",
-    checkpoint_every: int = 4,
     marker: str | None = None,
-    driver_gate: int = 65536,
 ) -> DataFrame:
     """Iterative BPE tokenizer TRAINING (Sennrich et al. 2016): start
     from characters, then ``n_merges`` times (a) count corpus-wide
@@ -1365,7 +1370,7 @@ def bpe_train(
     Scale discipline (the pagerank/LPA iterative playbook): the corpus
     is scanned ONCE into the (word, cnt) table — every iteration after
     that runs over distinct words, not tokens. The eagerly-checkpointed
-    state is re-checkpointed every ``checkpoint_every`` merges (dead
+    state is re-checkpointed every ``_BPE_CHECKPOINT_EVERY`` merges (dead
     checkpoints released via gc — the measured 2x late-iteration trap);
     between checkpoints the pending merges ride as chained codegen
     replace() projections. The per-iteration argmax is a 1-ROW collect
@@ -1375,16 +1380,16 @@ def bpe_train(
     symbol-pair space. Stops early when the best pair's count falls
     below ``min_count`` (a merge seen once generalizes to nothing).
 
-    ``driver_gate`` (r13 — the incremental_dedup_groups probe-gate
-    pattern): after the one corpus pass, if the DISTINCT-WORD count is
-    at or under the gate, the rendered (s, cnt) rows are collected and
+    Driver gate ``_BPE_DRIVER_WORDS`` (the incremental_dedup_groups
+    probe-gate pattern): after the one corpus pass, if the
+    DISTINCT-WORD count is at or under the gate, the rendered (s, cnt) rows are collected and
     the loop runs on the driver as pure string ops — zero jobs per
     merge instead of a shuffle + 1-row collect per merge (the loop's
     wall is ~all fixed job overhead at small vocab tables). The
     collect is vocabulary-bounded by construction (the gate), the
     merge table returned is IDENTICAL (path-equality pytest), and at
     100 TB a web-scale distinct-word table exceeds any sane gate so
-    the distributed loop below is the path that runs. 0 disables.
+    the distributed loop below is the path that runs.
 
     Returns the ordered merge table (merge_rank, left_sym, right_sym,
     merged, n) — all strings/ints, hash-exact cross-engine.
@@ -1403,10 +1408,8 @@ def bpe_train(
     # job). Only the distributed path pins, eagerly, before its
     # per-merge loop; that pin re-runs the word-count pass the probe
     # ran, once per training.
-    probe = (
-        state.limit(driver_gate + 1).collect() if driver_gate > 0 else None
-    )
-    if probe is not None and len(probe) <= driver_gate:
+    probe = state.limit(_BPE_DRIVER_WORDS + 1).collect()
+    if len(probe) <= _BPE_DRIVER_WORDS:
         rows = [(r["s"], r["cnt"]) for r in probe]
         return _bpe_merge_frame(
             spark, _bpe_train_driver_loop(rows, n_merges, min_count)
@@ -1442,7 +1445,7 @@ def bpe_train(
             F.replace(F.col("s"), F.lit(find), F.lit(repl)).alias("s"),
             "cnt",
         )
-        if k % checkpoint_every == 0 and k < n_merges:
+        if k % _BPE_CHECKPOINT_EVERY == 0 and k < n_merges:
             state = state.localCheckpoint(eager=True)
             # release the superseded checkpoint's blocks now (pagerank
             # discipline: late iterations otherwise pay 2x)

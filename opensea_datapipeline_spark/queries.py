@@ -1923,9 +1923,8 @@ def q_incremental_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             old, "text", "doc_id",
             num_hashes=8, band_size=2, jaccard_threshold=0.7,
         )
-        dd.connected_components_auto(
-            old.select(F.col("doc_id").alias("id")), old_pairs,
-            id_col="id", assume_distinct=True,
+        dd.connected_components(
+            old.select(F.col("doc_id").alias("id")), old_pairs, id_col="id"
         ).write.parquet(state + "/groups")
         dd.minhash_band_table(
             old, "text", "doc_id", num_hashes=8, band_size=2
@@ -2575,8 +2574,8 @@ def q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", num_hashes=8, band_size=2,
         jaccard_threshold=0.7,
     )
-    comps = dd.connected_components_auto(
-        docs.select("doc_id"), pairs, id_col="doc_id", assume_distinct=True
+    comps = dd.connected_components(
+        docs.select("doc_id"), pairs, id_col="doc_id"
     )
     pr = gr.pagerank(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
@@ -2637,8 +2636,9 @@ def _dedup_groups_oracle(bits: int = 16, radius: int = 3,
                          max_id: int = 300) -> str:
     # Min-reachable-label components, computed by brute-force transitive
     # closure (recursive CTE, UNION-distinct guarantees termination) over
-    # the same simhash pair set. The Spark side's iterative min-label
-    # propagation must land on identical group ids.
+    # the same simhash pair set. The Spark side's resolver (driver
+    # union-find, or min-label then star) must land on identical group
+    # ids.
     return f"""
 WITH RECURSIVE
 nodes AS (SELECT doc_id AS id FROM documents WHERE doc_id < {max_id}),
@@ -2678,19 +2678,20 @@ def q_dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("dedup_groups", _dedup_groups_oracle(16, 3, 300))
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pairs -> groups: the dedup-resolution step between LSH candidate
-    # generation and canonical-doc retention. Shape-adaptive default
-    # (VERDICT r4 #8): min-label rounds (one equi-join + one min agg
-    # each) resolve threshold near-dup graphs outright — their clusters
-    # have diameter ~1-3 — and a long-diameter graph auto-switches to
-    # label-contracted large-star/small-star instead of iterating to the
-    # diameter. Singleton docs keep their own id as group_id.
+    # generation and canonical-doc retention. dd.connected_components
+    # resolves a graph under its edge gate by driver union-find; above
+    # it, min-label rounds (one equi-join + one min agg each) resolve
+    # threshold near-dup graphs outright — their clusters have diameter
+    # ~1-3 — and a long-diameter graph switches to label-contracted
+    # large-star/small-star instead of iterating to the diameter.
+    # Singleton docs keep their own id as group_id.
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     pairs = dd.simhash_near_dup_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
         bits=16, radius=3, max_id=300,
     )
-    return dd.connected_components_auto(
-        docs.select("doc_id"), pairs, id_col="doc_id", assume_distinct=True
+    return dd.connected_components(
+        docs.select("doc_id"), pairs, id_col="doc_id"
     ).select(F.col("id").cast("long").alias("id"),
              F.col("group_id").cast("long").alias("group_id"))
 
@@ -5554,7 +5555,7 @@ FROM grp JOIN sz ON sz.entity_id = grp.entity_id
 def q_entity_resolution_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # End-to-end entity resolution: SymSpell deletion-variant blocking
     # (equi-join candidates, never N² — dedup.edit_distance_pairs) →
-    # exact levenshtein verify → min-label connected components →
+    # exact levenshtein verify → connected components →
     # canonical entity id + entity size per record. The composition the
     # record-linkage chain actually ships; the oracle brute-forces the
     # pairs AND the transitive closure (recursive CTE), so one lost
@@ -6008,8 +6009,8 @@ def q_corpus_curation_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped, "text", "doc_id",
         num_hashes=8, band_size=2, jaccard_threshold=0.8,
     ).select("id_a", "id_b")
-    groups = dd.connected_components_auto(
-        deduped.select("doc_id"), pairs, id_col="doc_id", assume_distinct=True
+    groups = dd.connected_components(
+        deduped.select("doc_id"), pairs, id_col="doc_id"
     )
     canon = deduped.join(
         groups.filter(F.col("id") == F.col("group_id")).select(
@@ -6766,7 +6767,7 @@ def q_corpus_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits=16, radius=3, max_id=300,
     )
     groups = dd.connected_components(
-        docs.select("doc_id"), pairs, id_col="doc_id", assume_distinct=True
+        docs.select("doc_id"), pairs, id_col="doc_id"
     )
     sizes = groups.groupBy("group_id").agg(F.count(F.lit(1)).alias("cnt"))
     return sizes.agg(

@@ -37,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from opensea_datapipeline_spark.operators import text as tx  # noqa: E402
 from opensea_datapipeline_spark.operators.text import (  # noqa: E402
     _bpe_word_freq,
     bpe_encode,
@@ -104,11 +105,7 @@ def run_leg(spark, docs, tag):
     merges, m = timed(
         spark,
         f"bpe_train_{N_MERGES}",
-        # driver_gate=0: this leg documents the DISTRIBUTED loop's
-        # scaling shape (SCALING §bpe); the r13 default gate would
-        # route the <=65536-word synthetic legs to the driver path
-        lambda: bpe_train(d, n_merges=N_MERGES, min_count=2,
-                          driver_gate=0),
+        lambda: bpe_train(d, n_merges=N_MERGES, min_count=2),
     )
     m["per_round_s"] = round(m["wall_s"] / N_MERGES, 3)
     leg["ops"].append(m)
@@ -284,6 +281,10 @@ def main() -> None:
         if a.startswith("--project-fold"):
             v = a.split("=", 1)[1]
             project_fold = [int(x) for x in v.split(",")] if v else []
+    # the train legs document the DISTRIBUTED loop's scaling shape
+    # (SCALING §bpe); the default gate would route the <=65536-word
+    # synthetic legs to the driver loop
+    tx._BPE_DRIVER_WORDS = 0
     spark = get_spark(
         "scaling-bpe", extra_configs={"spark.ui.enabled": "true"}
     )

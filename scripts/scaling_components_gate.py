@@ -1,12 +1,13 @@
 """SCALING leg: the r13 probe-gated union-find in
-``connected_components_auto`` vs the distributed resolver, measured on
+``connected_components`` vs its distributed path, measured on
 the real dedup edge sets (simhash near-dup pairs over replicated
 documents corpora).
 
 Claim under test: below the 100k-edge gate the driver path removes the
 components loop's fixed job overhead without changing labels; above
-the gate the auto resolver is byte-identical to r12 (the gate probe is
-one bounded count on a pinned table).
+the gate the resolver runs its distributed min-label/star path (the gate
+probe is one bounded collect on a pinned table). The distributed leg
+sets ``dedup.DRIVER_EDGE_GATE`` to 0.
 
 Run:  python scripts/scaling_components_gate.py [--scales=1,10]
 Prints one JSON object; paste/merge into SCALING_RUN_r13.json.
@@ -58,12 +59,12 @@ def main() -> None:
         ).localCheckpoint(eager=True)
         n_edges = pairs.count()
         leg = {"max_id": cap, "n_docs": docs.count(), "n_edges": n_edges}
-        for tag, gate in (("gated", 100_000), ("distributed", 0)):
+        default_gate = dd.DRIVER_EDGE_GATE
+        for tag, gate in (("gated", default_gate), ("distributed", 0)):
+            dd.DRIVER_EDGE_GATE = gate
             # warm once, then min-of-3
-            fn = lambda: dd.connected_components_auto(
-                nodes, pairs, id_col="id", src_col="id_a",
-                dst_col="id_b", assume_distinct=True,
-                small_graph_edges=gate,
+            fn = lambda: dd.connected_components(
+                nodes, pairs, id_col="id", src_col="id_a", dst_col="id_b"
             ).select("group_id").distinct().count()
             groups = fn()
             walls = []
@@ -73,6 +74,7 @@ def main() -> None:
                 walls.append(round(time.perf_counter() - t0, 3))
             leg[tag] = {"wall_s": min(walls), "walls": walls,
                         "groups": groups}
+        dd.DRIVER_EDGE_GATE = default_gate
         assert leg["gated"]["groups"] == leg["distributed"]["groups"]
         legs.append(leg)
         print(json.dumps(leg))

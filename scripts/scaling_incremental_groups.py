@@ -61,9 +61,8 @@ def run_leg(spark, mult):
     dd.minhash_band_table(old, "text", "doc_id", num_hashes=8,
                           band_size=2).write.parquet(bands_dir)
     base_pairs = dd.minhash_lsh_pairs(base, "text", "doc_id", **LSH)
-    base_groups = dd.connected_components_auto(
-        base.select(F.col("doc_id").alias("id")), base_pairs,
-        id_col="id", assume_distinct=True,
+    base_groups = dd.connected_components(
+        base.select(F.col("doc_id").alias("id")), base_pairs, id_col="id"
     )
     reps = spark.range(mult).select(F.col("id").alias("rep"))
     groups = base_groups.crossJoin(reps).select(

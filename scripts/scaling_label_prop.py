@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from opensea_datapipeline_spark.operators import dedup  # noqa: E402
 from opensea_datapipeline_spark.operators.graph import (  # noqa: E402
     label_propagation,
 )
@@ -62,6 +63,8 @@ def main() -> None:
     for a in sys.argv[1:]:
         if a.startswith("--scales"):
             scales = [int(x) for x in a.split("=", 1)[1].split(",")]
+    # the legs measure the DISTRIBUTED loop, not the driver gate
+    dedup.DRIVER_EDGE_GATE = 0
     spark = get_spark(
         "scaling-label-prop", extra_configs={"spark.ui.enabled": "true"}
     )
@@ -77,10 +80,7 @@ def main() -> None:
                 {
                     **measure(
                         spark,
-                        # small_graph_edges=0: the leg measures the DISTRIBUTED loop
-                        lambda: label_propagation(
-                            e, iters=3, small_graph_edges=0
-                        ),
+                        lambda: label_propagation(e, iters=3),
                         f"lpa3_{'hub' if hub else 'flat'}",
                     ),
                     "n_edges": e.count(),

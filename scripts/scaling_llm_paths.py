@@ -1,5 +1,5 @@
 """Measure the LLM-pipeline scale paths under 10x/100x corpus growth
-(VERDICT r4 task #6): minhash_lsh_pairs, dedup_groups (auto resolver),
+(VERDICT r4 task #6): minhash_lsh_pairs, dedup_groups (connected_components),
 knn_topk_lsh, ann_ivf_topk.
 
 Growth model — the realistic direction for corpus growth:
@@ -477,9 +477,8 @@ def main():
             entry["minhash_lsh_pairs_sec"] = round(time.perf_counter() - t0, 2)
 
             t0 = time.perf_counter()
-            groups = dd.connected_components_auto(
-                docs.select("doc_id"), pairs, id_col="doc_id",
-                assume_distinct=True,
+            groups = dd.connected_components(
+                docs.select("doc_id"), pairs, id_col="doc_id"
             )
             entry["dedup_groups"] = groups.select("group_id").distinct().count()
             entry["dedup_groups_auto_sec"] = round(time.perf_counter() - t0, 2)

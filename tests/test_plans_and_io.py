@@ -208,6 +208,21 @@ def test_bpe_decode_build_job_ceiling(spark, sf_dir):
     assert jobs_submitted(spark) - before <= 3
 
 
+def test_components_resolver_job_ceiling(spark, sf_dir):
+    # Near-dup graphs under the driver edge gate resolve in one Arrow
+    # collect plus a broadcast join. Resolved by min-label rounds alone,
+    # these queries ran about 40 and 33 jobs. Counted on a second call:
+    # the first also pays the process's one-off table reads.
+    ceilings = {"corpus_dedup_summary": 8, "entity_resolution_groups": 10}
+    jobs = {}
+    for name in ceilings:
+        QUERIES[name](spark, sf_dir).collect()
+        before = jobs_submitted(spark)
+        QUERIES[name](spark, sf_dir).collect()
+        jobs[name] = jobs_submitted(spark) - before
+    assert all(jobs[n] <= c for n, c in ceilings.items()), jobs
+
+
 def test_partitioned_write_and_partition_pruning(spark, sf_dir, tmp_path):
     out = str(tmp_path / "events_by_type")
     events = load_table(spark, sf_dir, "events").withColumn(
@@ -1385,21 +1400,21 @@ def test_covariance_partial_pass_no_upstream_shuffle(spark, sf_dir):
 
 
 def test_components_gate_below_plan_is_broadcast_join(spark):
-    # r13: the below-gate auto resolver must re-enter the plan as ONE
+    # r13: the below-gate resolver must re-enter the plan as ONE
     # broadcast join of the driver union-find map -- no min-label
     # iteration joins, no star rounds, no SinglePartition funnel. Above
-    # the gate (small_graph_edges=0) the iterative plan is expected.
+    # the gate (dedup.DRIVER_EDGE_GATE) the iterative plan is expected.
     from pyspark.sql import functions as F
 
     from opensea_datapipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
     )
 
     nodes = spark.range(100).select(F.col("id"))
     edges = spark.range(99).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = connected_components_auto(nodes, edges)
+    out = connected_components(nodes, edges)
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -584,7 +584,7 @@ graph_strategy = st.tuples(
 @settings(max_examples=8, deadline=None)
 def test_incremental_groups_equal_full_recompute(spark, g):
     from opensea_datapipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
         incremental_dedup_groups,
     )
 
@@ -600,7 +600,7 @@ def test_incremental_groups_equal_full_recompute(spark, g):
         ).filter("id_a IS NOT NULL")
 
     old_nodes = spark.createDataFrame([(i,) for i in old_ids], "id long")
-    old_groups = connected_components_auto(
+    old_groups = connected_components(
         old_nodes, df_pairs(old_pairs), id_col="id"
     )
     got = {
@@ -617,7 +617,7 @@ def test_incremental_groups_equal_full_recompute(spark, g):
     )
     want = {
         r.id: r.group_id
-        for r in connected_components_auto(
+        for r in connected_components(
             all_nodes, df_pairs(old_pairs + inc_pairs), id_col="id"
         ).collect()
     }

@@ -203,12 +203,15 @@ def test_bpe_auto_router_picks_measured_applier(monkeypatch):
     assert 0 < tx._BPE_PROJECT_MAX < tx._BPE_ARROW_CROSSOVER
 
 
-def test_incremental_groups_small_and_distributed_paths_agree(spark):
+def test_incremental_groups_small_and_distributed_paths_agree(
+    spark, monkeypatch
+):
     # VERDICT r12 #1: the fold resolves shard-sized contracted graphs
     # by probe-gated driver union-find; above the gate the distributed
     # components loop is the fallback. Both must label identically
     # (group_id = min member id), including the bridge-merge case and
     # the empty-edge fast path.
+    from opensea_datapipeline_spark.operators import dedup
     from opensea_datapipeline_spark.operators.dedup import (
         incremental_dedup_groups,
     )
@@ -230,12 +233,14 @@ def test_incremental_groups_small_and_distributed_paths_agree(spark):
             old_groups, inc_pairs, new_ids
         ).collect()
     }
-    dist = {
-        r.id: r.group_id
-        for r in incremental_dedup_groups(
-            old_groups, inc_pairs, new_ids, small_graph_edges=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "DRIVER_EDGE_GATE", 0)
+        dist = {
+            r.id: r.group_id
+            for r in incremental_dedup_groups(
+                old_groups, inc_pairs, new_ids
+            ).collect()
+        }
     assert small == want
     assert dist == want
 
@@ -327,7 +332,7 @@ def test_streaming_corpus_dedup_empty_batch_is_safe_noop(spark, tmp_path):
     # no-op: no pairs, no appended rows, assignment unchanged, and the
     # stream still lands on the full-corpus closure.
     from opensea_datapipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
         minhash_lsh_pairs,
     )
     from opensea_datapipeline_spark.streaming.corpus_dedup import (
@@ -361,9 +366,8 @@ def test_streaming_corpus_dedup_empty_batch_is_safe_noop(spark, tmp_path):
     pairs = minhash_lsh_pairs(docs, "text", "doc_id", jaccard_threshold=0.5)
     want = {
         r.id: r.group_id
-        for r in connected_components_auto(
-            docs.select(F.col("doc_id").alias("id")), pairs,
-            id_col="id", assume_distinct=True,
+        for r in connected_components(
+            docs.select(F.col("doc_id").alias("id")), pairs, id_col="id"
         ).collect()
     }
     assert got == want
@@ -372,12 +376,13 @@ def test_streaming_corpus_dedup_empty_batch_is_safe_noop(spark, tmp_path):
     assert len(walls) == 3  # the empty batch committed like any other
 
 
-def test_bpe_train_driver_gate_paths_agree(spark):
+def test_bpe_train_driver_gate_paths_agree(spark, monkeypatch):
     # r13: bpe_train's probe-gated driver loop (the incremental-groups
     # fold pattern applied to BPE training) must return the IDENTICAL
     # merge table as the distributed loop -- including tie-breaks, the
     # min_count early stop, and the marker form. Rendering is
     # Spark-side in both paths, so this pins the loop semantics alone.
+    from opensea_datapipeline_spark.operators import text
     from opensea_datapipeline_spark.operators.text import bpe_train
 
     texts = [
@@ -396,22 +401,23 @@ def test_bpe_train_driver_gate_paths_agree(spark):
         dict(n_merges=3, min_count=100),  # early stop -> empty
     ):
         fast = [tuple(r) for r in bpe_train(docs, **kw).collect()]
-        dist = [
-            tuple(r)
-            for r in bpe_train(docs, driver_gate=0, **kw).collect()
-        ]
+        with monkeypatch.context() as m:
+            m.setattr(text, "_BPE_DRIVER_WORDS", 0)
+            dist = [tuple(r) for r in bpe_train(docs, **kw).collect()]
         assert fast == dist, kw
         fast.sort()
         assert fast == sorted(fast)  # rank-ordered
 
 
-def test_components_auto_gate_paths_agree(spark):
-    # r13: connected_components_auto's probe-gated union-find must label
+def test_components_gate_paths_agree(spark, monkeypatch):
+    # r13: connected_components' probe-gated union-find must label
     # identically to the distributed min-label/star path on every graph
-    # shape -- blob, long chain (the star-switch territory), isolates,
-    # and string node ids.
+    # shape -- blob, long chain (the star-switch territory: 9 hops
+    # outlast the 4-round min-label prefix), isolates, and string node
+    # ids.
+    from opensea_datapipeline_spark.operators import dedup
     from opensea_datapipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
     )
 
     # chain 0-1-...-9 + blob {20,21,22} + isolates 30, 31
@@ -424,14 +430,14 @@ def test_components_auto_gate_paths_agree(spark):
             for n in nodes}
     fast = {
         r.id: r.group_id
-        for r in connected_components_auto(ndf, edf).collect()
+        for r in connected_components(ndf, edf).collect()
     }
-    dist = {
-        r.id: r.group_id
-        for r in connected_components_auto(
-            ndf, edf, small_graph_edges=0, switch_after=2
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "DRIVER_EDGE_GATE", 0)
+        dist = {
+            r.id: r.group_id
+            for r in connected_components(ndf, edf).collect()
+        }
     assert fast == want
     assert dist == want
 
@@ -443,18 +449,32 @@ def test_components_auto_gate_paths_agree(spark):
         [("z", "b"), ("b", "a")], "id_a string, id_b string"
     )
     got = {r.id: r.group_id
-           for r in connected_components_auto(sn, se).collect()}
+           for r in connected_components(sn, se).collect()}
     assert got == {"a": "a", "b": "a", "z": "a", "lone": "lone"}
 
 
-def test_label_propagation_gate_paths_agree(spark):
+def test_label_propagation_gate_paths_agree(spark, monkeypatch):
     # r13: the driver LPA loop (unweighted gate) must label identically
     # to the distributed counted-table argmax for every iters count --
     # incl. duplicate edges counting in votes, directed keep-label
     # nodes, and string ids.
+    from opensea_datapipeline_spark.operators import dedup
     from opensea_datapipeline_spark.operators.graph import (
         label_propagation,
     )
+
+    def both_paths(*args, **kw):
+        fast = {
+            r.node: r.community
+            for r in label_propagation(*args, **kw).collect()
+        }
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "DRIVER_EDGE_GATE", 0)
+            dist = {
+                r.node: r.community
+                for r in label_propagation(*args, **kw).collect()
+            }
+        return fast, dist
 
     # two cliques bridged by one edge + a duplicate edge that biases a
     # vote + a pendant
@@ -465,18 +485,7 @@ def test_label_propagation_gate_paths_agree(spark):
     )
     edf = spark.createDataFrame(edges, "id_a long, id_b long")
     for iters in (1, 2, 3, 5):
-        fast = {
-            r.node: r.community
-            for r in label_propagation(
-                edf, "id_a", "id_b", iters=iters
-            ).collect()
-        }
-        dist = {
-            r.node: r.community
-            for r in label_propagation(
-                edf, "id_a", "id_b", iters=iters, small_graph_edges=0
-            ).collect()
-        }
+        fast, dist = both_paths(edf, "id_a", "id_b", iters=iters)
         assert fast == dist, iters
 
     # directed: source-only node keeps its own label each round
@@ -484,19 +493,9 @@ def test_label_propagation_gate_paths_agree(spark):
         [("a", "b"), ("b", "c"), ("c", "b")], "s string, d string"
     )
     for iters in (1, 2, 4):
-        fast = {
-            r.node: r.community
-            for r in label_propagation(
-                ddf, "s", "d", iters=iters, undirected=False
-            ).collect()
-        }
-        dist = {
-            r.node: r.community
-            for r in label_propagation(
-                ddf, "s", "d", iters=iters, undirected=False,
-                small_graph_edges=0,
-            ).collect()
-        }
+        fast, dist = both_paths(
+            ddf, "s", "d", iters=iters, undirected=False
+        )
         assert fast == dist, iters
         assert fast["a"] == "a"  # no in-edges: label kept
 

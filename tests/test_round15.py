@@ -214,7 +214,7 @@ def test_corpus_dedup_loop_compacts_and_matches_closure(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from opensea_datapipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
         minhash_lsh_pairs,
     )
     from opensea_datapipeline_spark.streaming.corpus_dedup import (
@@ -251,9 +251,8 @@ def test_corpus_dedup_loop_compacts_and_matches_closure(spark, tmp_path):
     pairs = minhash_lsh_pairs(docs, "text", "doc_id", jaccard_threshold=0.5)
     want = {
         r.id: r.group_id
-        for r in connected_components_auto(
-            docs.select(F.col("doc_id").alias("id")), pairs,
-            id_col="id", assume_distinct=True,
+        for r in connected_components(
+            docs.select(F.col("doc_id").alias("id")), pairs, id_col="id"
         ).collect()
     }
     assert got == want and len(got) == 8
@@ -324,7 +323,7 @@ def test_delta_fold_chain_equals_full_recompute(spark):
     from pyspark.sql import functions as F
 
     from opensea_datapipeline_spark.operators.dedup import (
-        connected_components_auto,
+        connected_components,
         incremental_dedup_groups_delta,
     )
 
@@ -361,7 +360,7 @@ def test_delta_fold_chain_equals_full_recompute(spark):
         got[i] = min(g, got.get(i, g))
     want = {
         r.id: r.group_id
-        for r in connected_components_auto(
+        for r in connected_components(
             spark.createDataFrame([(i,) for i in all_ids], "id long"),
             df_pairs(all_pairs), id_col="id",
         ).collect()

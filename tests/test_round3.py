@@ -260,9 +260,8 @@ def test_minhash_skew_split_on_hot_band(spark):
 
 def test_two_phase_cc_chain_and_parity(spark):
     # Kiveris large-star/small-star: collapses a long chain in O(log n)
-    # rounds where min-label propagation needs ~diameter rounds (and
-    # raises past max_iter). Parity-checked against min-label on a
-    # clustered graph where both apply.
+    # rounds where min-label propagation needs ~diameter rounds.
+    # Parity-checked against connected_components on a clustered graph.
     from opensea_datapipeline_spark.operators.dedup import (
         connected_components,
         connected_components_two_phase,
@@ -276,13 +275,6 @@ def test_two_phase_cc_chain_and_parity(spark):
     out = connected_components_two_phase(nodes, chain, id_col="id")
     assert out.filter(F.col("group_id") != 0).count() == 0
     assert out.count() == n
-
-    # min-label on the same chain exceeds its iteration budget — the
-    # documented reason the two-phase variant exists
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, chain, id_col="id", max_iter=10)
 
     # parity on a clustered graph + singletons
     edges = [(i, i + 100) for i in range(50)] + [(200, 201), (201, 202)]

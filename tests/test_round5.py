@@ -1,12 +1,12 @@
 """Round-5 guardrails: shape-adaptive connected components (VERDICT r4
-task #8) — auto must equal min-label on dense threshold graphs, equal
-star on long-diameter chains, and never iterate to the diameter."""
-import pytest
+task #8) — the resolver's distributed path must label dense threshold
+graphs inside its min-label prefix, resolve long-diameter chains through
+contract + star with star's labels, and never iterate to the diameter."""
 from pyspark.sql import functions as F
 
+from opensea_datapipeline_spark.operators import dedup
 from opensea_datapipeline_spark.operators.dedup import (
     connected_components,
-    connected_components_auto,
     connected_components_two_phase,
 )
 
@@ -15,9 +15,9 @@ def _labels(df):
     return {(r.id, r.group_id) for r in df.collect()}
 
 
-def test_auto_matches_min_label_on_dense_blobs(spark):
-    # threshold-graph shape: 10 cliques of 5 — converges inside the
-    # min-label prefix, so auto == min-label exactly
+def test_components_match_star_on_dense_blobs(spark, monkeypatch):
+    # threshold-graph shape: 10 cliques of 5 — with the driver gate off
+    # it converges inside the min-label prefix and equals star exactly
     n = 50
     nodes = spark.range(n).select("id")
     edges = (
@@ -28,36 +28,46 @@ def test_auto_matches_min_label_on_dense_blobs(spark):
                  == (F.col("b.id") / 5).cast("long")))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    got = _labels(connected_components_auto(
-        nodes, edges, assume_distinct=True))
-    want = _labels(connected_components(nodes, edges, assume_distinct=True))
+    want = {(i, (i // 5) * 5) for i in range(n)}
+    assert _labels(connected_components(nodes, edges)) == want
+    monkeypatch.setattr(dedup, "DRIVER_EDGE_GATE", 0)
+    got = _labels(connected_components(nodes, edges))
     assert got == want
-    assert got == {(i, (i // 5) * 5) for i in range(n)}
+    assert got == _labels(connected_components_two_phase(nodes, edges))
 
 
-def test_auto_resolves_chain_where_min_label_budget_fails(spark):
-    # 120-node path: diameter 119. Min-label at the auto prefix budget
-    # (4 rounds) cannot converge; auto must contract and finish via star
-    # rounds with the same labels star produces from scratch.
+def test_components_resolve_chain_past_min_label_prefix(spark, monkeypatch):
+    # 120-node path: diameter 119. With the driver gate off, the
+    # min-label prefix (4 rounds) cannot converge; the resolver must
+    # contract and finish via star rounds with the same labels star
+    # produces from scratch.
+    monkeypatch.setattr(dedup, "DRIVER_EDGE_GATE", 0)
     n = 120
     nodes = spark.range(n).select("id")
     chain = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    with pytest.raises(RuntimeError):
-        connected_components(nodes, chain, max_iter=4, assume_distinct=True)
-    got = _labels(connected_components_auto(
-        nodes, chain, switch_after=4, assume_distinct=True))
+    rounds = []
+    real = dedup._min_label_rounds
+
+    def spy(e, labels):
+        out = real(e, labels)
+        rounds.append(out[1])
+        return out
+
+    monkeypatch.setattr(dedup, "_min_label_rounds", spy)
+    got = _labels(connected_components(nodes, chain))
+    assert rounds == [False]  # the prefix ran and did not converge
     assert got == {(i, 0) for i in range(n)}
     assert got == _labels(connected_components_two_phase(nodes, chain))
 
 
-def test_auto_keeps_singletons_and_mixed_shapes(spark):
+def test_components_keep_singletons_and_mixed_shapes(spark):
     # two components + isolated nodes, ids deliberately non-contiguous
     nodes = spark.createDataFrame(
         [(i,) for i in [3, 7, 9, 12, 20, 31, 44]], "id long")
     edges = spark.createDataFrame(
         [(7, 3), (9, 7), (20, 12)], "id_a long, id_b long")
-    got = _labels(connected_components_auto(nodes, edges))
+    got = _labels(connected_components(nodes, edges))
     assert got == {(3, 3), (7, 3), (9, 3), (12, 12), (20, 12),
                    (31, 31), (44, 44)}
 
