@@ -4,8 +4,8 @@
     python -m opensea_datapipeline_spark run --events <path> --out <dir>
     python -m opensea_datapipeline_spark query <name> --sf-dir <dir> [-n 20]
     python -m opensea_datapipeline_spark list
-    python -m opensea_datapipeline_spark index build|append|probe \
-        --kind lsh|ivf|pq|ivfpq --path <dir> [--embeddings|--queries ...]
+    python -m opensea_datapipeline_spark index build|append|probe|stale \
+        --path <dir> [--kind lsh|ivf|pq|ivfpq] [--embeddings|--queries ...]
     python -m opensea_datapipeline_spark tokenizer train|encode|decode \
         --path <artifact-dir> [--docs|--encoded <parquet>] [--marker C]
     python -m opensea_datapipeline_spark monitor --stream <glob> \
@@ -50,8 +50,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     p_i.add_argument("action", choices=["build", "append", "probe", "stale"])
     p_i.add_argument("--kind", choices=["lsh", "ivf", "pq", "ivfpq"],
-                     help="index kind (required for build/append/probe; "
-                          "stale reads it from the index meta)")
+                     help="index kind (required for build; append and "
+                          "probe read it from the index meta and fail on "
+                          "a given kind that differs; stale ignores it)")
     p_i.add_argument("--path", required=True, help="index directory")
     p_i.add_argument("--embeddings",
                      help="embeddings parquet (build/append input)")
@@ -243,65 +244,63 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "index":
             from .operators import ann_index as ai
 
-            if args.action != "stale" and not args.kind:
-                print("--kind is required for build/append/probe",
-                      file=sys.stderr)
-                return 2
             cols = dict(id_col=args.id_col, vec_col=args.vec_col)
             if args.action == "build":
+                if not args.kind:
+                    print("--kind is required for build", file=sys.stderr)
+                    return 2
                 emb = spark.read.parquet(args.embeddings)
                 build = {
-                    "lsh": lambda: ai.write_lsh_index(
-                        ai.build_lsh_index(emb, **cols), args.path),
-                    "ivf": lambda: ai.write_ivf_index(
-                        ai.build_ivf_index(emb, **cols), args.path),
-                    "pq": lambda: ai.write_pq_index(
-                        ai.build_pq_index(emb, **cols), args.path),
-                    "ivfpq": lambda: ai.write_ivfpq_index(
-                        ai.build_ivfpq_index(
-                            emb, residual=args.residual, **cols
-                        ),
-                        args.path),
+                    "lsh": ai.build_lsh_index,
+                    "ivf": ai.build_ivf_index,
+                    "pq": ai.build_pq_index,
+                    "ivfpq": lambda e, **c: ai.build_ivfpq_index(
+                        e, residual=args.residual, **c),
                 }
-                build[args.kind]()
-            elif args.action == "stale":
+                ai.write_index(build[args.kind](emb, **cols), args.path)
+                return 0
+            if args.action == "stale":
                 print(json.dumps(ai.index_staleness(
                     spark, args.path,
                     rebuild_threshold=args.rebuild_threshold,
                 )))
-            elif args.action == "append":
-                emb = spark.read.parquet(args.embeddings)
-                appender = {
-                    "lsh": ai.append_lsh_index_at,
-                    "ivf": ai.append_ivf_index_at,
-                    "pq": ai.append_pq_index_at,
-                    "ivfpq": ai.append_ivfpq_index_at,
-                }
-                appender[args.kind](spark, args.path, emb, **cols)
-            else:  # probe
-                if args.kind in ("pq", "ivfpq") and not args.queries:
-                    print("--queries is required for pq/ivfpq probes "
-                          "(bounded serving batch)", file=sys.stderr)
-                    return 2
-                q = spark.read.parquet(args.queries) if args.queries else None
-                if args.kind == "lsh":
-                    res = ai.lsh_probe(
-                        ai.read_lsh_index(spark, args.path), q, k=args.k, **cols)
-                elif args.kind == "ivf":
-                    res = ai.ivf_probe(
-                        ai.read_ivf_index(spark, args.path), q, k=args.k,
-                        n_probe=args.n_probe, **cols)
-                elif args.kind == "pq":
-                    res = ai.pq_probe(
-                        ai.read_pq_index(spark, args.path), q, k=args.k, **cols)
-                else:
-                    res = ai.ivfpq_probe(
-                        ai.read_ivfpq_index(spark, args.path), q, k=args.k,
-                        n_probe=args.n_probe, **cols)
-                if args.out:
-                    res.write.mode("overwrite").parquet(args.out)
-                else:
-                    res.show(50, truncate=False)
+                return 0
+            # append / probe: the kind is the meta's; a given --kind
+            # must match it
+            try:
+                index = (
+                    ai.read_index(spark, args.path, args.kind)
+                    if args.action == "probe" or args.kind else None
+                )
+            except ValueError as exc:
+                print(exc, file=sys.stderr)
+                return 2
+            if args.action == "append":
+                ai.append_index(
+                    spark, args.path, spark.read.parquet(args.embeddings),
+                    **cols,
+                )
+                return 0
+            compressed = isinstance(index, (ai.PqIndex, ai.IvfPqIndex))
+            if compressed and not args.queries:
+                print("--queries is required for pq/ivfpq probes "
+                      "(bounded serving batch)", file=sys.stderr)
+                return 2
+            q = spark.read.parquet(args.queries) if args.queries else None
+            if isinstance(index, ai.LshIndex):
+                res = ai.lsh_probe(index, q, k=args.k, **cols)
+            elif isinstance(index, ai.IvfIndex):
+                res = ai.ivf_probe(
+                    index, q, k=args.k, n_probe=args.n_probe, **cols)
+            elif isinstance(index, ai.PqIndex):
+                res = ai.pq_probe(index, q, k=args.k, **cols)
+            else:
+                res = ai.ivfpq_probe(
+                    index, q, k=args.k, n_probe=args.n_probe, **cols)
+            if args.out:
+                res.write.mode("overwrite").parquet(args.out)
+            else:
+                res.show(50, truncate=False)
             return 0
 
         if args.cmd == "tokenizer":

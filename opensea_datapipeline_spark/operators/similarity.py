@@ -211,7 +211,7 @@ def knn_topk_lsh(
     This is the single-shot composition of ``ann_index.build_lsh_index``
     + ``ann_index.lsh_probe`` — fine for batch pipelines. Repeated probe
     batches against one corpus version should build (and usually
-    ``write_lsh_index``) ONCE and call ``lsh_probe`` per batch instead,
+    ``write_index``) ONCE and call ``lsh_probe`` per batch instead,
     or the corpus is re-signed on every call.
     """
     from .ann_index import build_lsh_index, lsh_probe
@@ -246,7 +246,7 @@ def ann_ivf(
 
     Single-shot composition of ``ann_index.build_ivf_index`` +
     ``ann_index.ivf_probe``. The KMeans fit dominates — repeated probe
-    batches must build (and usually ``write_ivf_index``) once and call
+    batches must build (and usually ``write_index``) once and call
     ``ivf_probe`` per batch, or every call re-trains the quantizer."""
     from .ann_index import build_ivf_index, ivf_probe
 

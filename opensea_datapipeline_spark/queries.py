@@ -3159,26 +3159,26 @@ def q_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lsh = ai.build_lsh_index(emb, "vec_id", "embedding")
     lsh_path = tempfile.mkdtemp(prefix="ann_lsh_idx_")
-    ai.write_lsh_index(lsh, lsh_path)
+    ai.write_index(lsh, lsh_path)
     lsh_ok = roundtrip_ok(
-        ai.lsh_probe(lsh, k=5), ai.lsh_probe(ai.read_lsh_index(spark, lsh_path), k=5)
+        ai.lsh_probe(lsh, k=5), ai.lsh_probe(ai.read_index(spark, lsh_path), k=5)
     )
 
     ivf = ai.build_ivf_index(emb, "vec_id", "embedding", n_lists=8)
     ivf_path = tempfile.mkdtemp(prefix="ann_ivf_idx_")
-    ai.write_ivf_index(ivf, ivf_path)
+    ai.write_index(ivf, ivf_path)
     ivf_ok = roundtrip_ok(
         ai.ivf_probe(ivf, k=5, n_probe=2),
-        ai.ivf_probe(ai.read_ivf_index(spark, ivf_path), k=5, n_probe=2),
+        ai.ivf_probe(ai.read_index(spark, ivf_path), k=5, n_probe=2),
     )
 
     pq = ai.build_pq_index(emb, "vec_id", "embedding", m=8, k=16)
     pq_path = tempfile.mkdtemp(prefix="ann_pq_idx_")
-    ai.write_pq_index(pq, pq_path)
+    ai.write_index(pq, pq_path)
     pq_queries = emb.filter(F.col("vec_id") < 50)
     pq_ok = roundtrip_ok(
         ai.pq_probe(pq, pq_queries, k=5),
-        ai.pq_probe(ai.read_pq_index(spark, pq_path), pq_queries, k=5),
+        ai.pq_probe(ai.read_index(spark, pq_path), pq_queries, k=5),
     )
 
     return emb.agg(F.count(F.lit(1)).alias("n_vectors")).select(
@@ -3229,9 +3229,9 @@ def q_ann_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             residual=True,
         )
         path = tempfile.mkdtemp(prefix="ann_serving_idx_")
-        ai.write_ivfpq_index(idx, path)
+        ai.write_index(idx, path)
         _ANN_SERVING_IDX[sf_dir] = path
-    loaded = ai.read_ivfpq_index(spark, path)
+    loaded = ai.read_index(spark, path)
     res = ai.ivfpq_probe(
         loaded, corpus.filter(F.col("vec_id") < 50), k=10, n_probe=8
     )

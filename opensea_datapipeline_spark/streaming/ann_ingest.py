@@ -1,7 +1,7 @@
 """Streaming embedding ingest into a persisted ANN index — the
 corpus-dedup loop's pattern applied to the similarity side, composing
-the r6–r13 lifecycle pieces (``build_*_index`` / ``write_*_index`` /
-``append_*_index_at`` / ``index_staleness``) into the ONE streaming
+the r6–r13 lifecycle pieces (``build_*_index`` / ``write_index`` /
+``append_index`` / ``index_staleness``) into the ONE streaming
 job an embedding tier runs: vector files arrive, each micro-batch
 appends to the persisted index under the frozen learned structure
 (IVF centroids / LSH hyperplanes / PQ codebooks), and the loop itself
@@ -66,19 +66,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann_index import (
-    append_ivf_index_at,
-    append_ivfpq_index_at,
-    append_lsh_index_at,
-    append_pq_index_at,
+    append_index,
     build_ivf_index,
     build_ivfpq_index,
     build_lsh_index,
     build_pq_index,
     index_staleness,
-    write_ivf_index,
-    write_ivfpq_index,
-    write_lsh_index,
-    write_pq_index,
+    write_index,
 )
 from .lifecycle import (
     VersionedState,
@@ -88,29 +82,16 @@ from .lifecycle import (
     sweep_orphan_versions,
 )
 
-_APPENDERS = {
-    "ivf": append_ivf_index_at,
-    "lsh": append_lsh_index_at,
-    "pq": append_pq_index_at,
-    "ivfpq": append_ivfpq_index_at,
-}
-_WRITERS = {
-    "ivf": write_ivf_index,
-    "lsh": write_lsh_index,
-    "pq": write_pq_index,
-    "ivfpq": write_ivfpq_index,
-}
-
 
 def _version_dir(state_dir: str, version: int) -> str:
     return os.path.join(state_dir, f"index_v{version}")
 
 
-def _publish_index(index, state_dir: str, version: int, kind: str) -> str:
+def _publish_index(index, state_dir: str, version: int) -> str:
     """Write the index into a tmp dir and atomically rename it to
     ``index_v{version}`` (shared lifecycle discipline)."""
     return publish_versioned_dir(
-        state_dir, f"index_v{version}", lambda tmp: _WRITERS[kind](index, tmp)
+        state_dir, f"index_v{version}", lambda tmp: write_index(index, tmp)
     )
 
 
@@ -137,7 +118,7 @@ def run_streaming_ann_ingest(
 ) -> dict:
     """Stream ``embeddings_dir`` (AvailableNow) into the persisted ANN
     index at ``state_dir``; returns the final loop meta (incl. the
-    current ``index_dir`` ready for ``read_*_index``/probe).
+    current ``index_dir`` ready for ``read_index``/probe).
     ``on_batch(batch_id, wall_s, rebuilt)`` is the per-batch monitor
     hook. Vector ids must be globally unique across the stream (the
     append's anti-join contract).
@@ -149,9 +130,9 @@ def run_streaming_ann_ingest(
     retrain from ``embeddings_dir`` — PQ codes are lossy, the source
     directory is the only float copy (module docstring); lsh never
     rebuilds (appends ≡ rebuild under frozen hyperplanes)."""
-    if kind not in _APPENDERS:
+    if kind not in ("ivf", "ivfpq", "lsh", "pq"):
         raise ValueError(
-            f"kind must be one of {sorted(_APPENDERS)}, got {kind!r}"
+            f"kind must be one of ivf, ivfpq, lsh, pq; got {kind!r}"
         )
     state = VersionedState(state_dir)
 
@@ -203,16 +184,23 @@ def run_streaming_ann_ingest(
                     on_batch(batch_id, time.time() - t0, False)
                 return
             # bootstrap: the first batch trains the learned structure
-            _publish_index(build(batch), state_dir, 0, kind)
+            _publish_index(build(batch), state_dir, 0)
             meta = {"version": 0, "rebuilds": 0}
         else:
             cur = _version_dir(state_dir, meta["version"])
             # append BEFORE the meta bump: a crash after this write
             # replays the batch and the anti-join makes it a no-op
-            _APPENDERS[kind](ss, cur, batch, id_col, vec_col)
+            append_index(ss, cur, batch, id_col, vec_col)
             stale = index_staleness(
                 ss, cur, rebuild_threshold=rebuild_threshold
             )
+            if stale["kind"] != kind:
+                # the append used the stored kind; never rebuild it as
+                # another (the replayed batch re-appends as a no-op)
+                raise ValueError(
+                    f"index at {cur!r} is kind={stale['kind']!r}, the "
+                    f"loop runs kind={kind!r}"
+                )
             if stale["rebuild_recommended"]:
                 # corpus-sized job, fired at threshold cadence: retrain
                 # the learned structure over the whole corpus
@@ -230,7 +218,7 @@ def run_streaming_ann_ingest(
                         id_col, vec_col
                     )
                 new_version = meta["version"] + 1
-                _publish_index(build(allv), state_dir, new_version, kind)
+                _publish_index(build(allv), state_dir, new_version)
                 old_version_dir = cur
                 meta = {
                     "version": new_version,

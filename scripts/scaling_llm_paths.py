@@ -35,6 +35,7 @@ per-query candidates grow sublinearly (~N^0.4, vs N for brute force).
 
 Run:  python scripts/scaling_llm_paths.py [--scales 1,10,100]
 """
+import dataclasses
 import functools
 import json
 import math
@@ -52,6 +53,17 @@ from opensea_datapipeline_spark.sources.readers import load_table
 from opensea_datapipeline_spark.operators import ann_index as ann
 from opensea_datapipeline_spark.operators import dedup as dd
 from opensea_datapipeline_spark.operators import similarity as sim
+
+def pinned(index):
+    """Eagerly localCheckpoint every table of an in-memory index, so
+    repeated probes reuse the build instead of re-running its UDF
+    passes (the in-memory analog of a persisted index)."""
+    return dataclasses.replace(index, **{
+        f.name: getattr(index, f.name).localCheckpoint(eager=True)
+        for f in dataclasses.fields(index)
+        if hasattr(getattr(index, f.name), "localCheckpoint")
+    })
+
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REP_OFFSET = 10_000_000
@@ -176,10 +188,10 @@ def r7_extras(spark, emb_base, dim, scales):
         for residual in (False, True):
             key = "residual" if residual else "raw"
             t0 = time.perf_counter()
-            idx = ann.build_ivfpq_index(
+            idx = pinned(ann.build_ivfpq_index(
                 emb, "vec_id", "embedding", n_lists=n_lists, m=8, k=16,
-                materialize=True, residual=residual,
-            )
+                residual=residual,
+            ))
             entry[f"ivfpq_{key}_build_sec"] = round(time.perf_counter() - t0, 2)
             full = ann.ivfpq_probe(idx, sample, k=10, n_probe=n_lists)
             entry[f"ivfpq_{key}_fullprobe_recall"] = round(
@@ -187,12 +199,12 @@ def r7_extras(spark, emb_base, dim, scales):
             )
 
         # point-lookup pruning A/B against a written IVF index
-        ivf_index = ann.build_ivf_index(
-            emb, "vec_id", "embedding", n_lists=n_lists, materialize=True
-        )
+        ivf_index = pinned(ann.build_ivf_index(
+            emb, "vec_id", "embedding", n_lists=n_lists
+        ))
         ivf_dir = tempfile.mkdtemp(prefix=f"r7x_ivf_{mult}x_")
-        ann.write_ivf_index(ivf_index, ivf_dir)
-        loaded = ann.read_ivf_index(spark, ivf_dir)
+        ann.write_index(ivf_index, ivf_dir)
+        loaded = ann.read_index(spark, ivf_dir)
         point = batch.limit(5).localCheckpoint(eager=True)
         files_total = (
             spark.read.parquet(f"{ivf_dir}/assignments")
@@ -334,10 +346,9 @@ def serving_sweep(spark, dim):
     }
     for m, kk in ((8, 16), (16, 256)):
         t0 = time.perf_counter()
-        idx = ann.build_ivfpq_index(
+        idx = pinned(ann.build_ivfpq_index(
             emb, "vec_id", "embedding", n_lists=n_lists, m=m, k=kk,
-            materialize=True,
-        )
+        ))
         entry = {
             "m": m, "k_codes": kk,
             "code_bits": m * math.log2(kk),
@@ -377,7 +388,7 @@ def semdedup_amortized(spark, emb_base, dim, mult=100):
     import tempfile
 
     from opensea_datapipeline_spark.operators.ann_index import (
-        _l2_normalized, build_ivf_index, read_ivf_index, write_ivf_index,
+        _l2_normalized, build_ivf_index, read_index, write_index,
     )
 
     emb = scaled_embeddings(emb_base, mult, dim).localCheckpoint(eager=True)
@@ -405,16 +416,15 @@ def semdedup_amortized(spark, emb_base, dim, mult=100):
     base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     train_rows = max(10_000, 50 * k)
     t0 = time.perf_counter()
-    idx = build_ivf_index(
-        _l2_normalized(base), "id", "vec", n_lists=k,
-        train_rows=train_rows, materialize=True,
-    )
+    idx = pinned(build_ivf_index(
+        _l2_normalized(base), "id", "vec", n_lists=k, train_rows=train_rows,
+    ))
     idx_dir = tempfile.mkdtemp(prefix=f"r8_semdedup_ivf_{mult}x_")
-    write_ivf_index(idx, idx_dir)
+    write_index(idx, idx_dir)
     report["amortized_build_sec"] = round(time.perf_counter() - t0, 2)
     report["train_rows"] = train_rows
 
-    loaded = read_ivf_index(spark, idx_dir)
+    loaded = read_index(spark, idx_dir)
     t0 = time.perf_counter()
     pairs2 = dd.semdedup_pairs(
         emb, "vec_id", "embedding", threshold=0.9, index=loaded
@@ -502,10 +512,10 @@ def main():
         # table = the persisted-index analog), then time probe-only —
         # the per-batch serving cost a persisted index actually pays
         t0 = time.perf_counter()
-        lsh_index = ann.build_lsh_index(
+        lsh_index = pinned(ann.build_lsh_index(
             emb, "vec_id", "embedding", n_planes=n_planes,
-            n_tables=n_tables, dim=dim, materialize=True,
-        )
+            n_tables=n_tables, dim=dim,
+        ))
         entry["lsh_build_sec"] = round(time.perf_counter() - t0, 2)
         # min-of-3 probes in one session (the table's stated discipline;
         # this host's contention bursts inflate single runs up to 5x, and
@@ -549,9 +559,9 @@ def main():
         entry["ivf_n_lists"] = n_lists
         entry["ivf_n_probe"] = n_probe
         t0 = time.perf_counter()
-        ivf_index = ann.build_ivf_index(
-            emb, "vec_id", "embedding", n_lists=n_lists, materialize=True,
-        )
+        ivf_index = pinned(ann.build_ivf_index(
+            emb, "vec_id", "embedding", n_lists=n_lists,
+        ))
         entry["ivf_build_sec"] = round(time.perf_counter() - t0, 2)
         best = float("inf")
         for _ in range(3):
@@ -579,9 +589,9 @@ def main():
         # driver-sample Lloyd + one Arrow encode pass; probe = ADC
         # mapInPandas with per-batch local top-k.
         t0 = time.perf_counter()
-        pq_index = ann.build_pq_index(
-            emb, "vec_id", "embedding", m=8, k=16, materialize=True,
-        )
+        pq_index = pinned(ann.build_pq_index(
+            emb, "vec_id", "embedding", m=8, k=16,
+        ))
         entry["pq_build_sec"] = round(time.perf_counter() - t0, 2)
         best = float("inf")
         for _ in range(3):
@@ -606,10 +616,9 @@ def main():
         # serving shape; probe should undercut plain PQ's exhaustive
         # compressed scan as N grows.
         t0 = time.perf_counter()
-        ivfpq_index = ann.build_ivfpq_index(
+        ivfpq_index = pinned(ann.build_ivfpq_index(
             emb, "vec_id", "embedding", n_lists=n_lists, m=8, k=16,
-            materialize=True,
-        )
+        ))
         entry["ivfpq_build_sec"] = round(time.perf_counter() - t0, 2)
         best = float("inf")
         for _ in range(3):
@@ -647,10 +656,10 @@ def main():
         # codebooks trained on residuals v̂ − centroid(list) — the
         # sample-recall lift raw-vector codes leave on the table.
         t0 = time.perf_counter()
-        res_index = ann.build_ivfpq_index(
+        res_index = pinned(ann.build_ivfpq_index(
             emb, "vec_id", "embedding", n_lists=n_lists, m=8, k=16,
-            materialize=True, residual=True,
-        )
+            residual=True,
+        ))
         entry["ivfpq_residual_build_sec"] = round(time.perf_counter() - t0, 2)
         best = float("inf")
         for _ in range(3):
@@ -682,8 +691,8 @@ def main():
             import tempfile
 
             ivf_dir = tempfile.mkdtemp(prefix=f"scaling_ivf_{mult}x_")
-            ann.write_ivf_index(ivf_index, ivf_dir)
-            loaded_ivf = ann.read_ivf_index(spark, ivf_dir)
+            ann.write_index(ivf_index, ivf_dir)
+            loaded_ivf = ann.read_index(spark, ivf_dir)
             small = batch.limit(100).localCheckpoint(eager=True)
             for flag, key in ((True, "pruned"), (False, "unpruned")):
                 best = float("inf")
@@ -697,8 +706,8 @@ def main():
                 entry[f"ivf_persisted_probe_{key}_sec"] = round(best, 2)
 
             ivfpq_dir = tempfile.mkdtemp(prefix=f"scaling_ivfpq_{mult}x_")
-            ann.write_ivfpq_index(ivfpq_index, ivfpq_dir)
-            loaded_ivfpq = ann.read_ivfpq_index(spark, ivfpq_dir)
+            ann.write_index(ivfpq_index, ivfpq_dir)
+            loaded_ivfpq = ann.read_index(spark, ivfpq_dir)
             best = float("inf")
             for _ in range(3):
                 t0 = time.perf_counter()
@@ -710,33 +719,38 @@ def main():
 
         if mult > 1:
             # r6 incremental append: the daily-ingest shape. Delta = the
-            # last replica (1/mult of the corpus — 1% at 100x); prefix
-            # index is built untimed (it exists already in serving), then
-            # append-only wall is timed and compared against the same
-            # run's full-rebuild wall (lsh_build_sec / ivf_build_sec).
+            # last replica (1/mult of the corpus — 1% at 100x); the prefix
+            # index is built and persisted untimed (it exists already in
+            # serving), then the persisted append wall (anti-join, encode,
+            # parquet append, meta bump) is timed and compared against the
+            # same run's full-rebuild wall (lsh_build_sec / ivf_build_sec).
+            import tempfile
+
             delta = emb.filter(
                 F.col("vec_id") >= (mult - 1) * REP_OFFSET
             ).localCheckpoint(eager=True)
             prefix = emb.filter(F.col("vec_id") < (mult - 1) * REP_OFFSET)
             entry["append_delta_frac"] = round(1.0 / mult, 3)
-
-            pre_lsh = ann.build_lsh_index(
-                prefix, "vec_id", "embedding", n_planes=n_planes,
-                n_tables=n_tables, dim=dim, materialize=True,
-            )
-            t0 = time.perf_counter()
-            app_lsh = ann.append_lsh_index(pre_lsh, delta, "vec_id", "embedding")
-            app_lsh.sigs.count()
-            entry["lsh_append_delta_sec"] = round(time.perf_counter() - t0, 2)
-
-            pre_ivf = ann.build_ivf_index(
-                prefix, "vec_id", "embedding", n_lists=n_lists,
-                materialize=True,
-            )
-            t0 = time.perf_counter()
-            app_ivf = ann.append_ivf_index(pre_ivf, delta, "vec_id", "embedding")
-            app_ivf.assignments.count()
-            entry["ivf_append_delta_sec"] = round(time.perf_counter() - t0, 2)
+            builds = {
+                "lsh": lambda: ann.build_lsh_index(
+                    prefix, "vec_id", "embedding", n_planes=n_planes,
+                    n_tables=n_tables, dim=dim,
+                ),
+                "ivf": lambda: ann.build_ivf_index(
+                    prefix, "vec_id", "embedding", n_lists=n_lists,
+                ),
+            }
+            for kind, build in builds.items():
+                idx_dir = tempfile.mkdtemp(prefix=f"scaling_{kind}_app_{mult}x_")
+                ann.write_index(build(), idx_dir)
+                t0 = time.perf_counter()
+                ann.append_index(spark, idx_dir, delta, "vec_id", "embedding")
+                entry[f"{kind}_append_delta_sec"] = round(
+                    time.perf_counter() - t0, 2
+                )
+                appended = ann.read_index(spark, idx_dir)
+                main = appended.vectors if kind == "lsh" else appended.assignments
+                entry[f"{kind}_append_rows"] = main.count()
 
         report["scales"][f"{mult}x"] = entry
         print(json.dumps({f"{mult}x": entry}), file=sys.stderr)

@@ -676,7 +676,7 @@ def test_streaming_ann_ingest_matches_batch_lifecycle(spark, tmp_path):
 
     from opensea_datapipeline_spark.operators.ann_index import (
         ivf_probe,
-        read_ivf_index,
+        read_index,
     )
     from opensea_datapipeline_spark.operators.similarity import (
         knn_topk_exact,
@@ -727,7 +727,7 @@ def test_streaming_ann_ingest_matches_batch_lifecycle(spark, tmp_path):
         [(i, _ann_vec(i)) for i in range(16)],
         "vec_id long, embedding array<double>",
     )
-    idx = read_ivf_index(spark, meta["index_dir"])
+    idx = read_index(spark, meta["index_dir"])
     got_p = {
         (r.query_id, r.rank): r.neighbor_id
         for r in ivf_probe(idx, all_vecs, k=3, n_probe=2).collect()
@@ -846,7 +846,7 @@ def test_streaming_ann_ingest_lsh_kind_never_rebuilds(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
         build_lsh_index,
         lsh_probe,
-        read_lsh_index,
+        read_index,
     )
     from opensea_datapipeline_spark.streaming.ann_ingest import (
         run_streaming_ann_ingest,
@@ -873,7 +873,7 @@ def test_streaming_ann_ingest_lsh_kind_never_rebuilds(spark, tmp_path):
     got = {
         (r.query_id, r.rank): r.neighbor_id
         for r in lsh_probe(
-            read_lsh_index(spark, meta["index_dir"]), qdf, k=3
+            read_index(spark, meta["index_dir"]), qdf, k=3
         ).collect()
     }
     oneshot = build_lsh_index(

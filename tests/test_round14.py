@@ -34,7 +34,7 @@ def test_streaming_ann_ingest_pq_kind_appends_and_replays(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
         _books_from_df,
         _pq_encode,
-        read_pq_index,
+        read_index,
     )
     from opensea_datapipeline_spark.streaming.ann_ingest import (
         run_streaming_ann_ingest,
@@ -48,7 +48,7 @@ def test_streaming_ann_ingest_pq_kind_appends_and_replays(spark, tmp_path):
         rebuild_threshold=5.0,  # never rebuild in this test
     )
     assert meta["rebuilds"] == 0 and meta["version"] == 0
-    idx = read_pq_index(spark, meta["index_dir"])
+    idx = read_index(spark, meta["index_dir"])
     got = {r.id: list(r.codes) for r in idx.codes.collect()}
     assert sorted(got) == list(range(16))
     # frozen-books invariant: streamed codes == one-shot encode
@@ -99,7 +99,7 @@ def test_streaming_ann_ingest_ivfpq_kind_lifecycle(spark, tmp_path):
     # (from source: codes are lossy) advances the version; every id is
     # stored exactly once either way.
     from opensea_datapipeline_spark.operators.ann_index import (
-        read_ivfpq_index,
+        read_index,
     )
     from opensea_datapipeline_spark.streaming.ann_ingest import (
         run_streaming_ann_ingest,
@@ -112,7 +112,7 @@ def test_streaming_ann_ingest_ivfpq_kind_lifecycle(spark, tmp_path):
         kind="ivfpq", n_lists=2, pq_m=2, pq_k=4, rebuild_threshold=5.0,
     )
     assert meta["rebuilds"] == 0 and meta["version"] == 0
-    idx = read_ivfpq_index(spark, meta["index_dir"])
+    idx = read_index(spark, meta["index_dir"])
     rows = idx.codes.collect()
     assert sorted(r.id for r in rows) == list(range(16))
     n_lists = {r.list_id for r in rows}
@@ -720,10 +720,10 @@ def test_publish_versioned_dir_replaces_crashed_leftovers(tmp_path):
 
 def test_streaming_ann_ingest_ivfpq_residual_kind(spark, tmp_path):
     # residual=True flows through the loop: appends encode residuals
-    # against the frozen centroids+codebooks (append_ivfpq_index_at
+    # against the frozen centroids+codebooks (append_index
     # reads residual from the index meta), every id stored once
     from opensea_datapipeline_spark.operators.ann_index import (
-        read_ivfpq_index,
+        read_index,
     )
     from opensea_datapipeline_spark.streaming.ann_ingest import (
         run_streaming_ann_ingest,
@@ -737,7 +737,7 @@ def test_streaming_ann_ingest_ivfpq_residual_kind(spark, tmp_path):
         rebuild_threshold=5.0,
     )
     assert meta["rebuilds"] == 0
-    idx = read_ivfpq_index(spark, meta["index_dir"])
+    idx = read_index(spark, meta["index_dir"])
     assert idx.residual is True
     rows = idx.codes.collect()
     assert sorted(r.id for r in rows) == list(range(12))
@@ -837,28 +837,64 @@ def test_persisted_appends_reject_wrong_dim_vectors(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     builds = {
-        "lsh": (lambda: ai.build_lsh_index(
-            good, n_planes=3, n_tables=2, dim=8), ai.write_lsh_index,
-            ai.append_lsh_index_at),
-        "ivf": (lambda: ai.build_ivf_index(good, n_lists=2),
-                ai.write_ivf_index, ai.append_ivf_index_at),
-        "pq": (lambda: ai.build_pq_index(good, m=2, k=4),
-               ai.write_pq_index, ai.append_pq_index_at),
-        "ivfpq": (lambda: ai.build_ivfpq_index(
-            good, n_lists=2, m=2, k=4), ai.write_ivfpq_index,
-            ai.append_ivfpq_index_at),
+        "lsh": lambda: ai.build_lsh_index(
+            good, n_planes=3, n_tables=2, dim=8),
+        "ivf": lambda: ai.build_ivf_index(good, n_lists=2),
+        "pq": lambda: ai.build_pq_index(good, m=2, k=4),
+        "ivfpq": lambda: ai.build_ivfpq_index(good, n_lists=2, m=2, k=4),
     }
-    for kind, (build, write, append_at) in builds.items():
+    for kind, build in builds.items():
         path = str(tmp_path / kind)
-        write(build(), path)
+        ai.write_index(build(), path)
         with pytest.raises(ValueError, match="vector length"):
-            append_at(spark, path, bad)
+            ai.append_index(spark, path, bad)
         # good appends still work after the failed attempt
         more = spark.createDataFrame(
             [(200 + i, _ann_vec(50 + i)) for i in range(3)],
             "vec_id long, embedding array<double>",
         )
-        append_at(spark, path, more)
+        ai.append_index(spark, path, more)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "pq", "ivfpq"])
+def test_overlapping_reappend_writes_no_data_files(spark, tmp_path, kind):
+    # an idempotent re-append (every id already stored) adds no rows, so
+    # it must not add (empty) parquet files either — each one would grow
+    # the store per replayed batch; it still counts as an append
+    import glob
+
+    from opensea_datapipeline_spark.operators import ann_index as ai
+
+    good = spark.createDataFrame(
+        [(i, _ann_vec(i)) for i in range(16)],
+        "vec_id long, embedding array<double>",
+    )
+    build = {
+        "lsh": lambda: ai.build_lsh_index(good, n_planes=3, n_tables=2, dim=8),
+        "ivf": lambda: ai.build_ivf_index(good, n_lists=2),
+        "pq": lambda: ai.build_pq_index(good, m=2, k=4),
+        "ivfpq": lambda: ai.build_ivfpq_index(good, n_lists=2, m=2, k=4),
+    }[kind]
+    path = str(tmp_path / kind)
+    ai.write_index(build(), path)
+    delta = spark.createDataFrame(
+        [(100 + i, _ann_vec(40 + i)) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    ai.append_index(spark, path, delta)
+
+    def files() -> dict:
+        return {
+            t.name: len(glob.glob(f"{path}/{t.name}/**/*.parquet",
+                                  recursive=True))
+            for t in ai._KINDS[kind].tables
+        }
+
+    before = files()
+    ai.append_index(spark, path, delta)
+    assert files() == before
+    s = ai.index_staleness(spark, path)
+    assert (s["n_appends"], s["n_appended"]) == (2, 6)
 
 
 def test_build_pq_index_rejects_mixed_dim_sample(spark):

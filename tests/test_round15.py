@@ -585,8 +585,8 @@ def test_ann_appends_reject_null_ids(spark, tmp_path):
     # r15 probe: a null-keyed vector slips the idempotent-re-append
     # anti-join on EVERY call (null never equi-joins), so the store and
     # append counters grow per replay and staleness fires premature
-    # rebuilds. All four persisted append forms share the counted
-    # guard; ivf exercised here as the representative.
+    # rebuilds. `append_index` runs the counted guard for every kind;
+    # ivf exercised here as the representative.
     import math
 
     from opensea_datapipeline_spark.operators import ann_index as ai
@@ -596,17 +596,17 @@ def test_ann_appends_reject_null_ids(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     path = str(tmp_path / "ivf")
-    ai.write_ivf_index(
+    ai.write_index(
         ai.build_ivf_index(vecs, "vec_id", "embedding", n_lists=2), path
     )
     bad = spark.createDataFrame(
         [(None, [0.5] * 8)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="NULL id"):
-        ai.append_ivf_index_at(spark, path, bad)
+        ai.append_index(spark, path, bad)
     # valid appends still work afterwards, and the failed attempt
     # neither stored rows nor bumped the counters
-    ai.append_ivf_index_at(
+    ai.append_index(
         spark, path,
         spark.createDataFrame(
             [(100, [0.25] * 8)], "vec_id long, embedding array<double>"

@@ -360,7 +360,7 @@ def test_ann_local_artifact_reads_match_spark(spark, tmp_path):
         emb, "vec_id", "embedding", n_lists=4, m=4, k=16, residual=True
     )
     path = str(tmp_path / "idx")
-    ai.write_ivfpq_index(idx, path)
+    ai.write_index(idx, path)
 
     # meta: local fast path == schema'd Spark read, field for field
     local = ai._read_meta_local(path)
@@ -377,7 +377,7 @@ def test_ann_local_artifact_reads_match_spark(spark, tmp_path):
     assert ai._read_meta_local(str(tmp_path / "bad")) is None
 
     # bounded-rows fast path == collect on the tagged tables
-    loaded = ai.read_ivfpq_index(spark, path)
+    loaded = ai.read_index(spark, path)
     assert getattr(loaded.centroids, "_ann_local_src", None)
     br = sorted(ai._bounded_rows(loaded.centroids), key=lambda r: r.list_id)
     cl = sorted(loaded.centroids.collect(), key=lambda r: r.list_id)

@@ -76,7 +76,7 @@ def _result_set(df):
 
 def test_lsh_index_roundtrip_probe_identical(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_lsh_index, lsh_probe, read_lsh_index, write_lsh_index,
+        build_lsh_index, lsh_probe, read_index, write_index,
     )
 
     emb = _emb(spark)
@@ -84,8 +84,8 @@ def test_lsh_index_roundtrip_probe_identical(spark, tmp_path):
     in_mem = _result_set(lsh_probe(index, k=5))
 
     path = str(tmp_path / "lsh_index")
-    write_lsh_index(index, path)
-    loaded = read_lsh_index(spark, path)
+    write_index(index, path)
+    loaded = read_index(spark, path)
     assert (loaded.n_planes, loaded.n_tables, loaded.dim, loaded.seed) == (
         index.n_planes, index.n_tables, index.dim, index.seed,
     )
@@ -97,13 +97,13 @@ def test_lsh_persisted_index_batch_matches_self_join(spark, tmp_path):
     # the r5 batch≡self-join guarantee must hold against the PERSISTED
     # index: probing a query subset returns exactly the self-join slice
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_lsh_index, lsh_probe, read_lsh_index, write_lsh_index,
+        build_lsh_index, lsh_probe, read_index, write_index,
     )
 
     emb = _emb(spark)
     path = str(tmp_path / "lsh_index")
-    write_lsh_index(build_lsh_index(emb, "vec_id", "embedding"), path)
-    loaded = read_lsh_index(spark, path)
+    write_index(build_lsh_index(emb, "vec_id", "embedding"), path)
+    loaded = read_index(spark, path)
 
     full = lsh_probe(loaded, k=5)
     want = _result_set(full.filter(F.col("query_id") < 40))
@@ -114,7 +114,7 @@ def test_lsh_persisted_index_batch_matches_self_join(spark, tmp_path):
 
 def test_ivf_index_roundtrip_probe_identical(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_ivf_index, ivf_probe, read_ivf_index, write_ivf_index,
+        build_ivf_index, ivf_probe, read_index, write_index,
     )
 
     emb = _emb(spark)
@@ -122,8 +122,8 @@ def test_ivf_index_roundtrip_probe_identical(spark, tmp_path):
     in_mem = _result_set(ivf_probe(index, k=5, n_probe=2))
 
     path = str(tmp_path / "ivf_index")
-    write_ivf_index(index, path)
-    loaded = read_ivf_index(spark, path)
+    write_index(index, path)
+    loaded = read_index(spark, path)
     assert (loaded.n_lists, loaded.seed) == (index.n_lists, index.seed)
     assert _result_set(ivf_probe(loaded, k=5, n_probe=2)) == in_mem
     assert len(in_mem) > 0
@@ -131,13 +131,13 @@ def test_ivf_index_roundtrip_probe_identical(spark, tmp_path):
 
 def test_ivf_persisted_index_batch_matches_self_join(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_ivf_index, ivf_probe, read_ivf_index, write_ivf_index,
+        build_ivf_index, ivf_probe, read_index, write_index,
     )
 
     emb = _emb(spark)
     path = str(tmp_path / "ivf_index")
-    write_ivf_index(build_ivf_index(emb, "vec_id", "embedding", n_lists=8), path)
-    loaded = read_ivf_index(spark, path)
+    write_index(build_ivf_index(emb, "vec_id", "embedding", n_lists=8), path)
+    loaded = read_index(spark, path)
 
     full = ivf_probe(loaded, k=5, n_probe=2)
     want = _result_set(full.filter(F.col("query_id") < 40))
@@ -173,17 +173,17 @@ def test_persisted_lsh_recall_floor(spark, tmp_path):
     # recall gate against the persisted index: ≥0.45 of exact top-10
     # pairs recovered (the same floor the structural query enforces)
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_lsh_index, lsh_probe, read_lsh_index, write_lsh_index,
+        build_lsh_index, lsh_probe, read_index, write_index,
     )
     from opensea_datapipeline_spark.operators.similarity import knn_topk_exact
 
     emb = _emb(spark, n=300)
     dim = len(emb.select("embedding").first()[0])
     path = str(tmp_path / "lsh_index")
-    write_lsh_index(
+    write_index(
         build_lsh_index(emb, "vec_id", "embedding", dim=dim), path
     )
-    approx = lsh_probe(read_lsh_index(spark, path), k=10)
+    approx = lsh_probe(read_index(spark, path), k=10)
     exact = knn_topk_exact(emb, "vec_id", "embedding", k=10)
     ex = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     ap = {(r.query_id, r.neighbor_id) for r in approx.collect()}
@@ -192,13 +192,16 @@ def test_persisted_lsh_recall_floor(spark, tmp_path):
 
 def test_index_kind_mismatch_raises(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_lsh_index, read_ivf_index, write_lsh_index,
+        LshIndex, build_lsh_index, read_index, write_index,
     )
 
     path = str(tmp_path / "lsh_index")
-    write_lsh_index(build_lsh_index(_emb(spark, 50), "vec_id", "embedding"), path)
+    write_index(build_lsh_index(_emb(spark, 50), "vec_id", "embedding"), path)
     with pytest.raises(ValueError, match="kind"):
-        read_ivf_index(spark, path)
+        read_index(spark, path, "ivf")
+    # no kind given: the meta's kind picks the dataclass
+    assert isinstance(read_index(spark, path), LshIndex)
+    assert isinstance(read_index(spark, path, "lsh"), LshIndex)
 
 
 # ---------------------------------------------------------------------------
@@ -206,52 +209,74 @@ def test_index_kind_mismatch_raises(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_lsh_append_equals_full_rebuild(spark):
+def test_lsh_append_equals_full_rebuild(spark, tmp_path):
     # LSH signatures are a pure per-row function of the frozen index
     # params, so prefix-build + delta-append must be BIT-identical to a
     # full rebuild over the union. The delta deliberately overlaps the
     # prefix (ids 100-119) to prove idempotent re-append.
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_lsh_index, build_lsh_index, lsh_probe,
+        append_index, build_lsh_index, lsh_probe, read_index, write_index,
     )
 
     emb = _emb(spark, n=200)
     prefix = emb.filter(F.col("vec_id") < 120)
     delta = emb.filter(F.col("vec_id") >= 100)  # 20-id overlap
-    appended = append_lsh_index(
-        build_lsh_index(prefix, "vec_id", "embedding"), delta,
-        "vec_id", "embedding",
-    )
+    path = str(tmp_path / "lsh_index")
+    write_index(build_lsh_index(prefix, "vec_id", "embedding"), path)
+    append_index(spark, path, delta, "vec_id", "embedding")
+    appended = read_index(spark, path)
     full = build_lsh_index(emb, "vec_id", "embedding")
     assert appended.vectors.count() == full.vectors.count() == emb.count()
+    assert {(r.id, r.table, r.sig) for r in appended.sigs.collect()} == {
+        (r.id, r.table, r.sig) for r in full.sigs.collect()
+    }
     assert _result_set(lsh_probe(appended, k=5)) == _result_set(
         lsh_probe(full, k=5)
     )
 
 
-def test_ivf_append_assigns_nearest_frozen_centroid(spark):
+def _frozen_argmin(centroids, rows):
+    """Reference IVF assignment: numpy argmin of squared euclidean
+    distance over the frozen centroids (lowest list_id on ties)."""
     import numpy as np
 
+    cents = {r.list_id: np.array(r.centroid) for r in centroids.collect()}
+    keys = sorted(cents)
+    C = np.vstack([cents[k] for k in keys])
+    return {
+        r.vec_id: keys[int(
+            ((np.array(r.embedding, dtype=np.float64) - C) ** 2)
+            .sum(axis=1).argmin()
+        )]
+        for r in rows
+    }
+
+
+def test_ivf_append_assigns_nearest_frozen_centroid(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_ivf_index, build_ivf_index,
+        append_index, build_ivf_index, read_index, write_index,
     )
 
     emb = _emb(spark, n=200)
     prefix = emb.filter(F.col("vec_id") < 150)
     delta = emb.filter(F.col("vec_id") >= 150)
     index = build_ivf_index(prefix, "vec_id", "embedding", n_lists=6)
-    appended = append_ivf_index(index, delta, "vec_id", "embedding")
+    path = str(tmp_path / "ivf_index")
+    write_index(index, path)
+    append_index(spark, path, delta, "vec_id", "embedding")
+    appended = read_index(spark, path)
 
-    # centroids are frozen: same object, and the appended assignments for
-    # the delta must match a numpy argmin over squared euclidean distance
-    cents = {r.list_id: np.array(r.centroid) for r in index.centroids.collect()}
-    keys = sorted(cents)
-    C = np.vstack([cents[k] for k in keys])
+    # centroids are frozen: the stored table is unchanged, and the
+    # appended assignments for the delta must match a numpy argmin over
+    # squared euclidean distance
+    assert sorted(
+        (r.list_id, list(r.centroid)) for r in appended.centroids.collect()
+    ) == sorted((r.list_id, list(r.centroid)) for r in index.centroids.collect())
     new_rows = appended.assignments.filter(F.col("id") >= 150).collect()
     assert len(new_rows) == delta.count()
-    for r in new_rows:
-        d = ((np.array(r.vec, dtype=np.float64) - C) ** 2).sum(axis=1)
-        assert keys[int(d.argmin())] == r.list_id
+    assert {r.id: r.list_id for r in new_rows} == _frozen_argmin(
+        index.centroids, delta.collect()
+    )
     # prefix assignments untouched
     assert (
         appended.assignments.filter(F.col("id") < 150).count()
@@ -261,10 +286,10 @@ def test_ivf_append_assigns_nearest_frozen_centroid(spark):
 
 def test_lsh_persisted_append_roundtrip(spark, tmp_path):
     # daily-ingest shape: write prefix index → append delta in place →
-    # read back ≡ in-memory append; overlapping ids are not duplicated
+    # read back ≡ a full rebuild over prefix ∪ delta (signatures are a
+    # pure per-row function); overlapping ids are not duplicated
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_lsh_index, append_lsh_index_at, build_lsh_index, lsh_probe,
-        read_lsh_index, write_lsh_index,
+        append_index, build_lsh_index, lsh_probe, read_index, write_index,
     )
 
     emb = _emb(spark, n=200)
@@ -272,21 +297,22 @@ def test_lsh_persisted_append_roundtrip(spark, tmp_path):
     delta = emb.filter(F.col("vec_id") >= 100)
     path = str(tmp_path / "lsh_index")
     index = build_lsh_index(prefix, "vec_id", "embedding")
-    write_lsh_index(index, path)
-    append_lsh_index_at(spark, path, delta, "vec_id", "embedding")
-    loaded = read_lsh_index(spark, path)
+    write_index(index, path)
+    append_index(spark, path, delta, "vec_id", "embedding")
+    loaded = read_index(spark, path)
     assert loaded.vectors.count() == emb.count()
     assert loaded.vectors.select("id").distinct().count() == emb.count()
-    want = _result_set(
-        lsh_probe(append_lsh_index(index, delta, "vec_id", "embedding"), k=5)
-    )
+    want = _result_set(lsh_probe(build_lsh_index(emb, "vec_id", "embedding"), k=5))
     assert _result_set(lsh_probe(loaded, k=5)) == want and len(want) > 0
 
 
 def test_ivf_persisted_append_roundtrip(spark, tmp_path):
+    # reference: the prefix index plus the delta assigned by a numpy
+    # argmin over the frozen centroids
+    from opensea_datapipeline_spark.functions.literals import local_frame
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_ivf_index, append_ivf_index_at, build_ivf_index, ivf_probe,
-        read_ivf_index, write_ivf_index,
+        IvfIndex, append_index, build_ivf_index, ivf_probe, read_index,
+        write_index,
     )
 
     emb = _emb(spark, n=200)
@@ -294,15 +320,26 @@ def test_ivf_persisted_append_roundtrip(spark, tmp_path):
     delta = emb.filter(F.col("vec_id") >= 130)  # 20-id overlap
     path = str(tmp_path / "ivf_index")
     index = build_ivf_index(prefix, "vec_id", "embedding", n_lists=6)
-    write_ivf_index(index, path)
-    append_ivf_index_at(spark, path, delta, "vec_id", "embedding")
-    loaded = read_ivf_index(spark, path)
+    write_index(index, path)
+    append_index(spark, path, delta, "vec_id", "embedding")
+    loaded = read_index(spark, path)
     assert loaded.assignments.count() == emb.count()
     assert loaded.assignments.select("id").distinct().count() == emb.count()
-    want = _result_set(
-        ivf_probe(append_ivf_index(index, delta, "vec_id", "embedding"),
-                  k=5, n_probe=2)
+    fresh = delta.filter(F.col("vec_id") >= 150).collect()
+    lists = _frozen_argmin(index.centroids, fresh)
+    ref_rows = local_frame(
+        spark,
+        [(r.vec_id, list(r.embedding), lists[r.vec_id]) for r in fresh],
+        index.assignments.schema,
     )
+    ref = IvfIndex(
+        index.centroids, index.assignments.unionByName(ref_rows),
+        index.n_lists, index.seed,
+    )
+    assert {
+        (r.id, r.list_id) for r in loaded.assignments.collect()
+    } == {(r.id, r.list_id) for r in ref.assignments.collect()}
+    want = _result_set(ivf_probe(ref, k=5, n_probe=2))
     assert _result_set(ivf_probe(loaded, k=5, n_probe=2)) == want
     assert len(want) > 0
 
@@ -513,7 +550,7 @@ def test_pq_probe_planted_twin_recall(spark):
 
 def test_pq_index_roundtrip_probe_identical(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_pq_index, pq_probe, read_pq_index, write_pq_index,
+        build_pq_index, pq_probe, read_index, write_index,
     )
 
     emb = _emb(spark, n=300)
@@ -522,8 +559,8 @@ def test_pq_index_roundtrip_probe_identical(spark, tmp_path):
     want = _result_set(pq_probe(idx, queries, k=5))
 
     path = str(tmp_path / "pq_index")
-    write_pq_index(idx, path)
-    loaded = read_pq_index(spark, path)
+    write_index(idx, path)
+    loaded = read_index(spark, path)
     assert (loaded.m, loaded.k, loaded.dim, loaded.seed) == (
         idx.m, idx.k, idx.dim, idx.seed,
     )
@@ -566,8 +603,8 @@ def test_streaming_ingest_appends_persisted_lsh_index(spark, tmp_path):
     import os
 
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_lsh_index_at, build_lsh_index, lsh_probe, read_lsh_index,
-        write_lsh_index,
+        append_index, build_lsh_index, lsh_probe, read_index,
+        write_index,
     )
 
     emb = _emb(spark, n=200)
@@ -580,7 +617,7 @@ def test_streaming_ingest_appends_persisted_lsh_index(spark, tmp_path):
     emb.filter(F.col("vec_id") >= 140).write.parquet(stream_dir + "/b1")
 
     path = str(tmp_path / "lsh_index")
-    write_lsh_index(build_lsh_index(seed_part, "vec_id", "embedding"), path)
+    write_index(build_lsh_index(seed_part, "vec_id", "embedding"), path)
 
     stream = (
         spark.readStream.schema(emb.schema)
@@ -589,7 +626,7 @@ def test_streaming_ingest_appends_persisted_lsh_index(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            lambda batch_df, _id: append_lsh_index_at(
+            lambda batch_df, _id: append_index(
                 spark, path, batch_df, "vec_id", "embedding"
             )
         )
@@ -599,7 +636,7 @@ def test_streaming_ingest_appends_persisted_lsh_index(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    loaded = read_lsh_index(spark, path)
+    loaded = read_index(spark, path)
     assert loaded.vectors.count() == emb.count()
     assert loaded.vectors.select("id").distinct().count() == emb.count()
     full = build_lsh_index(emb, "vec_id", "embedding")
@@ -695,7 +732,7 @@ def test_ivfpq_planted_twin_recall_partial_probe(spark):
 
 def test_ivfpq_roundtrip_probe_identical(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        build_ivfpq_index, ivfpq_probe, read_ivfpq_index, write_ivfpq_index,
+        build_ivfpq_index, ivfpq_probe, read_index, write_index,
     )
 
     emb = _emb(spark, n=300).select("vec_id", "embedding")
@@ -704,8 +741,8 @@ def test_ivfpq_roundtrip_probe_identical(spark, tmp_path):
     want = _result_set(ivfpq_probe(idx, queries, k=5, n_probe=3))
 
     path = str(tmp_path / "ivfpq_index")
-    write_ivfpq_index(idx, path)
-    loaded = read_ivfpq_index(spark, path)
+    write_index(idx, path)
+    loaded = read_index(spark, path)
     assert (loaded.n_lists, loaded.m, loaded.k, loaded.dim, loaded.seed) == (
         idx.n_lists, idx.m, idx.k, idx.dim, idx.seed,
     )
@@ -717,15 +754,17 @@ def test_pq_append_encodes_with_frozen_books(spark, tmp_path):
     import numpy as np
 
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_pq_index, append_pq_index_at, build_pq_index, read_pq_index,
-        write_pq_index,
+        append_index, build_pq_index, read_index, write_index,
     )
 
     emb = _emb(spark, n=200).select("vec_id", "embedding")
     prefix = emb.filter(F.col("vec_id") < 120)
     delta = emb.filter(F.col("vec_id") >= 100)  # 20-id overlap
     idx = build_pq_index(prefix, "vec_id", "embedding", m=8, k=16)
-    appended = append_pq_index(idx, delta, "vec_id", "embedding")
+    path = str(tmp_path / "pq_index")
+    write_index(idx, path)
+    append_index(spark, path, delta, "vec_id", "embedding")
+    appended = read_index(spark, path)
     assert appended.codes.count() == emb.count()
     assert appended.codes.select("id").distinct().count() == emb.count()
 
@@ -736,6 +775,7 @@ def test_pq_append_encodes_with_frozen_books(spark, tmp_path):
     vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64)
             for r in delta.filter(F.col("vec_id") >= 120).collect()}
     got = {r.id: r.codes for r in appended.codes.filter(F.col("id") >= 120).collect()}
+    assert sorted(got) == sorted(vecs)
     for vid, v in vecs.items():
         vn = v / (np.linalg.norm(v) or 1.0)
         for s in range(idx.m):
@@ -744,20 +784,17 @@ def test_pq_append_encodes_with_frozen_books(spark, tmp_path):
                        key=lambda c: ((xs - books[(s, c)]) ** 2).sum())
             assert got[vid][s] == best
 
-    # persisted append round-trip matches the in-memory append
-    path = str(tmp_path / "pq_index")
-    write_pq_index(idx, path)
-    append_pq_index_at(spark, path, delta, "vec_id", "embedding")
-    loaded = read_pq_index(spark, path)
-    a = {(r.id, tuple(r.codes)) for r in loaded.codes.collect()}
-    b = {(r.id, tuple(r.codes)) for r in appended.codes.collect()}
+    # the prefix's codes are untouched by the append
+    a = {(r.id, tuple(r.codes))
+         for r in appended.codes.filter(F.col("id") < 120).collect()}
+    b = {(r.id, tuple(r.codes)) for r in idx.codes.collect()}
     assert a == b
 
 
 def test_ivfpq_persisted_append_roundtrip(spark, tmp_path):
     from opensea_datapipeline_spark.operators.ann_index import (
-        append_ivfpq_index_at, build_ivfpq_index, ivfpq_probe,
-        read_ivfpq_index, write_ivfpq_index,
+        append_index, build_ivfpq_index, ivfpq_probe,
+        read_index, write_index,
     )
 
     emb = _emb(spark, n=200).select("vec_id", "embedding")
@@ -765,9 +802,9 @@ def test_ivfpq_persisted_append_roundtrip(spark, tmp_path):
     delta = emb.filter(F.col("vec_id") >= 130)  # 20-id overlap
     path = str(tmp_path / "ivfpq_index")
     idx = build_ivfpq_index(prefix, "vec_id", "embedding", n_lists=6, m=8, k=16)
-    write_ivfpq_index(idx, path)
-    append_ivfpq_index_at(spark, path, delta, "vec_id", "embedding")
-    loaded = read_ivfpq_index(spark, path)
+    write_index(idx, path)
+    append_index(spark, path, delta, "vec_id", "embedding")
+    loaded = read_index(spark, path)
     assert loaded.codes.count() == emb.count()
     assert loaded.codes.select("id").distinct().count() == emb.count()
     # appended rows are probe-visible: querying the delta finds neighbors
@@ -794,28 +831,6 @@ def test_write_training_shards_curriculum_order(spark, tmp_path):
                 spark.read.parquet(dst + f"/shard={s}").collect()]
         assert vals and vals == sorted(vals)
     assert spark.read.parquet(dst).count() == docs.count()
-
-
-def test_ivfpq_in_memory_append_matches_persisted(spark, tmp_path):
-    from opensea_datapipeline_spark.operators.ann_index import (
-        append_ivfpq_index, append_ivfpq_index_at, build_ivfpq_index,
-        read_ivfpq_index, write_ivfpq_index,
-    )
-
-    emb = _emb(spark, n=200).select("vec_id", "embedding")
-    prefix = emb.filter(F.col("vec_id") < 150)
-    delta = emb.filter(F.col("vec_id") >= 140)  # 10-id overlap
-    idx = build_ivfpq_index(prefix, "vec_id", "embedding", n_lists=6, m=8, k=16)
-    in_mem = append_ivfpq_index(idx, delta, "vec_id", "embedding")
-
-    path = str(tmp_path / "ivfpq_index")
-    write_ivfpq_index(idx, path)
-    append_ivfpq_index_at(spark, path, delta, "vec_id", "embedding")
-    loaded = read_ivfpq_index(spark, path)
-
-    a = {(r.id, r.list_id, tuple(r.codes)) for r in in_mem.codes.collect()}
-    b = {(r.id, r.list_id, tuple(r.codes)) for r in loaded.codes.collect()}
-    assert a == b and len(a) == emb.count()
 
 
 def test_write_training_shards_single_exchange_plan(spark, tmp_path):
@@ -877,21 +892,27 @@ def test_streaming_psi_monitor_flags_shifted_batch(spark, tmp_path):
     assert all(r.n_rows == 1000 for r in rows)
 
 
-def test_cli_index_lifecycle(spark, tmp_path):
+def test_cli_index_lifecycle(spark, tmp_path, capsys):
     # the operational surface: build -> append -> probe through the CLI
-    # entry point (argument plumbing + kind dispatch; the operators
+    # entry point (argument plumbing + kind from the meta; the operators
     # themselves are covered above)
     from opensea_datapipeline_spark.__main__ import main
+    from opensea_datapipeline_spark.operators.ann_index import index_staleness
 
     emb = _emb(spark, n=150).select("vec_id", "embedding")
     emb_path = str(tmp_path / "emb")
     delta_path = str(tmp_path / "delta")
+    delta2_path = str(tmp_path / "delta2")
     q_path = str(tmp_path / "queries")
     emb.filter(F.col("vec_id") < 120).write.parquet(emb_path)
-    emb.filter(F.col("vec_id") >= 120).write.parquet(delta_path)
+    emb.filter((F.col("vec_id") >= 120) & (F.col("vec_id") < 135)).write.parquet(
+        delta_path
+    )
+    emb.filter(F.col("vec_id") >= 135).write.parquet(delta2_path)
     emb.filter(F.col("vec_id") < 20).write.parquet(q_path)
     idx_path = str(tmp_path / "idx")
     out_path = str(tmp_path / "res")
+    out2_path = str(tmp_path / "res2")
 
     assert main(["index", "build", "--kind", "ivfpq", "--path", idx_path,
                  "--embeddings", emb_path]) == 0
@@ -902,8 +923,29 @@ def test_cli_index_lifecycle(spark, tmp_path):
                  "--n-probe", "16"]) == 0
     res = spark.read.parquet(out_path)
     assert res.select("query_id").distinct().count() == 20
+
+    # append and probe take the kind from the index meta
+    assert main(["index", "append", "--path", idx_path,
+                 "--embeddings", delta2_path]) == 0
+    assert main(["index", "probe", "--path", idx_path, "--queries", q_path,
+                 "--out", out2_path, "--n-probe", "16"]) == 0
+    assert spark.read.parquet(out2_path).select(
+        "query_id").distinct().count() == 20
+    s = index_staleness(spark, idx_path)
+    assert (s["n_appends"], s["n_appended"]) == (2, 30)
+
+    # a given --kind that differs from the meta's fails loud, stores nothing
+    capsys.readouterr()
+    assert main(["index", "append", "--kind", "lsh", "--path", idx_path,
+                 "--embeddings", delta2_path]) == 2
+    assert main(["index", "probe", "--kind", "pq", "--path", idx_path,
+                 "--queries", q_path]) == 2
+    assert capsys.readouterr().err.count("kind='ivfpq'") == 2
+    assert index_staleness(spark, idx_path)["n_appends"] == 2
+
     # probe requires a query batch for the compressed kinds
-    assert main(["index", "probe", "--kind", "pq", "--path", idx_path]) == 2
+    assert main(["index", "probe", "--kind", "ivfpq", "--path", idx_path]) == 2
+    assert "--queries is required" in capsys.readouterr().err
 
 
 def test_cli_monitor_scores_stream(spark, tmp_path):

@@ -24,6 +24,37 @@ def _result_set(df):
     return {(r.query_id, r.neighbor_id, r.rank) for r in df.collect()}
 
 
+def _ivfpq_reference_codes(idx, rows) -> dict:
+    """Reference IVF-PQ append encoding in numpy, independent of the
+    operators: vec_id → (list_id, codes). The coarse list is the squared
+    euclidean argmin over the frozen centroids (of the unit vector for
+    residual indexes, of the raw vector otherwise); each subspace code is
+    the argmin against the frozen codebook of the unit vector, or of its
+    residual v̂ − centroid(list) for residual indexes."""
+    import numpy as np
+
+    cents = {r.list_id: np.array(r.centroid) for r in idx.centroids.collect()}
+    keys = sorted(cents)
+    C = np.vstack([cents[k] for k in keys])
+    books = {(r.subspace, r.code): np.array(r.centroid)
+             for r in idx.codebooks.collect()}
+    sub = idx.dim // idx.m
+    out = {}
+    for r in rows:
+        v = np.array(r.embedding, dtype=np.float64)
+        vn = v / (np.linalg.norm(v) or 1.0)
+        near = vn if idx.residual else v
+        li = int(((near - C) ** 2).sum(axis=1).argmin())
+        x = vn - C[li] if idx.residual else vn
+        codes = tuple(
+            min(range(idx.k), key=lambda c: (
+                (x[s * sub:(s + 1) * sub] - books[(s, c)]) ** 2).sum())
+            for s in range(idx.m)
+        )
+        out[r.vec_id] = (keys[li], codes)
+    return out
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -52,8 +83,8 @@ def test_ivfpq_persisted_probe_prunes_partition_files(spark, tmp_path):
     emb = _emb(spark)
     idx = ai.build_ivfpq_index(emb, "vec_id", "embedding", n_lists=8, m=8, k=16)
     path = str(tmp_path / "ivfpq")
-    ai.write_ivfpq_index(idx, path)
-    loaded = ai.read_ivfpq_index(spark, path)
+    ai.write_index(idx, path)
+    loaded = ai.read_index(spark, path)
     queries = emb.filter(F.col("vec_id") < 3)
 
     res = ai.ivfpq_probe(loaded, queries, k=5, n_probe=2)
@@ -82,8 +113,8 @@ def test_ivfpq_probe_partition_filter_scales_with_n_probe(spark, tmp_path):
     emb = _emb(spark)
     idx = ai.build_ivfpq_index(emb, "vec_id", "embedding", n_lists=8, m=8, k=16)
     path = str(tmp_path / "ivfpq")
-    ai.write_ivfpq_index(idx, path)
-    loaded = ai.read_ivfpq_index(spark, path)
+    ai.write_index(idx, path)
+    loaded = ai.read_index(spark, path)
     one_query = emb.filter(F.col("vec_id") == 7)
 
     sizes = {}
@@ -101,8 +132,8 @@ def test_ivf_persisted_probe_prunes_and_matches_unpruned(spark, tmp_path):
     emb = _emb(spark)
     idx = ai.build_ivf_index(emb, "vec_id", "embedding", n_lists=8)
     path = str(tmp_path / "ivf")
-    ai.write_ivf_index(idx, path)
-    loaded = ai.read_ivf_index(spark, path)
+    ai.write_index(idx, path)
+    loaded = ai.read_index(spark, path)
     queries = emb.filter(F.col("vec_id") < 5)
 
     res = ai.ivf_probe(loaded, queries, k=5, n_probe=2)
@@ -160,7 +191,8 @@ def test_ivf_sampled_training_build(spark):
     )
     assert idx.assignments.count() == 350
     reassigned = ai._assign_to_centroids(
-        idx.assignments.select("id", "vec"), idx.centroids
+        idx.assignments.select("id", "vec"),
+        *ai._centroid_matrix(idx.centroids),
     )
     assert (
         idx.assignments.select("id", "list_id")
@@ -274,22 +306,37 @@ def test_ivfpq_residual_roundtrip_and_persisted_append(spark, tmp_path):
         emb, "vec_id", "embedding", n_lists=8, m=8, k=16, residual=True
     )
     path = str(tmp_path / "ivfpq_res")
-    ai.write_ivfpq_index(idx, path)
+    ai.write_index(idx, path)
 
-    loaded = ai.read_ivfpq_index(spark, path)
+    loaded = ai.read_index(spark, path)
     assert loaded.residual is True
     want = _result_set(ai.ivfpq_probe(idx, queries, k=5, n_probe=3))
     assert _result_set(ai.ivfpq_probe(loaded, queries, k=5, n_probe=3)) == want
     assert len(want) > 0
 
-    # persisted append must equal the in-memory append (same frozen
-    # centroids + books -> same residual codes)
-    ai.append_ivfpq_index_at(spark, path, delta, "vec_id", "embedding")
-    reloaded = ai.read_ivfpq_index(spark, path)
-    in_mem = ai.append_ivfpq_index(idx, delta, "vec_id", "embedding")
+    # persisted append must equal a numpy encode of the delta under the
+    # same frozen centroids + books (residual codes), prefix untouched
+    from opensea_datapipeline_spark.functions.literals import local_frame
+
+    ai.append_index(spark, path, delta, "vec_id", "embedding")
+    reloaded = ai.read_index(spark, path)
+    want = _ivfpq_reference_codes(idx, delta.collect())
+    got = {r.id: (r.list_id, tuple(r.codes)) for r in reloaded.codes.collect()}
+    assert {i: got[i] for i in want} == want
+    assert {i: c for i, c in got.items() if i not in want} == {
+        r.id: (r.list_id, tuple(r.codes)) for r in idx.codes.collect()
+    }
+    ref = ai.IvfPqIndex(
+        idx.centroids, idx.codebooks,
+        idx.codes.unionByName(local_frame(
+            spark, [(i, l, list(c)) for i, (l, c) in want.items()],
+            "id long, list_id int, codes array<int>",
+        )),
+        idx.n_lists, idx.m, idx.k, idx.dim, idx.seed, residual=True,
+    )
     assert _result_set(
         ai.ivfpq_probe(reloaded, queries, k=5, n_probe=3)
-    ) == _result_set(ai.ivfpq_probe(in_mem, queries, k=5, n_probe=3))
+    ) == _result_set(ai.ivfpq_probe(ref, queries, k=5, n_probe=3))
 
 
 # ---------------------------------------------------------------------------
@@ -390,7 +437,7 @@ def test_index_staleness_lifecycle_counters(spark, tmp_path):
     emb = _emb(spark)
     idx = ai.build_ivf_index(emb, "vec_id", "embedding", n_lists=4)
     path = str(tmp_path / "ivf")
-    ai.write_ivf_index(idx, path)
+    ai.write_index(idx, path)
 
     s0 = ai.index_staleness(spark, path)
     assert s0["n_appends"] == 0 and s0["n_appended"] == 0
@@ -398,12 +445,12 @@ def test_index_staleness_lifecycle_counters(spark, tmp_path):
     assert s0["delta_fraction"] == 0.0
     assert s0["rebuild_recommended"] is False
 
-    ai.append_ivf_index_at(spark, path, _emb(spark, lo=200, hi=230))
+    ai.append_index(spark, path, _emb(spark, lo=200, hi=230))
     s1 = ai.index_staleness(spark, path)
     assert s1["n_appends"] == 1 and s1["n_appended"] == 30
     assert s1["rebuild_recommended"] is False  # 30/230 ~ 0.13 < 0.2
 
-    ai.append_ivf_index_at(spark, path, _emb(spark, lo=230, hi=300))
+    ai.append_index(spark, path, _emb(spark, lo=230, hi=300))
     s2 = ai.index_staleness(spark, path)
     assert s2["n_appends"] == 2 and s2["n_appended"] == 100
     assert s2["delta_fraction"] == pytest.approx(100 / 300, abs=1e-6)
@@ -411,7 +458,7 @@ def test_index_staleness_lifecycle_counters(spark, tmp_path):
     assert "rebuild_threshold" in s2 and "exceeds" in s2["reason"]
 
     # idempotent re-append adds nothing but still counts as an append
-    ai.append_ivf_index_at(spark, path, _emb(spark, lo=230, hi=300))
+    ai.append_index(spark, path, _emb(spark, lo=230, hi=300))
     s3 = ai.index_staleness(spark, path)
     assert s3["n_appends"] == 3 and s3["n_appended"] == 100
 
@@ -422,16 +469,16 @@ def test_pq_and_ivfpq_append_bump_staleness_counters(spark, tmp_path):
     emb = _emb(spark)
     pq = ai.build_pq_index(emb, "vec_id", "embedding", m=8, k=16)
     pq_path = str(tmp_path / "pq")
-    ai.write_pq_index(pq, pq_path)
-    ai.append_pq_index_at(spark, pq_path, _emb(spark, lo=200, hi=260))
+    ai.write_index(pq, pq_path)
+    ai.append_index(spark, pq_path, _emb(spark, lo=200, hi=260))
     s = ai.index_staleness(spark, pq_path)
     assert s["kind"] == "pq" and s["n_appends"] == 1
     assert s["n_base"] == 200 and s["n_appended"] == 60
 
     ivfpq = ai.build_ivfpq_index(emb, "vec_id", "embedding", n_lists=4, m=8, k=16)
     iv_path = str(tmp_path / "ivfpq")
-    ai.write_ivfpq_index(ivfpq, iv_path)
-    ai.append_ivfpq_index_at(spark, iv_path, _emb(spark, lo=200, hi=300))
+    ai.write_index(ivfpq, iv_path)
+    ai.append_index(spark, iv_path, _emb(spark, lo=200, hi=300))
     s2 = ai.index_staleness(spark, iv_path)
     assert s2["kind"] == "ivfpq" and s2["n_appends"] == 1
     assert s2["n_base"] == 200 and s2["n_appended"] == 100
@@ -445,8 +492,8 @@ def test_lsh_staleness_never_recommends_rebuild(spark, tmp_path):
     emb = _emb(spark, hi=100)
     idx = ai.build_lsh_index(emb, "vec_id", "embedding")
     path = str(tmp_path / "lsh")
-    ai.write_lsh_index(idx, path)
-    ai.append_lsh_index_at(spark, path, _emb(spark, lo=100, hi=300))
+    ai.write_index(idx, path)
+    ai.append_index(spark, path, _emb(spark, lo=100, hi=300))
     s = ai.index_staleness(spark, path)
     assert s["n_appends"] == 1 and s["n_appended"] == 200
     assert s["delta_fraction"] == pytest.approx(200 / 300, abs=1e-6)
@@ -460,7 +507,7 @@ def test_legacy_meta_without_counters_degrades_gracefully(spark, tmp_path):
     emb = _emb(spark, hi=100)
     idx = ai.build_ivf_index(emb, "vec_id", "embedding", n_lists=4)
     path = str(tmp_path / "ivf")
-    ai.write_ivf_index(idx, path)
+    ai.write_index(idx, path)
     # simulate a pre-r7 index: meta without lifecycle counters
     meta = ai._read_meta(spark, path, "ivf")
     meta.update(n_appends=None, n_base=None, n_appended=None)
@@ -472,7 +519,7 @@ def test_legacy_meta_without_counters_degrades_gracefully(spark, tmp_path):
     assert "predates" in s["reason"]
 
     # the first counted append adopts the pre-append total as n_base
-    ai.append_ivf_index_at(spark, path, _emb(spark, lo=100, hi=150))
+    ai.append_index(spark, path, _emb(spark, lo=100, hi=150))
     s1 = ai.index_staleness(spark, path)
     assert s1["n_base"] == 100 and s1["n_appended"] == 50
     assert s1["n_appends"] == 1
@@ -491,7 +538,7 @@ def test_cli_residual_build_and_stale_report(spark, tmp_path, capsys):
         "index", "build", "--kind", "ivfpq", "--path", idx_path,
         "--embeddings", emb_path, "--residual",
     ]) == 0
-    assert ai.read_ivfpq_index(spark, idx_path).residual is True
+    assert ai.read_index(spark, idx_path).residual is True
 
     assert main([
         "index", "stale", "--kind", "ivfpq", "--path", idx_path,
@@ -505,8 +552,8 @@ def test_streaming_ingest_appends_persisted_ivfpq_index(spark, tmp_path):
     # the r6 streaming-ingest shape extended to the composed index:
     # micro-batches append into the persisted residual IVF-PQ via
     # foreachBatch (frozen centroids + codebooks -> encoding a batch is
-    # a pure per-row function, so the streamed index equals an in-memory
-    # append over the concatenated delta), and the staleness counters
+    # a pure per-row function, so the streamed index equals one append
+    # of the concatenated delta), and the staleness counters
     # count one append per micro-batch.
     import os
 
@@ -526,7 +573,7 @@ def test_streaming_ingest_appends_persisted_ivfpq_index(spark, tmp_path):
         seed_part, "vec_id", "embedding", n_lists=4, m=8, k=16,
         residual=True, sample_size=80,
     )
-    ai.write_ivfpq_index(idx0, path)
+    ai.write_index(idx0, path)
 
     stream = (
         spark.readStream.schema(emb.schema)
@@ -535,7 +582,7 @@ def test_streaming_ingest_appends_persisted_ivfpq_index(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            lambda batch_df, _id: ai.append_ivfpq_index_at(
+            lambda batch_df, _id: ai.append_index(
                 spark, path, batch_df, "vec_id", "embedding"
             )
         )
@@ -545,19 +592,26 @@ def test_streaming_ingest_appends_persisted_ivfpq_index(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    loaded = ai.read_ivfpq_index(spark, path)
+    loaded = ai.read_index(spark, path)
     assert loaded.residual is True
     assert loaded.codes.count() == emb.count()
     stale = ai.index_staleness(spark, path)
     assert stale["n_appends"] == 2 and stale["n_appended"] == 120
 
-    in_mem = ai.append_ivfpq_index(
-        idx0, emb.filter(F.col("vec_id") >= 80), "vec_id", "embedding"
+    one_path = str(tmp_path / "ivfpq_one_append")
+    ai.write_index(idx0, one_path)
+    ai.append_index(
+        spark, one_path, emb.filter(F.col("vec_id") >= 80),
+        "vec_id", "embedding",
     )
+    once = ai.read_index(spark, one_path)
+    assert {(r.id, r.list_id, tuple(r.codes)) for r in loaded.codes.collect()} == {
+        (r.id, r.list_id, tuple(r.codes)) for r in once.codes.collect()
+    }
     queries = emb.filter(F.col("vec_id") < 10)
     assert _result_set(
         ai.ivfpq_probe(loaded, queries, k=5, n_probe=2)
-    ) == _result_set(ai.ivfpq_probe(in_mem, queries, k=5, n_probe=2))
+    ) == _result_set(ai.ivfpq_probe(once, queries, k=5, n_probe=2))
 
 
 # ---------------------------------------------------------------------------
@@ -703,14 +757,14 @@ def test_staleness_drifted_appends_decay_recall(spark, tmp_path):
 
     base = ai.build_ivfpq_index(emb, "vec_id", "embedding", n_lists=8, m=8, k=16)
     path = str(tmp_path / "ivfpq")
-    ai.write_ivfpq_index(base, path)
-    ai.append_ivfpq_index_at(spark, path, drift, "vec_id", "embedding")
+    ai.write_index(base, path)
+    ai.append_index(spark, path, drift, "vec_id", "embedding")
 
     stale = ai.index_staleness(spark, path)
     assert stale["delta_fraction"] == pytest.approx(0.5, abs=1e-6)
     assert stale["rebuild_recommended"] is True
 
-    appended_recall = recall(ai.read_ivfpq_index(spark, path))
+    appended_recall = recall(ai.read_index(spark, path))
     rebuilt_recall = recall(
         ai.build_ivfpq_index(union, "vec_id", "embedding", n_lists=8, m=8, k=16)
     )
