@@ -123,9 +123,8 @@ def _check_corpus_dims(clean: DataFrame, dim: int, op: str) -> None:
     """Build-seam twin of ``_check_delta_dims``: every training/corpus
     vector must have the index dimension, or the learned structure is
     built over silent garbage (a longer vector PQ-encodes with its tail
-    ignored but its norm over all elements; LSH's expression path turns
-    a length mismatch into null dots → all-'0' signature bits; MLlib
-    dies opaquely). One size-filter count over a corpus the build is
+    ignored but its norm over all elements; LSH's signature matmul and
+    MLlib die opaquely on the shape mismatch). One size-filter count over a corpus the build is
     already scanning. For LSH this also validates the CONFIGURED dim —
     an unvalidated ``dim=64`` default on a 32-dim feed would otherwise
     bootstrap a wedged index whose every append then fails the delta

@@ -23,7 +23,7 @@ import pandas as pd  # module-level: pandas_udf resolves stringified hints
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, dot_product
+from ..functions.vector import dot_product
 
 
 def knn_topk_exact(
@@ -32,7 +32,6 @@ def knn_topk_exact(
     vec_col: str = "embedding",
     k: int = 10,
     queries: DataFrame | None = None,
-    assume_normalized: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (J8).
 
@@ -54,55 +53,34 @@ def knn_topk_exact(
     q = (queries if queries is not None else embeddings).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    if assume_normalized:
-        sim = dot_product("_qvec", "_cvec")
-        pairs = q.crossJoin(corpus).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-    else:
-        # Cosine is undefined against (or from) a zero-norm vector; drop
-        # those rows BEFORE the cross-join, so the division can't
-        # ANSI-abort and a top-k slot is never padded with an
-        # undefined-similarity row (a zero-norm query would otherwise
-        # "rank" k neighbors purely by id — ADVICE r13). Filtering each
-        # SIDE on its precomputed norm (a NULL norm from a null
-        # embedding also fails the predicate) both shrinks the join
-        # itself and keeps codegen from evaluating the dim-length
-        # dot-product fold twice per pair — the IsNotNull(sim) form of
-        # this guard cost the r14 bench +0.3-0.5 s on this query.
-        corpus = corpus.withColumn("_cnorm", l2_norm("_cvec")).filter(
-            F.col("_cnorm") != 0
-        )
-        q = q.withColumn("_qnorm", l2_norm("_qvec")).filter(
-            F.col("_qnorm") != 0
-        )
-        pairs = q.crossJoin(corpus).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        sim = dot_product("_qvec", "_cvec") / (
-            F.col("_qnorm") * F.col("_cnorm")
-        )
+    # Cosine is undefined against (or from) a zero-norm vector; drop
+    # those rows BEFORE the cross-join, so the division can't
+    # ANSI-abort and a top-k slot is never padded with an
+    # undefined-similarity row (a zero-norm query would otherwise
+    # "rank" k neighbors purely by id — ADVICE r13). Filtering each
+    # SIDE on its precomputed norm (a NULL norm from a null
+    # embedding also fails the predicate) both shrinks the join
+    # itself and keeps codegen from evaluating the dim-length
+    # dot-product fold twice per pair — the IsNotNull(sim) form of
+    # this guard cost the r14 bench +0.3-0.5 s on this query.
+    corpus = corpus.withColumn("_cnorm", l2_norm("_cvec")).filter(
+        F.col("_cnorm") != 0
+    )
+    q = q.withColumn("_qnorm", l2_norm("_qvec")).filter(
+        F.col("_qnorm") != 0
+    )
+    pairs = q.crossJoin(corpus).filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    sim = dot_product("_qvec", "_cvec") / (
+        F.col("_qnorm") * F.col("_cnorm")
+    )
     pairs = pairs.select("query_id", "neighbor_id", sim.alias("sim"))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def _lsh_signature(vec_col: str, hyperplanes: list[list[float]]) -> F.Column:
-    """Random-hyperplane (SimHash-family) signature: one bit per plane,
-    bit = sign(v · h). Computed with built-in higher-order functions."""
-    bits = []
-    for h in hyperplanes:
-        plane = F.array(*[F.lit(float(x)) for x in h])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
 
 
 def _lsh_sig_table(
@@ -122,17 +100,15 @@ def _lsh_sig_table(
     20k×21 tables expression-side) to a vectorized pass; the long join
     key also beats the old bit-string key in the candidate shuffle.
 
-    The plane matrix is drawn from the same seeded RNG stream in the
-    same order as sequential per-table draws, so buckets — and therefore
-    results — are equivalent to the expression path in practice (a dot
-    product sitting exactly at a float boundary could in principle flip
-    a sign bit between BLAS and sequential-fold summation; with
-    continuous random planes the event has measure zero and has never
-    been observed in the recall/parity suites).
+    The plane matrix is drawn from one seeded RNG stream, in table
+    order, so a given ``seed`` always yields the same buckets. A dot
+    product sitting exactly at 0 takes sign bit 1, like any
+    non-negative one; with continuous random planes that tie has measure
+    zero.
 
     NULL embeddings are filtered out before the UDF (``np.vstack``
-    would raise on ``None``); the expression path yielded a NULL
-    signature that produced no candidates — same net effect.
+    would raise on ``None``), so a NULL vector gets no signature and no
+    candidates.
 
     Returns (id, table, sig:long) — ids only: the bucket join is the
     widest shuffle in the LSH pipeline, and vectors re-attach later by

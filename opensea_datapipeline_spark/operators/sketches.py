@@ -254,35 +254,18 @@ def kmv_distinct_by_group(
     )
 
 
-def _bloom_bit(
-    col: F.Column, j: int, m_bits: int, salt: str, hash_fn: str = "md5"
-) -> F.Column:
-    """Bit position j for a value. ``hash_fn="md5"``: disjoint 8-hex
-    (32-bit) slice of ONE md5 per value, mod ``m_bits`` — the Count-Min
-    bucket discipline (see count_min_estimates), so the DuckDB oracle
-    replays every bit. ``hash_fn="xxhash64"``: Kirsch–Mitzenmacher
-    double hashing pos_j = (h1 + j·h2) mod m — two JVM-native 64-bit
-    hashes instead of a hex digest + string slicing, the 100 TB probe
-    path (~same FP guarantees, not oracle-replayable; zero-FN property
-    holds for ANY hash since build and probe share it)."""
-    if hash_fn == "xxhash64":
-        # fold each hash to 31 bits first: (h1 + j*h2) then provably
-        # fits a long (ANSI mode throws on 64-bit overflow); uniform
-        # for any m_bits <= 2^31
-        h1 = F.pmod(
-            F.xxhash64(F.lit(salt), col.cast("string")), F.lit(1 << 31)
-        )
-        h2 = F.pmod(
-            F.xxhash64(col.cast("string"), F.lit(salt)), F.lit(1 << 31)
-        )
-        return F.pmod(h1 + F.lit(j) * h2, F.lit(m_bits)).cast("long")
+def _bloom_bit(col: F.Column, j: int, m_bits: int, salt: str) -> F.Column:
+    """Bit position j for a value: disjoint 8-hex (32-bit) slice of ONE
+    md5 per value, mod ``m_bits`` — the Count-Min bucket discipline
+    (see count_min_estimates), so the DuckDB oracle replays every
+    bit."""
     if j > 3:
         # guard HERE, not only in bloom_bits: a probe with more hashes
         # than the digest has slices would substring past the 32 hex
         # chars -> conv('') -> NULL -> every row silently fails the AND
         # chain — 100% false negatives, the one failure the Bloom
         # contract forbids
-        raise ValueError("md5 hash_fn supports k_hashes <= 4 (32 hex / 8)")
+        raise ValueError("md5 bloom supports k_hashes <= 4 (32 hex / 8)")
     digest = F.md5(F.concat(F.lit(f"{salt}_"), col.cast("string")))
     return (
         F.conv(F.substring(digest, 1 + 8 * j, 8), 16, 10).cast("long")
@@ -297,7 +280,6 @@ def bloom_bits(
     m_bits: int = 8192,
     k_hashes: int = 4,
     salt: str = "bloom-v1",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Membership sketch build: the DISTINCT set-bit positions of a
     Bloom filter (Bloom 1970) over ``df[col]`` — one row per set bit,
@@ -311,20 +293,18 @@ def bloom_bits(
     to ≤ m_bits rows BEFORE the exchange — the shuffle carries the
     filter, never the stream (the Count-Min discipline). md5-derived
     positions (one digest per row, disjoint 32-bit slices) keep the
-    sketch bit-for-bit replayable by the DuckDB oracle;
-    ``hash_fn="xxhash64"`` swaps in double hashing for the cheaper
-    JVM-native production path (see _bloom_bit).
+    sketch bit-for-bit replayable by the DuckDB oracle.
 
     SIZE THE MASK TO THE KEY CARDINALITY: at k=4, plan ~16 bits/key
     (FP ≈ 0.24%); a filter with kn/m ≳ 2 is saturated — nearly every
     probe passes and the prune silently degrades to a no-op (measured:
     29k keys into 8,192 bits prunes NOTHING; SCALING.md §bloom).
     """
-    if hash_fn == "md5" and k_hashes > 4:
+    if k_hashes > 4:
         raise ValueError("k_hashes > 4 needs more than one md5 (32 hex / 8)")
     c = F.col(col)
     positions = F.array(
-        *[_bloom_bit(c, j, m_bits, salt, hash_fn) for j in range(k_hashes)]
+        *[_bloom_bit(c, j, m_bits, salt) for j in range(k_hashes)]
     )
     return (
         df.filter(c.isNotNull())
@@ -372,7 +352,6 @@ def bloom_might_contain(
     m_bits: int = 8192,
     k_hashes: int = 4,
     salt: str = "bloom-v1",
-    hash_fn: str = "md5",
 ) -> F.Column:
     """Boolean column: every one of the value's ``k_hashes`` bits is
     set in ``mask`` (a bloom_mask_literal). False ⇒ definitely absent
@@ -381,7 +360,7 @@ def bloom_might_contain(
     whole-stage codegen; no Python, no join."""
     tests = []
     for j in range(k_hashes):
-        pos = _bloom_bit(col, j, m_bits, salt, hash_fn)
+        pos = _bloom_bit(col, j, m_bits, salt)
         word = F.element_at(mask, (pos / 64).cast("int") + 1)
         # arithmetic shift then &1: sign extension only touches bits
         # above the one queried, the AND masks it to the target bit.

@@ -134,18 +134,39 @@ def _lit_str_array(words) -> F.Column:
     return F.split(F.lit(" ".join(words)), " ")
 
 
-def _word_ngrams(words: F.Column, n: int) -> F.Column:
-    """Space-joined word ``n``-grams, empty array for docs shorter than
-    ``n`` words. The guard is semantic, not cosmetic: for size < n,
-    ``sequence(1, size-n+1)`` descends (e.g. [1, 0]) and ``slice(_, 0, n)``
-    throws INVALID_PARAMETER_VALUE.START — a short or empty document
-    would abort the whole job."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
-    return F.when(F.size(words) >= n, grams).otherwise(
-        F.array().cast("array<string>")
+def _gram_key(tokens: str, i: F.Column, n: int) -> F.Column:
+    """The one word-gram key: ``xxhash64`` of the ``n`` tokens from
+    1-based position ``i``, space-joined. 8 bytes on every gram shuffle
+    instead of the ~n*6-byte string; tokens never contain a space, so
+    the join is injective and two grams share a key only on a 64-bit
+    collision."""
+    return F.xxhash64(F.array_join(F.slice(tokens, i, n), " "))
+
+
+def _grams(
+    toks: DataFrame, tokens: str, n: int, id_col: str, carry=()
+) -> DataFrame:
+    """The one word-``n``-gram projection: (id, *carry, _i, _g) — one
+    row per gram start ``_i`` of every doc in ``toks`` whose token-array
+    column ``tokens`` holds at least ``n`` tokens, ``_g`` its
+    ``_gram_key``. Explode-index + slice, not a ``transform`` lambda:
+    higher-order functions are interpreted, this form stays in
+    whole-stage codegen (3.55 s vs 0.95 s for a gram pass at sf0.1,
+    r10). The size filter is semantic: for size < n, ``sequence(1,
+    size-n+1)`` descends and ``slice(_, 0, n)`` throws, so a short doc
+    would abort the job.
+
+    Results downstream are exact unless two distinct grams collide in
+    xxhash64 (odds ~grams²/2⁶⁵), which can only merge those two grams'
+    counts."""
+    idx = F.sequence(F.lit(1), F.size(tokens) - (n - 1))
+    return (
+        toks.filter(F.size(tokens) >= n)
+        .select("*", F.explode(idx).alias("_i"))
+        .select(
+            id_col, *carry, "_i",
+            _gram_key(tokens, F.col("_i"), n).alias("_g"),
+        )
     )
 
 
@@ -637,23 +658,15 @@ def repetition_scores(
 ) -> DataFrame:
     """Gopher-style repetition filter signal: the fraction of word
     ``n``-grams occupied by the single most frequent one. High values
-    flag boilerplate/spam. explode → count per (doc, gram) → max ratio —
-    two map-side-combined aggregates, scales with corpus size."""
-    # explode-index+slice, not the _word_ngrams transform lambda:
-    # higher-order functions are interpreted, not codegen (measured
-    # 3.7x on the contamination gram pass, r10)
-    words = split_words(text_col)
-    idx = F.sequence(F.lit(1), F.size("_ws") - (n - 1))
-    exploded = (
-        df.withColumn("_ws", words)
-        .filter(F.size("_ws") >= n)
-        .select(F.col(id_col), F.explode(idx).alias("_i"), "_ws")
-        .select(
-            id_col,
-            F.array_join(F.slice("_ws", F.col("_i"), n), " ").alias("gram"),
-        )
+    flag boilerplate/spam. ``_grams`` → count per (doc, gram key) → max
+    ratio — two map-side-combined aggregates, scales with corpus size.
+    Exact unless two of a doc's grams collide in xxhash64."""
+    toks = df.select(id_col, split_words(text_col).alias("_ws"))
+    per_gram = (
+        _grams(toks, "_ws", n, id_col)
+        .groupBy(id_col, "_g")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
-    per_gram = exploded.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
     return per_gram.groupBy(id_col).agg(
         F.sum("c").cast("long").alias("n_grams"),
         F.max("c").cast("long").alias("top_gram_count"),
@@ -708,51 +721,33 @@ def contamination_flags(
     contaminated train doc: distinct shared grams + distinct eval docs
     hit.
 
-    Shape at scale: explode both sides to (doc, gram) and equi-join on
-    the gram — the same bucketed-join skeleton as LSH banding, never
-    doc×doc. The eval side is benchmark-sized (thousands of docs), so its
-    exploded gram table broadcast-joins against the corpus-sized train
-    grams; count-distinct aggregates are map-side combined. Grams join as
-    raw strings here for oracle transparency — at 100 TB hash them
-    (``F.md5``) to fixed-width keys to shrink the shuffle, which cannot
-    change the result beyond md5-collision odds.
+    Shape at scale: explode both sides to (doc, gram key) with
+    ``_grams`` and equi-join on the key — the same bucketed-join
+    skeleton as LSH banding, never doc×doc. The eval side is
+    benchmark-sized (thousands of docs), so its exploded gram table
+    broadcast-joins against the corpus-sized train grams; count-distinct
+    aggregates are map-side combined. Counts are exact unless two
+    distinct grams collide in xxhash64, which can only merge them.
 
-    Gram generation is the explode-index+slice form (whole-stage
-    codegen), not a ``transform`` lambda (higher-order functions are
-    interpreted: measured 3.55 s vs 0.95 s for the train-side gram pass
-    at sf0.1, r10), and per-doc grams are NOT pre-deduplicated: the
-    count-DISTINCT aggregates already collapse duplicate (doc, gram)
-    join rows, so a pre-distinct would add a full shuffle of the
-    exploded grams (or a non-codegen array_distinct) for zero effect on
-    the result.
+    Per-doc grams are NOT pre-deduplicated: the count-DISTINCT
+    aggregates already collapse duplicate (doc, gram) join rows, so a
+    pre-distinct would add a full shuffle of the exploded grams (or a
+    non-codegen array_distinct) for zero effect on the result.
     """
 
     def grams(df: DataFrame, out_id: str) -> DataFrame:
-        ws = split_words(text_col)
-        idx = F.sequence(F.lit(1), F.size(ws) - (n - 1))
-        return (
-            df.withColumn("_ws", ws)
-            .filter(F.size("_ws") >= n)
-            .select(
-                F.col(id_col).alias(out_id),
-                F.explode(idx).alias("_i"),
-                "_ws",
-            )
-            .select(
-                out_id,
-                F.array_join(F.slice("_ws", F.col("_i"), n), " ").alias(
-                    "gram"
-                ),
-            )
+        toks = df.select(
+            F.col(id_col).alias(out_id), split_words(text_col).alias("_ws")
         )
+        return _grams(toks, "_ws", n, out_id)
 
     tg = grams(train, "doc_id")
-    eg = grams(eval_set, "eval_id")
+    eg = grams(eval_set, "eval_id").drop("_i")
     return (
-        tg.join(F.broadcast(eg), "gram")
+        tg.join(F.broadcast(eg), "_g")
         .groupBy("doc_id")
         .agg(
-            F.countDistinct("gram").alias("n_shared_grams"),
+            F.countDistinct("_g").alias("n_shared_grams"),
             F.countDistinct("eval_id").alias("n_eval_docs_hit"),
         )
     )
@@ -828,7 +823,6 @@ def dup_ngram_fraction(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """Cross-document duplicated n-gram fraction — the doc-level signal
     behind exact-substring dedup (RefinedWeb §3.2 / C4's "three-sentence
@@ -836,19 +830,11 @@ def dup_ngram_fraction(
     the share of its DISTINCT word n-grams that also occur in at least
     one other document. High dup_frac = boilerplate or near-copy.
 
-    Plan: tokenize → explode the n-gram start indices and slice (no
-    higher-order lambda, so the gram projection stays in codegen) →
-    distinct (doc, gram) → per-gram doc-frequency via a window over
-    gram → one agg per doc. Three shuffles, all on bounded pair sets.
-    At 100 TB the gram STRING dominates shuffle bytes — ``hashed=True``
-    is the scale path: the ~50-byte gram string is collapsed map-side to
-    ``xxhash64(gram)`` (8 bytes) BEFORE the distinct + window shuffles,
-    so shuffle volume drops by roughly the string/8 ratio (measured in
-    SCALING.md §r10; collision odds ~n²/2⁶⁴ — a collision can only
-    nudge one gram's doc-frequency, never corrupt the per-doc count).
-    The graded form keeps the string so the DuckDB oracle is exact;
-    equal results on collision-free corpora are pinned by
-    tests/test_new_operators.py::test_hashed_gram_variants_match.
+    Plan: tokenize → ``_grams`` (8-byte xxhash64 gram keys, so the
+    shuffles carry no gram strings) → distinct (doc, gram) → per-gram
+    doc-frequency via a window over gram → one agg per doc. Three
+    shuffles, all on bounded pair sets. Exact unless two distinct grams
+    collide in xxhash64, which can only merge their doc-frequencies.
 
     Docs shorter than ``n`` tokens have no n-grams and drop out (same
     as the oracle's empty generate_series).
@@ -856,16 +842,8 @@ def dup_ngram_fraction(
     from pyspark.sql import Window
 
     toks = docs.select(id_col, F.split(F.col(text_col), " ").alias("_ts"))
-    idx = F.sequence(F.lit(1), F.size("_ts") - (n - 1))
-    gram_str = F.array_join(F.slice("_ts", F.col("_i"), n), " ")
-    gram = F.xxhash64(gram_str) if hashed else gram_str
-    grams = (
-        toks.filter(F.size("_ts") >= n)
-        .select(id_col, F.explode(idx).alias("_i"), "_ts")
-        .select(id_col, gram.alias("gram"))
-        .distinct()
-    )
-    nd = F.count(F.lit(1)).over(Window.partitionBy("gram"))
+    grams = _grams(toks, "_ts", n, id_col).select(id_col, "_g").distinct()
+    nd = F.count(F.lit(1)).over(Window.partitionBy("_g"))
     dup = F.count(F.when(F.col("_nd") > 1, 1))
     return (
         grams.withColumn("_nd", nd)
@@ -884,7 +862,6 @@ def bigram_logprob_scores(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """Statistical LM quality scoring WITHOUT an external model (the
     KenLM-perplexity-filter shape, self-trained): add-1-smoothed corpus
@@ -894,30 +871,21 @@ def bigram_logprob_scores(
     of doc bigrams), the unigram marginal comes from the BIGRAM table
     (never a second corpus pass), vocab is a 1-row broadcast.
 
-    ``hashed=True`` is the 100 TB scale path: both words collapse
-    map-side to ``xxhash64`` before every shuffle (model aggregate,
-    unigram window, doc-bigram join), so the data-sized doc-bigram
-    shuffle carries 16 bytes of key instead of two words (measured in
-    SCALING.md §r10). Counts, smoothing, and the per-doc average are
-    invariant under any injective recoding of the vocabulary, so the
-    scores are identical absent 64-bit collisions (~vocab²/2⁶⁴);
-    pinned by tests/test_new_operators.py::test_hashed_gram_variants_match.
-    The graded query keeps strings so the DuckDB oracle is exact.
+    Keys are hashed the ``_grams`` way before every shuffle: the bigram
+    is its ``_g`` and its first word ``w1`` the 1-gram key of the same
+    position, so the data-sized doc-bigram shuffle carries 16 bytes of
+    key instead of two words. Counts, smoothing and the per-doc average
+    are invariant under any injective recoding of the vocabulary, so
+    scores are exact unless two distinct keys collide in xxhash64,
+    which can only merge their counts.
     """
     from pyspark.sql import Window
 
     toks = docs.select(id_col, F.split(F.col(text_col), " ").alias("ts"))
-    idx = F.sequence(F.lit(1), F.size("ts") - 1)
-    w1 = F.element_at("ts", F.col("i"))
-    w2 = F.element_at("ts", F.col("i") + 1)
-    if hashed:
-        w1, w2 = F.xxhash64(w1), F.xxhash64(w2)
-    bg = (
-        toks.filter(F.size("ts") >= 2)
-        .select(id_col, F.explode(idx).alias("i"), "ts")
-        .select(id_col, w1.alias("w1"), w2.alias("w2"))
+    bg = _grams(toks, "ts", 2, id_col, carry=["ts"]).select(
+        id_col, _gram_key("ts", F.col("_i"), 1).alias("w1"), "_g"
     )
-    c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+    c12 = bg.groupBy("w1", "_g").agg(F.count(F.lit(1)).alias("c12"))
     model = c12.withColumn(
         "c1", F.sum("c12").over(Window.partitionBy("w1"))
     )
@@ -933,9 +901,9 @@ def bigram_logprob_scores(
         # exploded corpus bigram stream (BuildLeft) to probe it with
         # the model, a plan that cannot exist when the doc side is
         # data-proportional. The model side is vocab²-bounded but not
-        # broadcastable at web scale either, so sort-merge on (w1, w2)
-        # is the strategy that survives scale.
-        bg.join(model.hint("merge"), ["w1", "w2"])
+        # broadcastable at web scale either, so sort-merge on the
+        # bigram key is the plan that survives scale.
+        bg.join(model.hint("merge"), ["w1", "_g"])
         .crossJoin(F.broadcast(vocab))
         .groupBy(id_col)
         .agg(
@@ -1076,63 +1044,28 @@ def score_nb_token_model(
 
 
 def _cross_doc_dup_hits(
-    toks: DataFrame,
-    *,
-    n: int,
-    id_col: str,
-    hashed: bool,
-    with_ntokens: bool = False,
-    strategy: str = "window",
+    toks: DataFrame, *, n: int, id_col: str, carry=()
 ) -> DataFrame:
-    """Shared core of duplicate_token_spans / span_cut_corpus: from a
-    (id, _ts token-array) frame, the positions of every n-gram that also
-    occurs in at least one OTHER document. One codegen explode-index+
-    slice gram projection (xxhash64-collapsed map-side when ``hashed``),
-    then the cross-doc test, two plan strategies with identical output:
+    """Shared core of duplicate_token_spans / span_cut_corpus: from an
+    (id, _ts token-array, *carry) frame, the (id, *carry, _i) start
+    positions of every n-gram that also occurs in at least one OTHER
+    document. ``_grams``, then per-gram min/max doc id over a
+    gram-partitioned window — ONE shuffle, the oracle's shape.
 
-    - ``"window"`` (graded default — mirrors the oracle shape): per-gram
-      min/max doc over a gram-partitioned window. ONE shuffle, but a HOT
-      gram (site boilerplate repeated across millions of docs) lands
-      every one of its hit rows in a single window partition — windows
-      get no AQE skew mitigation.
-    - ``"join"`` (the 100 TB skew path): groupBy(gram) min/max — the
-      map-side partial agg collapses a hot gram to ONE row per task
-      before the exchange — filter to DUPLICATED grams only (usually a
-      small fraction of a clean corpus), then inner-join hits back.
-      The join is AQE-skew-splittable and broadcastable when the dup
-      set is small; equality with the window form is pinned by
-      tests/test_new_operators.py::test_dup_hits_strategies_match and
-      the skew measurement lives in SCALING.md §span-dedup.
-
-    Returns (id_col, [_nt,] _i) rows; ``_nt`` (the doc's token count)
-    is carried through when ``with_ntokens``.
+    A hot gram (site boilerplate repeated across many docs) lands all
+    of its hit rows in one window partition; collapsing hot grams
+    map-side and joining hits back measured slower, on a hot-gram skew
+    corpus too (SCALING.md §span-dedup skew addendum).
     """
     from pyspark.sql import Window
 
-    carry = [F.size("_ts").alias("_nt")] if with_ntokens else []
-    idx = F.sequence(F.lit(1), F.size("_ts") - (n - 1))
-    gram_str = F.array_join(F.slice("_ts", F.col("_i"), n), " ")
-    gram = F.xxhash64(gram_str) if hashed else gram_str
-    out_cols = [id_col, *(["_nt"] if with_ntokens else []), "_i"]
-    hits = (
-        toks.filter(F.size("_ts") >= n)
-        .select(id_col, *carry, F.explode(idx).alias("_i"), "_ts")
-        .select(*out_cols[:-1], "_i", gram.alias("_g"))
-    )
-    if strategy == "join":
-        dup_grams = (
-            hits.groupBy("_g")
-            .agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))
-            .filter(F.col("_mn") != F.col("_mx"))
-            .select("_g")
-        )
-        return hits.join(dup_grams, "_g").select(*out_cols)
     wg = Window.partitionBy("_g")
     return (
-        hits.withColumn("_mn", F.min(id_col).over(wg))
+        _grams(toks, "_ts", n, id_col, carry)
+        .withColumn("_mn", F.min(id_col).over(wg))
         .withColumn("_mx", F.max(id_col).over(wg))
         .filter(F.col("_mn") != F.col("_mx"))
-        .select(*out_cols)
+        .select(id_col, *carry, "_i")
     )
 
 
@@ -1142,8 +1075,6 @@ def duplicate_token_spans(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """Exact duplicate-substring SPANS (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better", re-expressed at word-
@@ -1154,26 +1085,20 @@ def duplicate_token_spans(
     cut-the-span dedup pass actually consumes (the reference corpus
     curation keeps whole docs; span dedup is the finer-grained stretch).
 
-    Plan (no N² anywhere): tokenize → explode n-gram start indices
-    (codegen slice/array_join projection, same shape as
-    dup_ngram_fraction) → cross-doc test per gram via min!=max doc id
-    over a gram-partitioned window (ONE equi-shuffle on gram) → island
+    Plan (no N² anywhere): tokenize → ``_grams`` (xxhash64 gram keys)
+    → cross-doc test per gram via min!=max doc id over a
+    gram-partitioned window (ONE equi-shuffle on the gram key) → island
     merge per doc: a doc-partitioned running max of hit ends marks
     interval starts (overlap OR adjacency merges), a running sum numbers
     the islands, one groupBy collapses them. Every window is partitioned
     (gram, then doc) — never SinglePartition; pinned by
     tests/test_plans_and_io.py::test_duplicate_spans_plan.
 
-    ``hashed=True`` is the 100 TB scale path: collapse the ~n*6-byte
-    gram string to ``xxhash64`` map-side BEFORE the gram shuffle (span
-    geometry is invariant under any injective recoding of grams; same
-    argument as dup_ngram_fraction — pinned by
-    tests/test_new_operators.py::test_duplicate_spans_hashed_matches).
-
     Docs with no cross-doc duplicated gram produce no rows (a span-cut
     pass only visits flagged docs); docs shorter than ``n`` tokens
-    cannot be flagged. Outputs are exact integers plus one rounded
-    int/int division — bit-identical cross-engine.
+    cannot be flagged. Outputs are integers plus one rounded int/int
+    division — bit-identical cross-engine, and exact unless two
+    distinct grams collide in xxhash64 (which can only merge them).
     """
     from pyspark.sql import Window
 
@@ -1181,8 +1106,8 @@ def duplicate_token_spans(
         id_col, F.split(F.col(text_col), " ").alias("_ts")
     )
     dup = _cross_doc_dup_hits(
-        toks, n=n, id_col=id_col, hashed=hashed, with_ntokens=True,
-        strategy=strategy,
+        toks.withColumn("_nt", F.size("_ts")), n=n, id_col=id_col,
+        carry=["_nt"],
     ).withColumn("_e", F.col("_i") + (n - 1))
     wd = Window.partitionBy(id_col).orderBy("_i")
     prev_end = F.max("_e").over(wd.rowsBetween(Window.unboundedPreceding, -1))
@@ -2301,8 +2226,6 @@ def span_cut_corpus(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """The ACTIONABLE half of exact-substring dedup: rewrite every
     document with its cross-doc duplicated n-gram spans REMOVED (the
@@ -2314,11 +2237,10 @@ def span_cut_corpus(
     spans; this emits the cleaned corpus a training run actually reads.
 
     Plan: the same gram pass as duplicate_token_spans marks duplicated
-    hits (ONE gram equi-shuffle; ``hashed=True`` collapses the gram key
-    to xxhash64 map-side at 100 TB), each dup hit explodes to its ≤ n
-    covered token positions (clean corpus regions never expand), a
-    distinct builds the per-doc cut set, a left ANTI join drops cut
-    positions, and an ordered re-assembly
+    hits (ONE equi-shuffle on the xxhash64 gram key), each dup hit
+    explodes to its ≤ n covered token positions (clean corpus regions
+    never expand), a distinct builds the per-doc cut set, a left ANTI
+    join drops cut positions, and an ordered re-assembly
     (array_join∘transform∘array_sort∘collect_list(struct(pos, tok)))
     rebuilds the text — positions are unique per doc so the sort is
     total and the rebuild deterministic. Every shuffle is keyed by gram
@@ -2326,8 +2248,9 @@ def span_cut_corpus(
 
     Docs with no duplicated gram pass through VERBATIM; a doc cut down
     to nothing keeps a row with empty text. NULL-text docs are out of
-    contract (filtered, same as the oracle). Returns
-    (id, text, n_tokens_removed).
+    contract (filtered, same as the oracle). The cut is exact unless
+    two distinct grams collide in xxhash64, which can only merge them.
+    Returns (id, text, n_tokens_removed).
     """
     src = docs.filter(F.col(text_col).isNotNull())
     toks = src.select(id_col, F.split(F.col(text_col), " ").alias("_ts"))
@@ -2335,9 +2258,7 @@ def span_cut_corpus(
         id_col, F.posexplode("_ts").alias("_p0", "_tok")
     ).select(id_col, (F.col("_p0") + 1).alias("_p"), "_tok")
 
-    dup_hits = _cross_doc_dup_hits(
-        toks, n=n, id_col=id_col, hashed=hashed, strategy=strategy
-    )
+    dup_hits = _cross_doc_dup_hits(toks, n=n, id_col=id_col)
     cut = dup_hits.select(
         id_col,
         F.explode(F.sequence(F.col("_i"), F.col("_i") + (n - 1))).alias("_p"),

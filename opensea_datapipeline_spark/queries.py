@@ -7852,9 +7852,8 @@ def q_duplicate_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actionable as "which passages". Island merge is two doc-partitioned
     # windows + one groupBy; the cross-doc test is one gram equi-shuffle.
     # The oracle replays the identical running-max island numbering, so
-    # every span count/length/fraction is hash-compared. hashed=True
-    # (xxhash64 gram keys) is the 100 TB shuffle-byte path, graded
-    # structurally in tests/test_new_operators.py.
+    # every span count/length/fraction is hash-compared. Gram keys are
+    # xxhash64 (operators/text.py:_grams), exact absent a collision.
     d = _t(spark, sf_dir, "documents")
     return tx.duplicate_token_spans(d, n=8)
 
@@ -7902,24 +7901,6 @@ def q_span_cut_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operators/text.py:span_cut_corpus.
     d = _t(spark, sf_dir, "documents")
     return tx.span_cut_corpus(d, n=8)
-
-
-@_register(
-    "duplicate_spans_skewsafe",
-    # same oracle as duplicate_token_spans: the join strategy is
-    # output-identical by construction (test_dup_hits_strategies_match);
-    # this entry gives the 100 TB skew path its own driver row, the
-    # containment_dedup_blocked precedent.
-    ORACLE["duplicate_token_spans"],
-)
-def q_duplicate_spans_skewsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The hot-gram-skew-resilient form of duplicate_token_spans:
-    # strategy="join" collapses hot grams map-side (groupBy partial agg)
-    # and joins hits to the DUPLICATED-grams set only — AQE-splittable /
-    # broadcastable where the gram window funnels every hot-gram hit
-    # into one task (measured: SCALING.md §span-dedup skew addendum).
-    d = _t(spark, sf_dir, "documents")
-    return tx.duplicate_token_spans(d, n=8, strategy="join")
 
 
 @_register(
@@ -8902,11 +8883,11 @@ def q_bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equi-shuffle of doc bigrams), the unigram marginal comes from the
     # BIGRAM table (never a second corpus pass), vocab is a 1-row
     # broadcast. ln of exact-integer ratios under round-6 — the same
-    # libm seam budget as token_entropy/kl_source_drift. The graded form
-    # keys by the raw word strings for oracle exactness; hashed=True
-    # (operators/text.py) is the measured 100 TB shuffle-bytes path.
+    # libm seam budget as token_entropy/kl_source_drift. Word and bigram
+    # keys are xxhash64 (operators/text.py:_grams), exact absent a
+    # collision.
     d = _t(spark, sf_dir, "documents")
-    return tx.bigram_logprob_scores(d, hashed=False)
+    return tx.bigram_logprob_scores(d)
 
 
 @_register(

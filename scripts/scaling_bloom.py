@@ -10,8 +10,6 @@ join is a genuine shuffle join (the 100 TB big-dim shape):
                    saturation failure mode (kn/m >> 1 at 10x: the
                    filter passes everything, prune is a silent no-op)
   - sj_bloom:      mask SIZED to the keys (~16 bits/key, pow2), md5
-  - sj_bloom_xx:   same sized mask, xxhash64 double-hash probe (the
-                   JVM-native production path, no hex digest slicing)
   - bcast_bloom:   the graded broadcast form, for reference
 
 Orders grow by replication with custkeys offset per replica (cardinality
@@ -35,7 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from opensea_datapipeline_spark.operators import sketches as sk  # noqa: E402
 from opensea_datapipeline_spark.session import get_spark  # noqa: E402
 from opensea_datapipeline_spark.sources.readers import load_table  # noqa: E402
-from scaling_hashed_grams import measure  # noqa: E402
+from scaling_measure import measure  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 M_BITS = 8192
@@ -109,24 +107,12 @@ def main() -> None:
             m_bits=m_sized,
         )
         t2 = time.time()
-        mask_xx = sk.bloom_mask_literal(
-            sk.bloom_bits(
-                seg, "c_custkey", m_bits=m_sized, k_hashes=4,
-                hash_fn="xxhash64",
-            ),
-            m_bits=m_sized,
-        )
-        t3 = time.time()
         probes = {
             "sj_bloom_sat": sk.bloom_might_contain(
                 mask_sat, F.col("o_custkey"), m_bits=M_BITS, k_hashes=4
             ),
             "sj_bloom": sk.bloom_might_contain(
                 mask_md5, F.col("o_custkey"), m_bits=m_sized, k_hashes=4
-            ),
-            "sj_bloom_xx": sk.bloom_might_contain(
-                mask_xx, F.col("o_custkey"), m_bits=m_sized,
-                k_hashes=4, hash_fn="xxhash64",
             ),
         }
         row = {
@@ -137,7 +123,6 @@ def main() -> None:
             "mask_build_s": {
                 "sat_8192": round(t1 - t0, 3),
                 "md5_sized": round(t2 - t1, 3),
-                "xx_sized": round(t3 - t2, 3),
             },
             "ops": [],
         }
@@ -166,7 +151,7 @@ def main() -> None:
             measure(
                 spark,
                 lambda: agg(
-                    o.filter(probes["sj_bloom_xx"]).join(
+                    o.filter(probes["sj_bloom"]).join(
                         F.broadcast(seg), o.o_custkey == seg.c_custkey
                     )
                 ),

@@ -45,7 +45,7 @@ from opensea_datapipeline_spark.operators.text import (  # noqa: E402
 )
 from opensea_datapipeline_spark.session import get_spark  # noqa: E402
 from opensea_datapipeline_spark.sources.readers import load_table  # noqa: E402
-from scaling_hashed_grams import shuffle_bytes_snapshot  # noqa: E402
+from scaling_measure import shuffle_bytes_snapshot  # noqa: E402
 from scaling_llm_paths import REP_OFFSET, scaled_docs  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

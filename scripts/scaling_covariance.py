@@ -26,7 +26,7 @@ from opensea_datapipeline_spark.operators.decompose import (  # noqa: E402
 )
 from opensea_datapipeline_spark.session import get_spark  # noqa: E402
 from opensea_datapipeline_spark.sources.readers import load_table  # noqa: E402
-from scaling_hashed_grams import measure  # noqa: E402
+from scaling_measure import measure  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DIM = 64

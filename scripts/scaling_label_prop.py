@@ -26,7 +26,7 @@ from opensea_datapipeline_spark.operators.graph import (  # noqa: E402
     label_propagation,
 )
 from opensea_datapipeline_spark.session import get_spark  # noqa: E402
-from scaling_hashed_grams import measure  # noqa: E402
+from scaling_measure import measure  # noqa: E402
 
 BASE_NODES = 100_000
 

@@ -24,7 +24,7 @@ from opensea_datapipeline_spark.operators.sketches import (  # noqa: E402
     kmv_distinct,
 )
 from opensea_datapipeline_spark.session import get_spark  # noqa: E402
-from scaling_hashed_grams import measure  # noqa: E402
+from scaling_measure import measure  # noqa: E402
 import scaling_events_growth as eg  # noqa: E402
 
 

@@ -426,22 +426,6 @@ def test_repetition_flags_boilerplate(spark):
     assert rows[2] < 0.2      # natural text has no dominant trigram
 
 
-def test_knn_normalized_fast_path_same_ranks(spark, sf_dir):
-    # assume_normalized=True (dot == cosine on unit vectors) must produce
-    # the same neighbor ranking as the full cosine path.
-    from opensea_datapipeline_spark.functions.vector import l2_normalize
-    from opensea_datapipeline_spark.operators.similarity import knn_topk_exact
-    from opensea_datapipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
-    unit = emb.select("vec_id", l2_normalize("embedding").alias("embedding"))
-    full = {(r.query_id, r.rank): r.neighbor_id
-            for r in knn_topk_exact(emb, k=5).collect()}
-    fast = {(r.query_id, r.rank): r.neighbor_id
-            for r in knn_topk_exact(unit, k=5, assume_normalized=True).collect()}
-    assert full == fast
-
-
 def test_clean_nft_events_reference_semantics(spark):
     # The reference-schema cleaner: every semantic corner from
     # SURVEY.md §7.3 on literal rows.
@@ -1006,33 +990,6 @@ def test_ewma_long_horizon_no_overflow(spark, tmp_path):
         assert abs(got - want.loc[day]) < 1e-6, (day, got, want.loc[day])
 
 
-def test_hashed_gram_variants_match(spark, sf_dir):
-    # The xxhash64-keyed scale variants must produce IDENTICAL rounded
-    # results to the string-keyed graded forms on a collision-free
-    # corpus (sf0.001 vocab is ~thousands of words; 64-bit collision
-    # odds ~1e-12): counts, smoothing, and averages are invariant under
-    # any injective recoding of the gram/word key. This is the
-    # structural grade for the hashed paths (VERDICT r8 #6 / r9 #4);
-    # the shuffle-byte measurement lives in SCALING.md §r10.
-    from opensea_datapipeline_spark.operators.text import (
-        bigram_logprob_scores,
-        dup_ngram_fraction,
-    )
-    from opensea_datapipeline_spark.sources.readers import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(dup_ngram_fraction(d, n=8, hashed=True)) == rows(
-        dup_ngram_fraction(d, n=8, hashed=False)
-    )
-    assert rows(bigram_logprob_scores(d, hashed=True)) == rows(
-        bigram_logprob_scores(d, hashed=False)
-    )
-
-
 def test_nb_classifier_separates_planted_vocab(spark):
     # On a separable corpus (disjoint class vocabularies) the in-plan
     # naive-Bayes classifier must recover every label with the correct
@@ -1398,26 +1355,6 @@ def test_pagerank_matches_pure_python_power_iteration(spark):
     assert got[3] == got[4]
 
 
-def test_duplicate_spans_hashed_matches(spark, sf_dir):
-    # The xxhash64-gram scale variant must produce IDENTICAL spans to
-    # the string-keyed graded form on a collision-free corpus — span
-    # geometry is invariant under any injective recoding of grams
-    # (same structural grade as test_hashed_gram_variants_match).
-    from opensea_datapipeline_spark.operators.text import (
-        duplicate_token_spans,
-    )
-    from opensea_datapipeline_spark.sources.readers import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(duplicate_token_spans(d, n=8, hashed=True)) == rows(
-        duplicate_token_spans(d, n=8, hashed=False)
-    )
-
-
 def test_duplicate_spans_island_merge(spark):
     # Hand-built corpus with a KNOWN span layout: two docs share two
     # overlapping 3-grams (one merged 4-token span) plus one isolated
@@ -1646,30 +1583,6 @@ def test_streaming_kmv_lost_meta_recovers_history(spark, tmp_path):
         ), ckpt
 
 
-def test_dup_hits_strategies_match(spark, sf_dir):
-    # The "join" skew path (groupBy-collapsed dup-gram set + filtered
-    # join) must produce IDENTICAL spans and cut corpora to the graded
-    # "window" form, hashed or not.
-    from opensea_datapipeline_spark.operators.text import (
-        duplicate_token_spans,
-        span_cut_corpus,
-    )
-    from opensea_datapipeline_spark.sources.readers import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    for hashed in (False, True):
-        assert rows(
-            duplicate_token_spans(d, n=8, hashed=hashed, strategy="join")
-        ) == rows(duplicate_token_spans(d, n=8, hashed=hashed))
-    assert rows(span_cut_corpus(d, n=8, strategy="join")) == rows(
-        span_cut_corpus(d, n=8)
-    )
-
-
 def test_bloom_zero_false_negatives_and_fp_band(spark):
     # Bloom's one-sided guarantee (the pruned-join contract): EVERY
     # member probes True — zero false negatives — while non-members
@@ -1731,42 +1644,6 @@ def test_bloom_mask_signed_long_roundtrip(spark):
         i for i in range(128) if (words[i >> 6] >> (i & 63)) & 1
     }
     assert got == {0, 63, 64, 127}
-
-
-def test_bloom_xxhash_variant_zero_false_negatives(spark):
-    # The JVM-native double-hash probe path (hash_fn="xxhash64") keeps
-    # the one-sided guarantee: build and probe share the hash, so every
-    # member still probes True; FP band as the md5 form.
-    from pyspark.sql import functions as F
-
-    from opensea_datapipeline_spark.operators import sketches as sk
-
-    members = spark.range(300).select(
-        F.concat(F.lit("m"), F.col("id").cast("string")).alias("k")
-    )
-    kw = dict(m_bits=4096, k_hashes=4, hash_fn="xxhash64")
-    mask = sk.bloom_mask_literal(
-        sk.bloom_bits(members, "k", **kw), m_bits=4096
-    )
-    assert (
-        members.select(
-            sk.bloom_might_contain(mask, F.col("k"), **kw).alias("hit")
-        )
-        .filter(~F.col("hit"))
-        .count()
-        == 0
-    )
-    others = spark.range(3000).select(
-        F.concat(F.lit("x"), F.col("id").cast("string")).alias("k")
-    )
-    fp = (
-        others.select(
-            sk.bloom_might_contain(mask, F.col("k"), **kw).alias("hit")
-        )
-        .filter(F.col("hit"))
-        .count()
-    )
-    assert fp / 3000 < 0.025
 
 
 def test_covariance_matrix_matches_numpy(spark):

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -1301,6 +1302,34 @@ def test_duplicate_spans_plan(spark, sf_dir):
             "windowspecdefinition(doc_id" in line
         ), line
     assert "Exchange SinglePartition" not in plan
+
+
+@pytest.mark.parametrize(
+    "name,keys",
+    [
+        ("repetition_scores", ("_g",)),
+        ("contamination_flags", ("_g",)),
+        ("dup_ngram_fraction", ("_g",)),
+        ("bigram_logprob_scores", ("w1", "_g")),
+        ("duplicate_token_spans", ("_g",)),
+        ("span_cut_corpus", ("_g",)),
+    ],
+)
+def test_gram_key_is_xxhash64_before_exchange(spark, sf_dir, name, keys):
+    # Every word-gram operator shuffles (or broadcast-joins) on the one
+    # 8-byte xxhash64 gram key of text._grams, never on the gram or word
+    # string: each key is a bigint attribute (the plan's `#id L`) built by
+    # xxhash64, and an Exchange or hash join is keyed on it.
+    plan = _plan(QUERIES[name](spark, sf_dir))
+    for key in keys:
+        attrs = set(re.findall(rf"xxhash64\(.*?\) AS ({key}#\d+L)\b", plan))
+        assert attrs, f"{key} is not an xxhash64 bigint in\n{plan}"
+        keyed = [
+            line for line in plan.splitlines()
+            if ("Exchange hashpartitioning(" in line or "HashJoin [" in line)
+            and any(re.search(rf"{a}\b", line) for a in attrs)
+        ]
+        assert keyed, f"no exchange keyed on {key} in\n{plan}"
 
 
 def test_kmv_candidate_pass_no_upstream_shuffle(spark, sf_dir):
